@@ -1,19 +1,23 @@
 #!/usr/bin/env python3
-"""Diff two graft.Bench per-run records (bench/last_run.json format).
+"""Diff two graft.Bench per-query records.
 
 Usage: python3 dev/diff_runs.py OLD.json NEW.json [--top N]
 
-Each file is the flat {"<sf>|<query>": seconds, "_calib": c, ...} map the
-Bench main writes every run. The comparison is HOST-NORMALIZED the same way
-run/floor comparisons are (BenchFloors.normalizedRatio): ratio =
-(new/new_calib) / (old/old_calib), so a uniformly slower window cancels out
-and a genuine per-query change stands alone. Prints the worst regressions
-and best improvements plus the median, and exits non-zero only on parse
-problems — the >1.5x rule stays a per-query signal for a human/judge, not a
-gate (see BASELINE.md "Floor calibration": contended windows flag broadly;
-check the median + flag breadth before believing any single flag).
+Each file is either an archived round record (bench/history/rNN.json, the
+flat {"<sf>|<query>": seconds, "_calib": c, ...} map) or the record a fresh
+run writes to target/bench.json ({"sf": dir, "calib": c, "queries":
+{query: seconds}, ...}), whose keys are read as "<last segment of sf>|<query>".
+The comparison is HOST-NORMALIZED by each run's calibration: ratio =
+(new / new_calib) / (old / old_calib), so a uniformly slower window cancels
+out and a genuine per-query change stands alone. Prints the worst
+regressions and best improvements plus the median, and exits non-zero only
+on parse problems — the >1.5x rule is a per-query signal for a reader, not
+a gate (contended windows flag broadly; check the median + flag breadth
+before believing any single flag). Regressions are judged by paired
+perfbench runs (python3 perfbench/run.py), not by this diff.
 """
 import json
+import os
 import statistics
 import sys
 
@@ -21,7 +25,12 @@ import sys
 def load(path):
     with open(path) as fh:
         d = json.load(fh)
-    calib = d.get("_calib")
+    if "queries" in d:
+        tag = os.path.basename(d["sf"].rstrip("/"))
+        calib = d.get("calib")
+        d = {f"{tag}|{k}": v for k, v in d["queries"].items()}
+    else:
+        calib = d.get("_calib")
     queries = {k: v for k, v in d.items() if not k.startswith("_") and v >= 0}
     if not queries:
         sys.exit(f"{path}: no per-query entries")
@@ -74,9 +83,9 @@ def main():
     flagged = [k for k, r in ratios.items() if r > 1.5]
     print(f"\nflagged >1.5x: {len(flagged)}", end="")
     print(" -> " + ", ".join(sorted(flagged)) if flagged else "")
-    # Same gate as normalized_ratios.py: breadth alone is not contention —
-    # contention also moves the MEDIAN (uniform inflation). Broad flags on a
-    # flat median are per-query regressions and must not be waved off.
+    # Breadth alone is not contention — contention also moves the MEDIAN
+    # (uniform inflation). Broad flags on a flat median are per-query
+    # regressions and must not be waved off.
     if len(flagged) > 0.1 * len(shared) and med > 1.25:
         print("ADVISORY: >10% of the suite moved together with an elevated "
               "median — pattern matches window contention, not per-query "

@@ -10,26 +10,17 @@ object Bench {
     // Deterministic order + one untimed warmup pass: the first execution of
     // each plan pays JIT + codegen compilation + parquet footer reads, which
     // at small sf dwarfs the query itself and lands on whichever query runs
-    // first. Then N timed passes, recording the per-query MINIMUM: this host
-    // is shared and a single contention window can inflate whichever queries
-    // happen to run inside it 10-40x (BENCH_r01 recorded adjacent 40 s and
-    // 27 s samples for sub-second plans); interleaving full rounds and taking
-    // the min per query measures steady-state throughput — what a
-    // long-running cluster actually sees — instead of one noise sample.
+    // first; memoized per-snapshot artifacts (LSH edge sets, signature
+    // stores, centroids) also build here. Then N timed passes, recording the
+    // per-query MINIMUM: this host is shared and a single contention window
+    // can inflate whichever queries happen to run inside it 10-40x (BENCH_r01
+    // recorded adjacent 40 s and 27 s samples for sub-second plans);
+    // interleaving full rounds and taking the min per query measures
+    // steady-state throughput — what a long-running cluster actually sees —
+    // instead of one noise sample.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // The warmup pass is TIMED per query into bench/artifacts.json (round
-    // 22, VERDICT r21 item 7): memoized per-snapshot artifacts (LSH edge
-    // sets, signature stores, centroids) build HERE, so consumers like
-    // q_dedup_components read cheaper in the min-of-N than a cold run —
-    // this records what that warm start hides. Warmup seconds = artifact
-    // build + first-plan codegen/JIT + footer reads (an upper bound on the
-    // artifact cost, labeled as such). The timed methodology below is
-    // unchanged: same warmup-then-min-of-N contract as every archived round.
-    val warmup: Seq[(String, Double)] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-      name -> t
+    ordered.foreach { case (_, fn) =>
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
     val samples: Seq[Seq[(String, Double)]] = (1 to rounds).map { _ =>
       ordered.map { case (name, fn) =>
@@ -60,13 +51,9 @@ object Bench {
     val failed = results.count(_._2 < 0)
     val slowest = results.map(_._2).foldLeft(0.0)(math.max)
     val total = okTotal + failed * math.max(2.0 * slowest, 30.0)
-    // Host calibration (BenchFloors.calibrate scaladoc): a fixed pure-JVM
-    // workload timed min-of-5, measured AFTER the queries so JIT/GC are at
-    // steady state. Travels with the run's JSON and with every floor this
-    // run seeds or lowers, so run/floor comparisons can be host-normalized
-    // mechanically (the round-11 ratchet died to an unnormalized ~1.7×
-    // host-speed change) — see BASELINE.md "Floor calibration".
-    val calib = BenchFloors.calibrate()
+    // Host calibration (see [[calibrate]]), measured AFTER the queries so
+    // JIT/GC are at steady state.
+    val calib = calibrate()
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calib":$calib,"queries":$qs,"sf":"$sfDir"}"""
     // Belt and braces for the driver's parser: the line goes to stdout (which
@@ -76,81 +63,6 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench.json"), json + "\n")
     catch { case _: Throwable => () }
-    // Cross-run FLOORS: totals on this shared host drift 33-49 s for
-    // identical binaries, so judging run-total vs run-total compares noise.
-    // bench/floors.json keeps the per-query minimum over every run,
-    // letting driver and judge compare floors-to-floors mechanically
-    // instead of re-deriving them from prose in BASELINE.md. Keys are
-    // "<sf>|<query>" so runs at different scale factors accumulate side by
-    // side — one smoke run at sf0.001 must never clobber the sf0.1 record.
-    // The merge starts FROM the prior floors: a query that fails (or is
-    // renamed away) in this run keeps its recorded floor; only a faster
-    // successful sample lowers one.
-    //
-    // The canonical file lives OUTSIDE target/ and is git-tracked: the
-    // accumulated floor history was wiped TWICE by target/ cleans at round
-    // restarts (both losses documented in BASELINE.md). The legacy
-    // target/bench_minima.json is mirror-WRITTEN for any consumer that
-    // knows the old path but — since round 9 — never read back: a stale
-    // legacy file produced by an older (possibly since-fixed) binary could
-    // permanently lower a floor for a query whose implementation changed,
-    // with no changed-query exclusion (the migration it existed for ran in
-    // round 8; dev/restore_floors.py with its explicit exclude list is the
-    // only recovery path now).
-    try {
-      val minimaPath = java.nio.file.Paths.get("bench/floors.json")
-      val calibPath = java.nio.file.Paths.get("bench/floor_calib.json")
-      java.nio.file.Files.createDirectories(minimaPath.getParent)
-      val legacyPath = java.nio.file.Paths.get("target/bench_minima.json")
-      def parseFlat(path: java.nio.file.Path): Map[String, Double] =
-        if (java.nio.file.Files.exists(path))
-          BenchFloors.parseFlatJson(java.nio.file.Files.readString(path), path.toString)
-        else Map.empty
-      val pendingPath = java.nio.file.Paths.get("bench/floor_pending.json")
-      val prior = parseFlat(minimaPath)
-      val priorCalib = parseFlat(calibPath)
-      val priorPending = parseFlat(pendingPath)
-      // last non-empty path segment: a trailing slash must not collapse the
-      // namespace to "" (which would merge every sf into one floor set)
-      val sfTag = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse("sf")
-      val (merged, mergedCalib, mergedPending) =
-        BenchFloors.merge(prior, priorCalib, priorPending, results, sfTag, calib)
-      val minimaJson = BenchFloors.renderFlatJson(merged)
-      java.nio.file.Files.writeString(minimaPath, minimaJson + "\n")
-      java.nio.file.Files.writeString(calibPath,
-        BenchFloors.renderFlatJson(mergedCalib) + "\n")
-      java.nio.file.Files.writeString(pendingPath,
-        BenchFloors.renderFlatJson(mergedPending) + "\n")
-      // Per-run per-query record: the driver's BENCH artifact preserves only
-      // the stdout TAIL (59 of 169 per-query times survived in BENCH_r14),
-      // so round-over-round regression diffs leaned on floors.json — which
-      // moves only on re-stamps. last_run.json is the full (key → seconds)
-      // map of THIS run plus its calibration, floors-compatible keys, so any
-      // two runs diff 169/169 mechanically. Overwritten per run; committed
-      // per round.
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench/last_run.json"),
-        BenchFloors.renderFlatJson(
-          results.map { case (k, v) => s"$sfTag|$k" -> v }.toMap +
-            ("_calib" -> calib) + ("_total" -> total) +
-            ("_failed" -> failed.toDouble)) + "\n")
-      // Warmup/artifact-build record (see the warmup comment above):
-      // separate file, same flat shape — the driver's timed contract and the
-      // main JSON line are untouched.
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench/artifacts.json"),
-        BenchFloors.renderFlatJson(
-          warmup.map { case (k, v) => s"$sfTag|$k" -> v }.toMap +
-            ("_calib" -> calib) +
-            ("_warmup_total" -> warmup.map(_._2).filter(_ >= 0).sum)) + "\n")
-      try { // mirror; canonical write above already succeeded
-        java.nio.file.Files.createDirectories(legacyPath.getParent)
-        java.nio.file.Files.writeString(legacyPath, minimaJson + "\n")
-      } catch { case _: Throwable => () }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] WARN: floors update failed (${e.getClass.getSimpleName}: ${e.getMessage}); floors NOT updated this run")
-    }
     spark.stop()
     // Emitted LAST, after Spark shutdown noise, so a tail-limited capture of
     // stdout always contains the totals: first the full per-query line, then
@@ -159,5 +71,44 @@ object Bench {
     // driver's parser falls back to.
     println(json)
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calib":$calib,"n_queries":${results.size},"sf":"$sfDir"}""")
+  }
+
+  /** Host calibration carried as `calib` in the bench line: min-of-`reps`
+    * seconds for a fixed pure-JVM workload (xorshift64* stream +
+    * Arrays.sort rounds — the integer-hash + sort mix the query engine
+    * itself is made of), so two runs can be compared in calibration units,
+    * `(t / calib)`, when the host's per-core speed differs between them.
+    * Single thread (the host drift observed was per-core speed),
+    * deterministic (no RNG seed drift, no allocation-size dependence on
+    * input), sized to run long enough that JIT + one GC cycle amortize
+    * inside the reps and the min is a stable per-core speed measure
+    * (~0.2-0.5 s/rep).
+    */
+  def calibrate(reps: Int = 5): Double = {
+    var best = Double.MaxValue
+    var sink = 0L
+    var rep = 0
+    while (rep < reps) {
+      val t0 = System.nanoTime()
+      var x = 0x9e3779b97f4a7c15L
+      val arr = new Array[Long](1 << 16)
+      var round = 0
+      while (round < 48) {
+        var i = 0
+        while (i < arr.length) {
+          x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
+          arr(i) = x * 0x2545f4914f6cdd1dL
+          i += 1
+        }
+        java.util.Arrays.sort(arr)
+        sink ^= arr(round)
+        round += 1
+      }
+      best = math.min(best, (System.nanoTime() - t0) / 1e9)
+      rep += 1
+    }
+    // keep `sink` observably live so the loop cannot be optimized away
+    if (sink == 0x5ca1ab1eL) System.err.println("[bench] calib sink collision")
+    best
   }
 }

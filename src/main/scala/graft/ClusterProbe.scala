@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   * the executor command through the launcher library, whose Scala-version
   * probe otherwise dies with "Cannot find any build directories" when
   * SPARK_HOME is a bare dist without launcher/target. Results are
-  * recorded in BASELINE.md ("local-cluster reliable-mode validation").
+  * recorded in BASELINE.md ("Current numbers").
   */
 object ClusterProbe {
   private def labels(s: SparkSession, sfDir: String): Map[Long, Long] =

@@ -39,7 +39,7 @@ import graft.streaming.StreamingDaemon
   * Not part of `sbt test` (one SparkContext per JVM): run per round via
   * `SPARK_SCALA_VERSION=2.13 sbt "runMain graft.StreamClusterProbe"`
   * (~3-5 min at sf0.001). Results recorded in BASELINE.md
-  * ("local-cluster streaming-daemon validation").
+  * ("Current numbers").
   */
 object StreamClusterProbe {
 

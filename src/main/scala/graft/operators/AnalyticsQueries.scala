@@ -287,8 +287,10 @@ object AnalyticsQueries extends QueryPack {
       // from it. Both branches compute identical rows (min/max day and
       // distinct event_type over the rollup ≡ over the raw rows;
       // GapfillScaleSpec pins equality and exercises the big branch).
-      val threshold = s.conf.get(
-        "spark.graft.gapfill.scanBytesThreshold", (4L << 30).toString).toLong
+      val key = "spark.graft.gapfill.scanBytesThreshold"
+      val raw = s.conf.get(key, (4L << 30).toString)
+      val threshold = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a whole number of bytes, got '$raw'"))
       val daily0 = e.groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("tot"))
       val (daily, boundsSrc) =

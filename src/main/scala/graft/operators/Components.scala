@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.sources.Memo.PinOps
 
@@ -92,16 +95,33 @@ object Components {
     * unchanged and ObservedDigestSpec pins it against [[edgeDigest]]).
     */
   private[graft] def pinWithDigest(d: DataFrame): (DataFrame, (Long, Long, Long)) = {
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val pinned = graft.sources.Memo.pin(d.observe(obs,
       count(lit(1)).as("n"),
       bit_xor(xxhash64(col("u"), col("v"))).as("h1"),
       bit_xor(hash(col("u"), col("v")).cast("long")).as("h2")))
-    // pin() is eager, so the action has completed; get() returns without
-    // waiting. bit_xor over zero rows is null → 0L, matching edgeDigest.
-    val m = obs.get
-    def l(k: String) = m.get(k) match { case Some(x: Long) => x; case _ => 0L }
-    (pinned, (l("n"), l("h1"), l("h2")))
+    (pinned, awaitDigest(obs))
+  }
+
+  /** How long [[awaitDigest]] waits for a checkpoint's observed metrics.
+    * pin() is eager, so they normally arrive with the action; the bound
+    * turns a lost delivery into an error instead of a hang.
+    */
+  private[graft] val ObservedDigestWait: FiniteDuration = 60.seconds
+
+  /** The (n, h1, h2) digest `obs` observed on a contraction checkpoint.
+    * bit_xor over zero rows is null → 0L, matching edgeDigest. Throws
+    * IllegalStateException naming the metrics if they do not arrive
+    * within `bound`.
+    */
+  private[graft] def awaitDigest(obs: Observation,
+      bound: FiniteDuration = ObservedDigestWait): (Long, Long, Long) = {
+    val row = try Await.result(obs.future, bound) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"observed metrics n, h1, h2 of the contraction checkpoint did not arrive within $bound")
+    }
+    def l(k: String) = row.getAs[Any](k) match { case x: Long => x; case _ => 0L }
+    (l("n"), l("h1"), l("h2"))
   }
 
   /** Contract `edges` (any orientation; self-loops ignored) to per-vertex

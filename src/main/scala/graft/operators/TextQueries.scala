@@ -61,7 +61,7 @@ object TextQueries extends QueryPack {
     * endpoints, so unmemoized each consumer re-tokenized the whole corpus
     * twice per run (no common-subplan reuse across a join's two sides) —
     * at 100 TB two extra corpus scans per report. Same artifact pattern as
-    * [[docGrams10]]; the build cost is visible in bench/artifacts.json.
+    * [[docGrams10]].
     */
   private val shingleSetCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
   private def docShingleSets(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -230,40 +230,18 @@ object TextQueries extends QueryPack {
   /** Mark every bucket row with its bucket's representative (`mn` =
     * min(mnExpr)) and size (`sz`) — the shared pre-pass of all four
     * bounded-state expansions (bandPairsOf, starEdgesOf,
-    * bandedHammingPairs, q_dedup_prefix). Two spellings compute identical
-    * rows (MarkBucketsSpec pins it):
-    *   · `window` (default): min/count over Window.partitionBy(part) —
-    *     ONE exchange on the bucket key; a degenerate bucket is one
-    *     task's spillable sort.
-    *   · `groupjoin` (-Dgraft.markBuckets=groupjoin): groupBy(part)
-    *     .agg(min, count) + join back — map-side partial aggregation
-    *     collapses each bucket to one row BEFORE the shuffle, then a
-    *     second exchange joins the tiny bucket table back to the members.
-    * Kept switchable (read per plan construction, dev/test only) so the
-    * hot-bucket soak can A/B them in one JVM (DevProbe `bucketmark`);
-    * BASELINE.md records the round-11 numbers behind the default.
-    * Unused marks are column-pruned, so min-only consumers (starEdgesOf)
-    * pay nothing for the uniform helper.
-    *
-    * PRECONDITION: the `part` key columns must be non-null (true for every
-    * current consumer — band indices and bkey strings are built from
-    * non-null signatures). The spellings diverge on NULL keys: the window
-    * partitions NULLs into one bucket, while the groupjoin's inner join
-    * drops NULL-keyed rows (null ≠ null under EqualTo) — a nullable key
-    * would silently break the identical-rows contract MarkBucketsSpec pins.
+    * bandedHammingPairs, q_dedup_prefix): min/count over
+    * Window.partitionBy(part) — ONE exchange on the bucket key; a
+    * degenerate bucket is one task's spillable sort. Unused marks are
+    * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
+    * the uniform helper.
     */
   private[graft] def markBuckets(df: org.apache.spark.sql.DataFrame,
-      part: Seq[String], mnExpr: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-    if (sys.props.get("graft.markBuckets").contains("groupjoin"))
-      df.join(
-        df.groupBy(part.map(col): _*)
-          .agg(min(mnExpr).as("mn"), count(lit(1)).as("sz")),
-        part)
-    else {
-      val w = Window.partitionBy(part.map(col): _*)
-      df.withColumn("mn", min(mnExpr).over(w))
-        .withColumn("sz", count(lit(1)).over(w))
-    }
+      part: Seq[String], mnExpr: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(part.map(col): _*)
+    df.withColumn("mn", min(mnExpr).over(w))
+      .withColumn("sz", count(lit(1)).over(w))
+  }
 
   private def starEdgesOf(buckets: org.apache.spark.sql.DataFrame) =
     markBuckets(buckets, Seq("band", "bkey"), col("doc_id"))

@@ -24,4 +24,13 @@ class GapfillScaleSpec extends AnyFunSuite with SparkSpec {
       assert(small.nonEmpty)
     } finally spark.conf.unset(key)
   }
+
+  test("a malformed threshold names its key and value") {
+    spark.conf.set(key, "4GiB")
+    try {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries("q_time_gapfill")(spark, sfDir))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("4GiB"), e.getMessage)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -3,20 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bucket-marking pre-pass (TextQueries.markBuckets) has two spellings
-  * — window aggregate (default) and groupBy+join-back (the
-  * `-Dgraft.markBuckets=groupjoin` A/B arm, DevProbe `bucketmark`). They
-  * must produce identical ROWS on every consumer, or the A/B compares two
-  * different queries. Pinned end-to-end on a fixture with both small and
-  * over-cap buckets so the clique phase, the star phase, and the size
-  * boundary all execute under both spellings.
+/** The bucket-marking pre-pass (TextQueries.markBuckets) on a fixture
+  * with both small and over-cap buckets, so the clique phase, the star
+  * phase and the size boundary all execute.
   */
 class MarkBucketsSpec extends AnyFunSuite with SparkSpec {
-
-  private def withVariant[A](v: String)(body: => A): A = {
-    sys.props("graft.markBuckets") = v
-    try body finally sys.props.remove("graft.markBuckets")
-  }
 
   private lazy val dir: String = {
     import spark.implicits._
@@ -34,23 +25,6 @@ class MarkBucketsSpec extends AnyFunSuite with SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
-  }
-
-  // The three consumers that rebuild their marking per call (the memoized
-  // star/candidate caches would serve variant A's result to variant B).
-  private val consumers = Seq("q_dedup_minhash", "q_dedup_prefix", "q_dedup_simhash_pairs")
-
-  test("groupjoin marking emits exactly the window marking's rows on every consumer") {
-    for (q <- consumers) {
-      val viaWindow = withVariant("window") {
-        SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
-      }
-      val viaGroupJoin = withVariant("groupjoin") {
-        SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
-      }
-      assert(viaWindow.nonEmpty, s"$q: empty result defeats the comparison")
-      assert(viaWindow == viaGroupJoin, s"$q: spellings disagree")
-    }
   }
 
   test("the fixture actually exercises the over-cap star phase") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.concurrent.duration._
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Components
@@ -11,7 +13,8 @@ import graft.operators.Components
   * input (bit_xor over zero rows is null → 0L) — while the pinned rows stay
   * identical to the input. If a Spark upgrade ever stops delivering observed
   * metrics for the localCheckpoint action, this spec fails loudly instead of
-  * the contraction loop hanging or mis-converging.
+  * the contraction loop mis-converging, and the loop itself waits a bounded
+  * time before failing with the names of the missing metrics.
   */
 class ObservedDigestSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -42,5 +45,16 @@ class ObservedDigestSpec extends AnyFunSuite with SparkSpec {
     val a = Seq((3L, 1L), (4L, 2L)).toDF("u", "v")
     val b = Seq((4L, 1L), (3L, 2L)).toDF("u", "v")
     assert(Components.pinWithDigest(a)._2 !== Components.pinWithDigest(b)._2)
+  }
+
+  test("a digest that never arrives fails within the bound and names the metrics") {
+    val bound = 500.millis
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Components.awaitDigest(Observation(), bound))
+    val waited = (System.nanoTime() - t0).nanos
+    assert(waited >= bound && waited < bound * 20, s"waited $waited")
+    for (m <- Seq("n, h1, h2", "contraction checkpoint"))
+      assert(e.getMessage.contains(m), e.getMessage)
   }
 }
