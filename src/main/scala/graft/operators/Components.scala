@@ -5,15 +5,29 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import graft.sources.Memo.PinOps
+import org.apache.spark.sql.types._
 
-/** Distributed connected components by alternating large-star / small-star
+/** Connected components of an edge list, on the driver when the graph is
+  * small and by distributed star contraction when it is not.
+  *
+  * [[Components.labels]] first collects at most `DriverMaxEdges + 1`
+  * normalized edges in one bounded aggregate (one Spark job, two when the
+  * limit needs an exchange). When the graph has at most
+  * [[Components.DriverMaxEdges]] edges it runs union-find on the driver,
+  * which takes no further job, and returns the labels as a local
+  * DataFrame. Above the constant it hands the edges to
+  * [[Components.contract]]. The cost of a round-based algorithm is rounds
+  * times per-round latency; a graph that fits one machine is cheapest in
+  * one round, and the O(log n) rounds of star contraction only pay once it
+  * does not fit (on the dedup fixtures' few hundred edges it takes 4
+  * rounds and about 30 jobs).
+  *
+  * [[Components.contract]] is alternating large-star / small-star
   * contraction (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC 2014) — the 100 TB replacement for plain min-label
-  * propagation: propagation needs O(component diameter) rounds and keeps the
-  * full edge set live every round, while star contraction converges in
-  * O(log n) rounds and shrinks the edge set toward one star per component
-  * (rooted at the component minimum) as it goes.
+  * Beyond", SoCC 2014): unlike min-label propagation, which needs
+  * O(component diameter) rounds and keeps the full edge set live every
+  * round, it converges in O(log n) rounds and shrinks the edge set toward
+  * one star per component (rooted at the component minimum) as it goes.
   *
   * Edge representation: (u, v) with u > v, deduped, no self-loops — both
   * operations preserve that canonical orientation, so no re-normalization
@@ -124,34 +138,100 @@ object Components {
     (l("n"), l("h1"), l("h2"))
   }
 
-  /** Contract `edges` (any orientation; self-loops ignored) to per-vertex
-    * component labels (v, lbl) where lbl = the component's minimum vertex
-    * id. Throws if `maxIter` alternating rounds do not reach the fixpoint.
-    *
-    * `canonical = true` asserts the CALLER's edges are already in the loop's
-    * canonical form — u > v strictly (so no self-loops) and distinct — and
-    * already materialized (pinned/memoized), so the normalization pass (one
-    * full-edge-set exchange for the distinct + a checkpoint job) is skipped
-    * and only the initial digest job runs (round 22, guide §2.4: the
-    * memoized star-edge inputs of the clustering family are
-    * construction-canonical — bucket-min star edges are strictly ordered and
-    * deduped by their memo — so every timed run paid that exchange for
-    * nothing). Callers own the contract; the oracle gate and ComponentsSpec
-    * pin the results.
+  /** Largest graph [[labels]] contracts on the driver. The bounded collect
+    * returns the edges as one row holding an array of two 8-byte ids per
+    * edge (16 B), decoded into an `Array[Long]` of the same size: 2^20
+    * edges × 32 B = 32 MB of driver heap, well under 64 MB. Union-find
+    * and the returned local rows then add 16 B per edge (the sorted id
+    * copy) and 40 B per vertex (ids, parents, roots, labels, and the row
+    * data), at most two vertices per edge.
     */
-  def labels(edges: DataFrame, maxIter: Int = 25, canonical: Boolean = false): DataFrame = {
+  val DriverMaxEdges: Int = 1 << 20
+
+  /** Per-vertex component labels (v, lbl) of `edges` (columns u, v; any
+    * orientation, duplicates allowed; self-loops and edges with a null
+    * endpoint ignored), where lbl = the component's minimum vertex id.
+    * Both id columns are of the type of `greatest(u, v)`.
+    *
+    * One bounded aggregate collects at most `DriverMaxEdges + 1`
+    * normalized edges. With at most [[DriverMaxEdges]] of them the labels
+    * come from union-find on the driver, as a local DataFrame; otherwise
+    * (or when the ids are not integral) from [[contract]], which throws if
+    * `maxIter` rounds do not reach the fixpoint.
+    */
+  def labels(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+    val norm = normalized(edges)
+    val idType = norm.schema("u").dataType
+    val s = edges.sparkSession
+    import s.implicits._
+    val small = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        // u0, v0, u1, v1, ...: collect_list keeps each pair's two ids together.
+        Some(norm.limit(DriverMaxEdges + 1)
+          .agg(flatten(collect_list(array(col("u").cast(LongType), col("v").cast(LongType)))))
+          .as[Array[Long]].head())
+          .filter(_.length <= 2 * DriverMaxEdges)
+      case _ => None
+    }
+    small.map { flat =>
+      System.err.println(s"[components] driver: ${flat.length / 2} edges")
+      val (ids, root) = unionFind(flat)
+      Seq((ids, root.map(ids(_)))).toDF("v", "lbl")
+        .select(explode(arrays_zip(col("v"), col("lbl"))).as("e"))
+        .select(col("e.v").cast(idType).as("v"), col("e.lbl").cast(idType).as("lbl"))
+        // Nullable like the star path's output, whose labels come out of a min().
+        .to(StructType(Seq(StructField("v", idType), StructField("lbl", idType))))
+    }.getOrElse(contract(edges, maxIter))
+  }
+
+  /** `edges` as (greatest, least) pairs without self-loops. greatest/least
+    * skip a null operand, so an edge with one null endpoint becomes a
+    * self-loop and drops out with them.
+    */
+  private def normalized(edges: DataFrame): DataFrame =
+    edges
+      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v"))
+
+  /** Union-find over the edges (flat(2i), flat(2i + 1)): the sorted
+    * distinct vertex ids and, per id, the index of its component's root.
+    * Ids are indexed in sorted order and a union hangs the larger root
+    * under the smaller, so every root is its component's minimum.
+    */
+  private def unionFind(flat: Array[Long]): (Array[Long], Array[Int]) = {
+    val all = flat.clone()
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.indices.foreach { i => if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 } }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    (0 until flat.length by 2).foreach { i =>
+      val (ru, rv) = (find(java.util.Arrays.binarySearch(ids, flat(i))),
+        find(java.util.Arrays.binarySearch(ids, flat(i + 1))))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    (ids, Array.tabulate(n)(find))
+  }
+
+  /** [[labels]] by star contraction, for graphs above [[DriverMaxEdges]].
+    * Throws if `maxIter` alternating rounds do not reach the fixpoint.
+    */
+  private[graft] def contract(edges: DataFrame, maxIter: Int): DataFrame = {
     // AQE stays ON for the in-loop jobs — measured both ways at sf0.1:
     // AQE's partition coalescing collapses each tiny-graph exchange to a
     // handful of tasks, which beats its per-stage planning latency by a
     // wide margin (disabling it regressed 4 s → 17 s at local[32], where
     // every non-coalesced stage ran 32 near-empty tasks).
     // Round 22: pin + digest share one job per round (see [[pinWithDigest]]).
-    var (e, chk) =
-      if (canonical) (edges, edgeDigest(edges))
-      else pinWithDigest(edges
-        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct())
+    var (e, chk) = pinWithDigest(normalized(edges).distinct())
+    val n = chk._1
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -166,9 +246,8 @@ object Components {
         s"star contraction did not converge in $maxIter rounds " +
           s"(checksum $chk) — raise maxIter; returning partial labels " +
           "would silently diverge from the exact transitive closure")
-    // Visible convergence telemetry (one line per contraction, stderr): the
-    // round count is the quantity the O(log n) claim is about.
-    System.err.println(s"[components] converged in $iter rounds, ${chk._1} star edges")
+    // The round count is the quantity the O(log n) claim is about.
+    System.err.println(s"[components] star: $n edges, $iter rounds")
     // Fixpoint is a star forest rooted at each component's min: children
     // label themselves with their root, roots label themselves.
     e.select(col("u").as("v"), col("v").as("lbl"))

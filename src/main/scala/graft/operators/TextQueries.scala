@@ -542,7 +542,7 @@ object TextQueries extends QueryPack {
     simhashSigsN(s, d, 16, "simhash")
 
   /** Converged near-dup cluster labels (doc_id, cluster_id = component min)
-    * over the LSH candidate graph — star contraction via [[Components]].
+    * over the LSH candidate graph, via [[Components]].
     * Shared by q_dedup_components (emits the labels) and q_dedup_keep
     * (materializes the surviving corpus). Docs with no candidate pair are
     * absent (they are their own trivial cluster; callers coalesce).
@@ -551,13 +551,8 @@ object TextQueries extends QueryPack {
     // connectivity-only consumer → star edges (identical components to the
     // clique expansion over the same buckets, linearly fewer edges, and —
     // round 9 — over-cap buckets recovered instead of dropped).
-    // canonical = true (round 22): star edges are construction-canonical —
-    // doc_a = bucket min < doc_b strictly, deduped and pinned by the memo —
-    // so (doc_b, doc_a) is the loop's (u > v) form and the normalization
-    // exchange + checkpoint are skipped.
     Components.labels(
-      starEdges(s, d).select(col("doc_b").as("u"), col("doc_a").as("v")),
-      canonical = true)
+      starEdges(s, d).select(col("doc_b").as("u"), col("doc_a").as("v")))
       .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
 
   /** [[dedupClusters]] memoized per (context, source fingerprint), for consumers that build
@@ -701,7 +696,7 @@ object TextQueries extends QueryPack {
     }
 
   /** Corpus-only cluster labels (doc_id, cluster_id) — "yesterday's" label
-    * store the incremental fold starts from: star contraction over the
+    * store the incremental fold starts from: [[Components]] over the
     * corpus split's own candidate edges. Memoized: in production this is
     * the persisted output of the previous nightly clustering.
     */
@@ -1247,11 +1242,11 @@ object TextQueries extends QueryPack {
     // X2f: duplicate CLUSTERS — connected components over the MinHash
     // candidate graph, the pass that turns pairwise near-dup hits into
     // keep/drop groups (cluster_id = min doc_id of the component, the
-    // canonical keeper). Alternating large-star/small-star contraction
-    // ([[Components]]): O(log n) rounds vs O(diameter) for the round-2
-    // min-label propagation, convergence folded into a per-round checksum
-    // aggregate (no diff join), and a THROW — not silent partial labels —
-    // if the iteration cap is ever hit.
+    // canonical keeper). [[Components]]: union-find on the driver for a
+    // graph of at most DriverMaxEdges edges (one bounded collect), alternating
+    // large-star/small-star contraction above it — O(log n) rounds, a
+    // per-round checksum, and a THROW, not silent partial labels, if the
+    // iteration cap is ever hit.
     "q_dedup_components" -> ((s, d) =>
       dedupClusters(s, d).orderBy(col("doc_id"))),
 

@@ -754,18 +754,12 @@ object VectorQueries extends QueryPack {
     // of surface text. Edges are the memoized LSH candidate pairs filtered
     // on rounded cosine ≥ 0.4 (the synthetic fixture's similarity ceiling
     // is ~0.47; a real embedding corpus uses ~0.95), clustered by the same
-    // large-star/small-star contraction as the text-side dedup. Oracle is
+    // [[Components]] as the text-side dedup. Oracle is
     // the exact recursive transitive closure.
     "q_dedup_semantic" -> ((s, d) => {
-      // canonical = true (round 22): embedPairs is distinct with
-      // vec_a < vec_b strictly and pinned by its memo; the threshold filter
-      // preserves all three properties, so (vec_b, vec_a) is the contraction
-      // loop's canonical (u > v) form and the normalization exchange +
-      // checkpoint are skipped.
       Components.labels(
         embedPairs(s, d).filter(col("cos_r") >= 0.4)
-          .select(col("vec_b").as("u"), col("vec_a").as("v")),
-        canonical = true)
+          .select(col("vec_b").as("u"), col("vec_a").as("v")))
         .select(col("v").as("vec_id"), col("lbl").as("cluster_id"))
         .orderBy(col("vec_id"))
     }),
