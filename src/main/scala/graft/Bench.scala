@@ -4,7 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
+    val rounds = parseRounds(sys.env.get("SPARK_GRAFT_BENCH_ROUNDS"))
     val spark = Sessions.tuned(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Deterministic order + one untimed warmup pass: the first execution of
@@ -71,6 +71,15 @@ object Bench {
     // driver's parser falls back to.
     println(json)
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calib":$calib,"n_queries":${results.size},"sf":"$sfDir"}""")
+  }
+
+  /** Timed passes from `SPARK_GRAFT_BENCH_ROUNDS` (unset: 3). Anything but
+    * a positive whole number throws, naming the variable and its value.
+    */
+  private[graft] def parseRounds(raw: Option[String]): Int = raw match {
+    case None => 3
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BENCH_ROUNDS must be a positive whole number, got '$v'"))
   }
 
   /** Host calibration carried as `calib` in the bench line: min-of-`reps`

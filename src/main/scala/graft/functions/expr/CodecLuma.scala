@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
 /** Binary → binary decode of a compressed-codec payload (JPEG / GIF / TIFF,
   * [[graft.multimodal.ImageIoDecode.lumaOrNull]]) to its luminance plane,
   * NULL when the magic-byte gate or the JDK codec rejects it — the
-  * compressed sibling of [[PpmLuma]], completing the
-  * `coalesce(codec_luma(p), ppm_luma(p), p)` decode ladder over a mixed
-  * media table. Stays inside whole-stage codegen via one static call; the
+  * compressed-codec arm of the decode ladder over a mixed media table
+  * (the bit-exact arm is [[graft.multimodal.PpmDecode.lumaOrNull]]; the
+  * whole ladder in one expression is [[DecodeProbe]]). Stays inside
+  * whole-stage codegen via one static call; the
   * codec work itself is per-row CPU with no allocation visible to Tungsten
   * beyond the returned plane.
   */

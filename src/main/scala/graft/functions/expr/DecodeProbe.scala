@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.multimodal.MediaPipeline.lumaOrRaw]] are field extractions of
   * this single expression, so a plan reading BOTH provenance and pixels
   * runs the probe chain once by construction — previously each helper
-  * built its own PpmLuma/CodecLuma trees and only codegen-level
+  * built its own per-arm decode trees and only codegen-level
   * subexpression elimination, when it applied, deduplicated the decodes
   * (round-11 ADVICE). Null payloads do NOT null-propagate: the struct is
   * ('stub', null), exactly the old per-helper semantics

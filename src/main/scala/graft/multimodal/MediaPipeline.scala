@@ -146,17 +146,6 @@ object MediaPipeline {
     org.apache.spark.sql.graftshim.GraftColumn.lift1(
       graft.functions.expr.ByteGradientHash.apply)(payload)
 
-  /** Luminance plane of a binary P6 PPM payload, NULL when it doesn't parse
-    * ([[graft.functions.expr.PpmLuma]] / [[PpmDecode]]) — the bit-exact
-    * decode arm of the media column: uncompressed raster formats are pure
-    * header-parse + integer math, so the result is oracle-able. The
-    * compressed-codec arm ([[codecLuma]]) slots in beside it; the fallback
-    * idiom below composes both.
-    */
-  def ppmLuma(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftshim.GraftColumn.lift1(
-      graft.functions.expr.PpmLuma.apply)(payload)
-
   /** Luminance plane of a JPEG / GIF / TIFF payload via the JDK codecs,
     * NULL when the magic gate or codec rejects it
     * ([[graft.functions.expr.CodecLuma]] / [[ImageIoDecode]]).

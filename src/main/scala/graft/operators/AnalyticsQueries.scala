@@ -275,31 +275,15 @@ object AnalyticsQueries extends QueryPack {
     "q_time_gapfill" -> ((s, d) => {
       val e = Tables.events(s, d)
         .select(date_trunc("day", col("ts")).as("day"), col("event_type"), col("value"))
-      // SCALE-ADAPTIVE (round 22, closing VERDICT r21 item 5 — one spelling,
-      // both postures). Round 21 measured the pinned-daily variant (grid
-      // bounds and type spine derived from the rollup: ONE corpus scan) at
-      // 2.4× SLOWER at bench scale, where the checkpoint's eager job
-      // dominates three cheap column-pruned scans; at 100 TB three full
-      // corpus reads dominate and the one-scan variant wins. The branch is
-      // picked from the input's size estimate: below the threshold keep the
-      // three pruned scans, above it pin the daily rollup (bounded:
-      // days × types grows with TIME, not data) and derive bounds + spine
-      // from it. Both branches compute identical rows (min/max day and
-      // distinct event_type over the rollup ≡ over the raw rows;
-      // GapfillScaleSpec pins equality and exercises the big branch).
-      val key = "spark.graft.gapfill.scanBytesThreshold"
-      val raw = s.conf.get(key, (4L << 30).toString)
-      val threshold = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$key must be a whole number of bytes, got '$raw'"))
-      val daily0 = e.groupBy(col("day"), col("event_type"))
+      // Three column-pruned scans of the events (bounds, type spine,
+      // rollup). Round 21 measured the one-scan variant (bounds and spine
+      // derived from a pinned daily rollup) 2.4× SLOWER at bench scale,
+      // where the checkpoint's eager job dominates three cheap scans.
+      val daily = e.groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("tot"))
-      val (daily, boundsSrc) =
-        if (e.queryExecution.optimizedPlan.stats.sizeInBytes > threshold) {
-          val dd = daily0.pin(); (dd, dd)
-        } else (daily0, e)
-      val grid = boundsSrc.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
+      val grid = e.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
         .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("day"))
-        .crossJoin(boundsSrc.select(col("event_type")).distinct())
+        .crossJoin(e.select(col("event_type")).distinct())
       // both sides are time-bounded-tiny; the AGGREGATE broadcasts because a
       // left join can only build its non-preserved (right) side
       grid.join(broadcast(daily), Seq("day", "event_type"), "left")

@@ -146,16 +146,9 @@ object JoinQueries extends QueryPack {
     // join — and that identity holds for ANY hot-key set (every key lands
     // on exactly one path, both paths compute the same join), which is
     // what lets hot-key DETECTION be approximate without touching results.
-    //
-    // Knob: spark.graft.skew.sampleDetect=true switches detection from the
-    // exact full count (fixture default — deterministic, tiny) to the
-    // production path: a seeded deterministic ~10% sample of the fact
-    // rows, per-key counts scaled by 1/rate, hot if the estimate clears
-    // the same threshold. At 100 TB the full count is a second shuffle of
-    // the fact table; the sample reads the same scan but aggregates 10%
-    // of rows, and a miss only costs routing (a hot key on the cold path),
-    // never correctness. SkewJoinSpec proves both paths row-identical to
-    // the plain join on fixtures.
+    // Detection counts every key exactly (threshold 8 rows, see
+    // skewHotKeys); SkewJoinSpec proves the split row-identical to the
+    // plain join on fixtures.
     "q_join_skew_salted" -> ((s, d) => skewSaltedJoin(s, d)),
 
     // J9: runtime bloom-filter pushdown — the selective-dimension shuffle
@@ -492,9 +485,8 @@ object JoinQueries extends QueryPack {
     // .BucketedRangeJoinRule]] rewrites it into the bucket-grid equi join
     // automatically (the q_join_pointrange decomposition as a Rule
     // [LogicalPlan]; row-identity proven in BucketedRangeRuleSpec, the
-    // rewrite pinned in PlanSpec, kill switch spark.graft.rewrite
-    // .rangeJoin). Shares q_join_pointrange's oracle-side SQL shape: both
-    // must produce identical rows.
+    // rewrite pinned in PlanSpec). Shares q_join_pointrange's oracle-side
+    // SQL shape: both must produce identical rows.
     "q_join_interval_rule" -> ((s, d) => {
       val n = 2000L; val stride = 300L
       val tiers = s.range(0, n).select(
@@ -510,48 +502,18 @@ object JoinQueries extends QueryPack {
     })
   )
 
-  /** The two-path skew join behind `q_join_skew_salted` (J8 — see the map
-    * entry's comment for the full design). Hot-key detection honors the
-    * `spark.graft.skew.sampleDetect` session conf: `false` (default) counts
-    * every key exactly; `true` estimates frequencies from a seeded
-    * deterministic hash-sample of the fact rows — the 100 TB path, where a
-    * detection miss costs only routing, never rows.
-    */
-  /** Hot-key detection for [[skewSaltedJoin]], exposed for SkewJoinSpec to
-    * pin the ESTIMATOR's behavior directly (output row-identity holds for
-    * any hot set, so the join-level spec alone cannot catch a detector
-    * whose hot set degenerates to "all keys").
+  /** Hot-key detection for [[skewSaltedJoin]] (J8 — see the map entry's
+    * comment for the full design): every key with at least 8 fact rows,
+    * counted exactly. Exposed for SkewJoinSpec to check that the detector
+    * finds a non-empty hot set on the fixture, so the salted path runs.
     */
   private[graft] def skewHotKeys(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      sampled: Boolean): org.apache.spark.sql.DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val hotThreshold = 8L
-    (if (!sampled) {
-      li.groupBy(col("l_orderkey")).agg(count(lit(1)).as("k_n"))
-        .filter(col("k_n") >= hotThreshold)
-    } else {
-      // Deterministic ~1/10 row sample: hash near-unique row attributes
-      // (seeded — NOT rand(), so retries and both spec arms see the same
-      // sample), count per key, scale by the sampling rate. The estimate
-      // only gates ROUTING; the oracle boundary never sees it.
-      //
-      // RESOLUTION FLOOR: a 1/rate sample cannot resolve frequencies below
-      // ~a few·rate — with the semantic threshold alone, "estimate ≥ 8"
-      // would collapse to "appeared once in the sample" (any count·rate is
-      // ≥ rate > 8) and the hot set would scale with the DATA instead of
-      // isolating the skewed tail, turning broadcast(hotKeys) into exactly
-      // the unbounded broadcast this two-path design exists to avoid. So
-      // hot additionally requires ≥ 4 sampled rows (estimate ≥ 4·rate):
-      // real production skew is thousands of rows per key, far above the
-      // floor; keys below it route cold, where the plain SMJ is fine.
-      val rate = 10
-      li.filter(pmod(xxhash64(lit(42), col("l_orderkey"), col("l_extendedprice"),
-          col("l_discount")), lit(rate)) === 0)
-        .groupBy(col("l_orderkey")).agg((count(lit(1)) * rate).as("k_n"))
-        .filter(col("k_n") >= hotThreshold && col("k_n") >= 4L * rate)
-    }).select(col("l_orderkey").as("hk"))
+    Tables.lineitem(s, d)
+      .groupBy(col("l_orderkey")).agg(count(lit(1)).as("k_n"))
+      .filter(col("k_n") >= hotThreshold)
+      .select(col("l_orderkey").as("hk"))
   }
 
   /** The generic two-path salted inner join: rows of `fact` whose key is in
@@ -584,12 +546,10 @@ object JoinQueries extends QueryPack {
   }
 
   private[graft] def skewSaltedJoin(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val sampled =
-      s.conf.getOption("spark.graft.skew.sampleDetect").exists(_.toBoolean)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-    val hotKeys = skewHotKeys(s, d, sampled).pin()
+    val hotKeys = skewHotKeys(s, d).pin()
     // Salt must key on a HIGH-ENTROPY per-row value or the hot key's rows
     // all land in one salt and the skew survives; (price, discount) is
     // near-unique per lineitem row. A table with no such column would

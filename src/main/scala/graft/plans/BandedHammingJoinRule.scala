@@ -42,7 +42,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     expressions;
   *   - 0 <= k <= 15 (beyond that banding is too weak to pay for itself).
   *
-  * Kill switch: spark.graft.rewrite.hammingJoin=false.
+  * Disable with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.BandedHammingJoinRule`.
   */
 object BandedHammingJoinRule extends Rule[LogicalPlan] {
 
@@ -119,8 +120,7 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] {
     }
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.rewrite.hammingJoin", "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         val conjuncts = splitAnd(cond)
@@ -153,5 +153,4 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] {
           case _ => j
         }
     }
-  }
 }

@@ -43,18 +43,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     output, whose condition carries the bucket equi key). Remaining
   *     conjuncts ride along as residual filters.
   *
-  * The grid is static (no stats at rewrite time): `bits` should be sized so
-  * a typical interval touches a handful of buckets — intervals spanning
-  * vastly more than 2^bits inflate the exploded side (the same trade the
-  * hand-built decomposition makes).
+  * The grid is static (no stats at rewrite time): 2^[[BucketBits]] units
+  * per bucket, sized so a typical interval touches a handful of buckets —
+  * intervals spanning vastly more than that inflate the exploded side (the
+  * same trade the hand-built decomposition makes).
   *
   * Width guard: the exploded side is one row per TOUCHED BUCKET, so an
   * interval spanning ≫ 2^bits units (an epoch-micros day is ~3.4e8 buckets
   * at bits=8) would inflate the Generate side without bound — and past
   * 2^31 buckets `sequence` throws its array-length error, turning a
   * merely-slow query into a crash. The rewrite therefore SPLITS the
-  * interval side at spark.graft.rewrite.rangeJoin.maxBuckets (default
-  * 4096): intervals touching fewer buckets take the exploded equi join;
+  * interval side at [[MaxBuckets]]: intervals touching fewer buckets take
+  * the exploded equi join;
   * wider ones ride a fallback join under the ORIGINAL condition (tagged so
   * the fixed-point batch never re-matches it), and the two branches union.
   * Wide intervals are rare in real tier/geo tables, so the fallback side
@@ -63,12 +63,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * bounds fold to constants the split is decided at rewrite time instead:
   * all-narrow keeps the single-path plan, all-wide skips the rewrite.
   *
-  * Knobs: spark.graft.rewrite.rangeJoin=false kills the rule;
-  * spark.graft.rewrite.rangeJoin.bucketBits (default 8) sets the grid;
-  * spark.graft.rewrite.rangeJoin.maxBuckets (default 4096, <=0 unbounded)
-  * caps the per-interval explode width.
+  * Disable with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.BucketedRangeJoinRule`.
   */
 object BucketedRangeJoinRule extends Rule[LogicalPlan] {
+
+  /** Grid resolution: a bucket is 2^BucketBits units of the point domain. */
+  private val BucketBits = 8
+
+  /** Widest interval, in touched buckets, that takes the exploded equi join. */
+  private val MaxBuckets = 4096L
 
   /** Marks the wide-interval fallback join so the fixed-point optimizer
     * batch cannot re-match the rule's own output (its condition is the
@@ -118,11 +122,10 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     }
   }
 
-  private def bucket(x: Expression, bits: Int): Expression =
-    ShiftRight(x, Literal(bits, IntegerType))
+  private def bucket(x: Expression): Expression =
+    ShiftRight(x, Literal(BucketBits, IntegerType))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.rewrite.rangeJoin", "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if j.getTagValue(widePathTag).isEmpty =>
@@ -146,15 +149,11 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
           case _        => j
         }
     }
-  }
 
   private def rewriteIfSidesSplit(
       j: Join, left: LogicalPlan, right: LogicalPlan, conjuncts: Seq[Expression],
       candidate: (Expression, Expression, Expression, Expression, Expression),
       hint: JoinHint): LogicalPlan = {
-    val bits = conf.getConfString("spark.graft.rewrite.rangeJoin.bucketBits", "8").toInt
-    val maxBuckets =
-      conf.getConfString("spark.graft.rewrite.rangeJoin.maxBuckets", "4096").toLong
     val (lc, uc, p, lo, hi) = candidate
     val rest = conjuncts.filterNot(c => (c eq lc) || (c eq uc))
     val pointLeft = p.references.subsetOf(left.outputSet) &&
@@ -170,12 +169,11 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     val foldableTouched: Option[Long] =
       if (lo.foldable && hi.foldable) (lo.eval(), hi.eval()) match {
         case (l: java.lang.Long, h: java.lang.Long) =>
-          Some((h.longValue >> bits) - (l.longValue >> bits) + 1)
+          Some((h.longValue >> BucketBits) - (l.longValue >> BucketBits) + 1)
         case _ => None // NULL constant bound: both plans emit nothing anyway
       }
       else None
-    val bounded = maxBuckets > 0
-    if (bounded && foldableTouched.exists(_ > maxBuckets)) return j // all-wide
+    if (foldableTouched.exists(_ > MaxBuckets)) return j // all-wide
 
     val pointOnLeft = pointLeft
     val (pointPlan, intervalPlan) = if (pointOnLeft) (left, right) else (right, left)
@@ -184,14 +182,14 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     // The exploded equi join over `intervalSrc` (point side: one bucket per
     // row as a projected column; interval side: one row per touched bucket).
     def narrowJoin(intervalSrc: LogicalPlan): LogicalPlan = {
-      val pb = Alias(bucket(p, bits), "__graft_bkt_p")()
+      val pb = Alias(bucket(p), "__graft_bkt_p")()
       val pointProj = Project(pointPlan.output :+ pb, pointPlan)
       val ib = AttributeReference("__graft_bkt_i", LongType, nullable = false)()
       // Sequence is TimeZoneAwareExpression: without a zone it is
       // UNRESOLVED, and a post-analysis rule must emit resolved plans
       // (the zone is irrelevant for integral sequences).
       val gen = Generate(
-        Explode(new Sequence(bucket(lo, bits), bucket(hi, bits), None,
+        Explode(new Sequence(bucket(lo), bucket(hi), None,
           Some(conf.sessionLocalTimeZone))),
         unrequiredChildIndex = Nil, outer = false, qualifier = None,
         generatorOutput = Seq(ib), child = intervalSrc)
@@ -200,17 +198,17 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
       Project(j.output, Join(nl, nr, Inner, Some(newCond), hint))
     }
 
-    if (!bounded || foldableTouched.isDefined) {
-      // Unbounded, or constant bounds already proven narrow: single path.
+    if (foldableTouched.isDefined) {
+      // Constant bounds already proven narrow: single path.
       narrowJoin(intervalPlan)
     } else {
       // Per-row split on touched-bucket count. A NULL bound nulls both
       // filters, dropping the row from both branches — exactly the rows
       // the naive predicate rejects, so multiplicity is preserved.
-      val span = Subtract(bucket(hi, bits), bucket(lo, bits))
-      val narrowI = Filter(LessThan(span, Literal(maxBuckets, LongType)), intervalPlan)
+      val span = Subtract(bucket(hi), bucket(lo))
+      val narrowI = Filter(LessThan(span, Literal(MaxBuckets, LongType)), intervalPlan)
       val wideI =
-        Filter(GreaterThanOrEqual(span, Literal(maxBuckets, LongType)), intervalPlan)
+        Filter(GreaterThanOrEqual(span, Literal(MaxBuckets, LongType)), intervalPlan)
       val wideJoin = {
         val (wl, wr) = if (pointOnLeft) (pointPlan, wideI) else (wideI, pointPlan)
         val wj = Join(wl, wr, Inner, Some(residual), hint)

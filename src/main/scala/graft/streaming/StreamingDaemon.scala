@@ -135,7 +135,7 @@ object StreamingDaemon {
     * LATEST pointer atomically (tmp + ATOMIC_MOVE, the CursorCheckpoint
     * discipline) — readers never observe a half-written store, and the
     * prior snapshot stays valid for in-flight reads. Old snapshots are
-    * retired by the compaction loop, not here.
+    * kept: nothing deletes them yet (retention is ROADMAP item 4).
     */
   private[graft] def applyMergeBatch(
       spark: SparkSession, storeDir: String,
@@ -453,6 +453,18 @@ object StreamingDaemon {
   case class LwwUpdate(user_id: Long, event_type: String, last_event_id: Long,
       ts_us: Long, last_value: Double, versions_seen: Long)
 
+  /** One key's micro-batch folded into its stored state: the newest version
+    * by (ts, event_id) — the same deterministic order as batch LWW — among
+    * the batch rows and the previous newest, with the version counter
+    * advanced by the batch size.
+    */
+  private def foldLww(batchIt: Iterator[EventIn], prev: Option[LwwState]): LwwState = {
+    val batch = batchIt.toSeq // per-key micro-batch; bounded
+    val candidates = batch.map(e => LwwState(e.event_id, e.ts_us, e.value, 0L)) ++ prev
+    val newest = candidates.maxBy(s => (s.tsUs, s.eventId))
+    newest.copy(versionsSeen = prev.map(_.versionsSeen).getOrElse(0L) + batch.size)
+  }
+
   /** Streaming LWW with explicit keyed state: each micro-batch folds its new
     * versions into the stored newest-version per key and emits the updated
     * row. Equivalent to re-running batch LWW over all data ever seen, but the
@@ -465,13 +477,7 @@ object StreamingDaemon {
       .groupByKey(e => (e.user_id, e.event_type))
       .mapGroupsWithState[LwwState, LwwUpdate](GroupStateTimeout.NoTimeout) {
         case ((uid, etype), batchIt, state: GroupState[LwwState]) =>
-          val batch = batchIt.toSeq // per-key micro-batch; bounded
-          val prev = state.getOption
-          val candidates = batch.map(e => LwwState(e.event_id, e.ts_us, e.value, 0L)) ++ prev
-          // newest by (ts, event_id) — the same deterministic order as batch LWW
-          val newest = candidates.maxBy(s => (s.tsUs, s.eventId))
-          val next = newest.copy(
-            versionsSeen = prev.map(_.versionsSeen).getOrElse(0L) + batch.size)
+          val next = foldLww(batchIt, state.getOption)
           state.update(next)
           LwwUpdate(uid, etype, next.eventId, next.tsUs, next.value, next.versionsSeen)
       }
@@ -493,12 +499,8 @@ object StreamingDaemon {
       .flatMapGroupsWithState[LwwState, LwwUpdate](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         case ((uid, etype), batchIt, state: GroupState[LwwState]) =>
-          val batch = batchIt.toSeq
           val prev = state.getOption
-          val candidates = batch.map(e => LwwState(e.event_id, e.ts_us, e.value, 0L)) ++ prev
-          val newest = candidates.maxBy(s => (s.tsUs, s.eventId))
-          val next = newest.copy(
-            versionsSeen = prev.map(_.versionsSeen).getOrElse(0L) + batch.size)
+          val next = foldLww(batchIt, prev)
           state.update(next)
           val changed = !prev.exists(p => p.eventId == next.eventId && p.tsUs == next.tsUs)
           if (changed)

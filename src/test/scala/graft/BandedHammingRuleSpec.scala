@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class BandedHammingRuleSpec extends AnyFunSuite with SparkSpec {
 
   // deterministic pseudo-random 64-bit signatures (no RNG). Built on an
-  // EXPLICIT session: the rule reads the conf of the session that EXECUTES
-  // the join, so the kill-switch arm must construct its DataFrames on the
-  // disabled session or both arms silently run rewritten (vacuous compare).
+  // EXPLICIT session: the optimizer reads the conf of the session that
+  // EXECUTES the join, so the naive arm must construct its DataFrames on
+  // the session that excludes the rule or both arms silently run
+  // rewritten (vacuous compare).
   private def sigs(s: org.apache.spark.sql.SparkSession, n: Int, seed: Long) = {
     import s.implicits._
     (0 until n).map { i =>
@@ -22,9 +23,17 @@ class BandedHammingRuleSpec extends AnyFunSuite with SparkSpec {
     }.toDF("id", "sig")
   }
 
-  private def naiveJoin(k: Int, disableRule: Boolean) = {
+  // A fresh session per arm; the naive arm excludes the rule through
+  // Spark's own optimizer setting.
+  private def session(disableRule: Boolean) = {
     val s2 = spark.newSession()
-    if (disableRule) s2.conf.set("spark.graft.rewrite.hammingJoin", "false")
+    if (disableRule)
+      s2.conf.set("spark.sql.optimizer.excludedRules", graft.plans.BandedHammingJoinRule.ruleName)
+    s2
+  }
+
+  private def naiveJoin(k: Int, disableRule: Boolean) = {
+    val s2 = session(disableRule)
     val a = sigs(s2, 120, 7L).withColumnRenamed("id", "id_a").withColumnRenamed("sig", "sig_a")
     val b = sigs(s2, 120, 7L).withColumnRenamed("id", "id_b").withColumnRenamed("sig", "sig_b")
     a.join(b, expr(s"bit_count(sig_a ^ sig_b) <= $k"))
@@ -33,6 +42,7 @@ class BandedHammingRuleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("kill switch actually disables the rewrite (guards the identity test against a vacuous compare)") {
+    // the kill switch is spark.sql.optimizer.excludedRules naming the rule
     val off = naiveJoin(3, disableRule = true).queryExecution.executedPlan.toString
     assert(!off.contains("__graft_bval"), off)
     val on = naiveJoin(3, disableRule = false).queryExecution.executedPlan.toString
@@ -62,8 +72,7 @@ class BandedHammingRuleSpec extends AnyFunSuite with SparkSpec {
       .toDF("id_a", "sig_a")
     val b = Seq((10L, Some(1L)), (20L, None)).toDF("id_b", "sig_b")
     def run(disable: Boolean) = {
-      val s2 = spark.newSession()
-      if (disable) s2.conf.set("spark.graft.rewrite.hammingJoin", "false")
+      val s2 = session(disable)
       val a2 = s2.createDataFrame(java.util.Arrays.asList(a.collect(): _*), a.schema)
       val b2 = s2.createDataFrame(java.util.Arrays.asList(b.collect(): _*), b.schema)
       a2.join(b2, expr("bit_count(sig_a ^ sig_b) <= 1"))
@@ -107,10 +116,9 @@ class BandedHammingRuleSpec extends AnyFunSuite with SparkSpec {
     // Operand casts are NEVER stripped: a CAST(int_col AS BIGINT) operand
     // is itself the LongType signature expression, so the bands compute
     // over exactly the 64-bit value the naive predicate sees — exact by
-    // construction, pinned against the kill-switch run below.
+    // construction, pinned against the rule-excluded run below.
     def run(cond: String, disable: Boolean, intSigs: Boolean) = {
-      val s2 = spark.newSession()
-      if (disable) s2.conf.set("spark.graft.rewrite.hammingJoin", "false")
+      val s2 = session(disable)
       import s2.implicits._
       val base = (0 until 80).map { i =>
         val x = (i / 2).toLong * 0x9e3779b97f4a7c15L + 11L

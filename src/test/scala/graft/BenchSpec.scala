@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The host calibration [[Bench.calibrate]] that travels as `calib` in the
-  * bench line.
+  * bench line, and the parse of the bench's rounds setting.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -18,5 +18,15 @@ class BenchSpec extends AnyFunSuite {
     val b = Bench.calibrate()
     assert(a > 0 && b > 0)
     assert(math.max(a, b) / math.min(a, b) < 10.0, s"calib unstable: $a vs $b")
+  }
+
+  test("SPARK_GRAFT_BENCH_ROUNDS: unset means 3, a bad value names the variable and value") {
+    assert(Bench.parseRounds(None) == 3)
+    assert(Bench.parseRounds(Some("5")) == 5)
+    for (bad <- Seq("three", "0", "-2", "")) {
+      val e = intercept[IllegalArgumentException](Bench.parseRounds(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_ROUNDS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
   }
 }

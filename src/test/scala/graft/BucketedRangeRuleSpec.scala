@@ -30,15 +30,24 @@ class BucketedRangeRuleSpec extends AnyFunSuite with SparkSpec {
     }.toDF("pid", "p")
   }
 
-  private def naive(disableRule: Boolean, cond: String = "p >= lo AND p <= hi") = {
+  // A fresh session per arm; the naive arm excludes the rule through
+  // Spark's own optimizer setting.
+  private def session(disableRule: Boolean) = {
     val s2 = spark.newSession()
-    if (disableRule) s2.conf.set("spark.graft.rewrite.rangeJoin", "false")
+    if (disableRule)
+      s2.conf.set("spark.sql.optimizer.excludedRules", graft.plans.BucketedRangeJoinRule.ruleName)
+    s2
+  }
+
+  private def naive(disableRule: Boolean, cond: String = "p >= lo AND p <= hi") = {
+    val s2 = session(disableRule)
     points(s2).join(intervals(s2), expr(cond))
       .select(col("pid"), col("tid"))
       .orderBy(col("pid"), col("tid"))
   }
 
   test("kill switch actually disables the rewrite (guards the identity test against a vacuous compare)") {
+    // the kill switch is spark.sql.optimizer.excludedRules naming the rule
     val off = naive(disableRule = true).queryExecution.executedPlan.toString
     assert(!off.contains("__graft_bkt"), off)
     val on = naive(disableRule = false).queryExecution.executedPlan.toString
@@ -74,8 +83,7 @@ class BucketedRangeRuleSpec extends AnyFunSuite with SparkSpec {
     val ivs = Seq((10L, Some(0L), Some(20L)), (20L, None, Some(5L)), (30L, Some(-300L), Some(-100L)))
       .toDF("tid", "lo", "hi")
     def run(disable: Boolean) = {
-      val s2 = spark.newSession()
-      if (disable) s2.conf.set("spark.graft.rewrite.rangeJoin", "false")
+      val s2 = session(disable)
       val p2 = s2.createDataFrame(java.util.Arrays.asList(pts.collect(): _*), pts.schema)
       val i2 = s2.createDataFrame(java.util.Arrays.asList(ivs.collect(): _*), ivs.schema)
       p2.join(i2, expr("p >= lo AND p <= hi"))
@@ -100,14 +108,25 @@ class BucketedRangeRuleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("identity holds across grid sizes: bucketBits 4, 8 and 13 all reproduce the naive rows") {
-    val want = naive(disableRule = true).collect().toSeq
-    for (bits <- Seq(4, 8, 13)) {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.graft.rewrite.rangeJoin.bucketBits", bits.toString)
-      val got = points(s2).join(intervals(s2), expr("p >= lo AND p <= hi"))
-        .select(col("pid"), col("tid")).orderBy(col("pid"), col("tid"))
+    // The grid is fixed at 2^8 units; rescaling the fixture coordinates
+    // moves them onto the other grids exactly: (x << 4) >> 8 == x >> 4 and
+    // (x >> 5) >> 8 == x >> 13, so each case buckets the fixture as that
+    // grid size would.
+    for ((bits, rescale) <- Seq[(Int, String => String)](
+        4 -> (c => s"$c * 16"), 8 -> (c => c), 13 -> (c => s"shiftright($c, 5)"))) {
+      def run(disable: Boolean) = {
+        val s2 = session(disable)
+        val pts = points(s2).withColumn("p", expr(rescale("p")))
+        val ivs = intervals(s2)
+          .withColumn("lo", expr(rescale("lo"))).withColumn("hi", expr(rescale("hi")))
+        pts.join(ivs, expr("p >= lo AND p <= hi"))
+          .select(col("pid"), col("tid")).orderBy(col("pid"), col("tid"))
+      }
+      val got = run(disable = false)
       assert(got.queryExecution.executedPlan.toString.contains("__graft_bkt"), s"bits=$bits")
+      val want = run(disable = true).collect().toSeq
       assert(got.collect().toSeq == want, s"bits=$bits")
+      assert(want.nonEmpty, s"bits=$bits")
     }
   }
 
@@ -130,19 +149,18 @@ class BucketedRangeRuleSpec extends AnyFunSuite with SparkSpec {
     // one absurdly wide interval (epoch-micros-day scale) among narrow ones
     val ivs = Seq((1L, 0L, 100L), (2L, 200L, 450L), (3L, -5000L, 400000000L))
       .toDF("tid", "lo", "hi")
-    def run(disable: Boolean, maxBuckets: Long) = {
-      val s2 = spark.newSession()
-      if (disable) s2.conf.set("spark.graft.rewrite.rangeJoin", "false")
-      s2.conf.set("spark.graft.rewrite.rangeJoin.maxBuckets", maxBuckets.toString)
+    // the wide interval touches ~1.6M buckets, far past the 4096 cap
+    def run(disable: Boolean) = {
+      val s2 = session(disable)
       val i2 = s2.createDataFrame(java.util.Arrays.asList(ivs.collect(): _*), ivs.schema)
       points(s2).join(i2, expr("p >= lo AND p <= hi"))
         .select(col("pid"), col("tid")).orderBy(col("pid"), col("tid"))
     }
-    val got = run(disable = false, maxBuckets = 16)
+    val got = run(disable = false)
     val plan = got.queryExecution.optimizedPlan.toString
     assert(plan.contains("__graft_bkt"), plan)  // narrow branch still equi
     assert(plan.contains(PlanPins.Union), plan)        // wide branch split off
-    val want = run(disable = true, maxBuckets = 16).collect().toSeq
+    val want = run(disable = true).collect().toSeq
     assert(got.collect().toSeq == want)
     assert(want.nonEmpty)
   }

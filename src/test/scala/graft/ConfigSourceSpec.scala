@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{CompactionConfig, CursorCheckpoint}
 
@@ -50,5 +51,19 @@ class ConfigSourceSpec extends AnyFunSuite {
     assert(ckp.advance(total = 100) == 0) // 99 -> wrap to 0
     assert(ckp.advance(total = 100) == 1)
     assert(ckp.read() == 1)
+  }
+
+  test("the only spark.graft.* session key the library reads is spark.graft.checkpoint.mode") {
+    // One spelling per decision: a new option needs a workload on each side
+    // of the choice it selects. Scans the sources for key literals.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
+    val key = "\"(spark\\.graft\\.[A-Za-z.]+)".r
+    val walk = Files.walk(root)
+    val keys =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(f => key.findAllMatchIn(Files.readString(f)).map(_.group(1))).toSet
+      finally walk.close()
+    assert(keys == Set("spark.graft.checkpoint.mode"), keys)
   }
 }

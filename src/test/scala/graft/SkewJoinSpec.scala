@@ -6,10 +6,8 @@ import graft.operators.JoinQueries
 
 /** The skew-salted join's contract: the two-path (hot salted / cold plain)
   * split is row-identical to the plain join for ANY hot-key set, so hot-key
-  * DETECTION may be approximate. Proven here for both detection modes —
-  * exact full count (fixture default) and the production seeded-sample
-  * estimate behind `spark.graft.skew.sampleDetect` — against the plain
-  * sort-merge join computed independently.
+  * DETECTION may be approximate. Proven here with the exact detector
+  * against the plain sort-merge join computed independently.
   */
 class SkewJoinSpec extends AnyFunSuite with SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -25,25 +23,13 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
       .orderBy(col("o_orderpriority"))
 
   test("exact hot-key detection (default): output row-identical to the plain join") {
+    // Row identity holds for ANY hot set, so it alone cannot show the
+    // salted path ran: the detector must find hot keys on this fixture.
+    val hot = JoinQueries.skewHotKeys(spark, d).count()
+    assert(hot > 0, s"exact detector found no hot keys — fixture drifted?")
     val got = JoinQueries.skewSaltedJoin(spark, d).collect().toSeq
     val want = plainJoin(spark).collect().toSeq
     assert(got == want)
-  }
-
-  test("sampled hot-key detection (spark.graft.skew.sampleDetect=true): output row-identical to the plain join") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.skew.sampleDetect", "true")
-    val got = JoinQueries.skewSaltedJoin(s2, d).collect().toSeq
-    val want = plainJoin(s2).collect().toSeq
-    assert(got == want)
-  }
-
-  test("sampled detection is deterministic (seeded hash sample, not rand())") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.skew.sampleDetect", "true")
-    val a = JoinQueries.skewSaltedJoin(s2, d).collect().toSeq
-    val b = JoinQueries.skewSaltedJoin(s2, d).collect().toSeq
-    assert(a == b)
   }
 
   test("production skew (one key = 30% of rows, AQE off): salted reducers are bounded, rows identical") {
@@ -92,20 +78,5 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
     val got = salted.orderBy("fk", "payload").collect().toSeq
     val want = plain.orderBy("fk", "payload").collect().toSeq
     assert(got == want)
-  }
-
-  test("sampled hot set is bounded by the resolution floor — never 'every sampled key'") {
-    // Row-identity holds for ANY hot set, so the join-level tests above
-    // cannot catch a degenerate estimator. Pin the estimator itself: the
-    // exact detector finds hot keys on this fixture (~8+ rows each), while
-    // the sampled detector — whose resolution floor is 4 sampled rows ≈ a
-    // true count of 40 at rate 10 — must find NONE here (max true count is
-    // far below the floor). A detector whose sampled hot set scaled with
-    // the data (the "appeared once in the sample" bug) would return ~34%
-    // of ALL keys and fail this hard.
-    val exact = JoinQueries.skewHotKeys(spark, d, sampled = false).count()
-    val sampled = JoinQueries.skewHotKeys(spark, d, sampled = true).count()
-    assert(exact > 0, s"exact detector found no hot keys — fixture drifted?")
-    assert(sampled == 0, s"sampled hot set should be empty below the resolution floor, got $sampled")
   }
 }
