@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *    over a fresh fixture copy) must retry to the correct result — never
   *    serve a torn artifact;
   *  - a fixture fingerprint ROTATION must evict the superseded
-  *    generation's reliable checkpoint dirs (Memo.Cache → releasePin)
+  *    generation's reliable checkpoint dirs (the Memo artifact's release)
   *    under the multi-JVM scheduler, with the new pin's results correct —
   *    the cluster form of MemoSpec's in-process eviction scenarios.
   *
@@ -155,7 +155,7 @@ object ClusterProbe {
     ProbeKill.awaitExecutors(appId)
 
     // ---- Phase 4: fingerprint rotation evicts superseded reliable pins ----
-    // MemoSpec proves releasePin eviction in-process; this is the same claim
+    // MemoSpec proves artifact eviction in-process; this is the same claim
     // under the multi-JVM scheduler: rewrite the fixture (new fingerprint),
     // re-run, and the superseded generation's cached-family checkpoint dirs
     // must be deleted while the new pin's results are correct. Per-run

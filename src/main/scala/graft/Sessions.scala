@@ -10,21 +10,25 @@ import org.apache.spark.sql.SparkSession
   * AQE left on for runtime re-planning / skew handling.
   */
 object Sessions {
-  def tuned(master: String, cpus: String): SparkSession =
+  /** The settings every graft session shares, whatever its master. */
+  private def shared(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // GC-driven backstop for checkpoint files whose pin is dropped
-      // without going through Memo.Cache eviction (releasePin is the
-      // deterministic path; this catches non-root-pin cache values)
+      // without a Memo artifact's eviction (releasePin is the deterministic
+      // path; this catches the per-run intermediate pins no artifact owns)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.ui.enabled", "false")
+
+  def tuned(master: String, cpus: String): SparkSession =
+    shared(master, cpus)
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
 
   /** The multi-JVM probe session ([[ClusterProbe]], [[StreamClusterProbe]]):
@@ -48,15 +52,7 @@ object Sessions {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val b = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
+    val b = shared("local-cluster[2,2,1024]", "8")
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions", addOpens)
     extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()

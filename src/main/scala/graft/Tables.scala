@@ -5,37 +5,40 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the driver-generated star schema + event +
-  * LLM-pipeline tables (see /root/repo/FIXTURES.md). Every query in
+  * LLM-pipeline tables (see FIXTURES.md). Every query in
   * [[SparkEntry.queries]] is parameterized by `sfDir` so the same plan runs
   * unchanged on sf0.001 … 100 TB; nothing here is collected to the driver.
   */
 object Tables {
+  import graft.sources.Memo
+
   /** `spark.read.parquet` pays file listing + parquet schema inference on
     * EVERY call (~80 ms/call on the round-12 host class, measured repeat
     * cost) — driver-side metadata work a real cluster pays once per query,
     * but which the 169-query bench paid 2-3× per query per round. The
-    * resolved DataFrame is immutable, so it is memoized per
-    * (SparkSession identity, absolute path, source fingerprint) via
-    * [[graft.sources.Memo.SessionCache]]: a regenerated fixture
-    * (size/mtime change) or a new session gets a fresh read; everything
-    * downstream — analysis, optimization, scan, shuffle — still runs per
-    * query, so bench numbers keep measuring the query, not repeated footer
-    * reads. Keyed per SESSION (not per context): a Dataset's temp views
-    * register in the session that created it, so `newSession()` isolation
-    * sessions must never be handed a sibling's DataFrame.
+    * resolved DataFrame is immutable, so it is memoized per SparkSession
+    * under the source's [[Memo.family]] and [[Memo.fingerprint]]: a
+    * regenerated fixture (a new fingerprint) or a new session gets a fresh
+    * read; everything downstream — analysis, optimization, scan, shuffle —
+    * still runs per query, so bench numbers keep measuring the query, not
+    * repeated footer reads. Keyed per SESSION (not per context): a
+    * Dataset's temp views register in the session that created it, so
+    * `newSession()` isolation sessions must never be handed a sibling's
+    * DataFrame.
     */
-  private val loads = new graft.sources.Memo.SessionCache[DataFrame]
+  private val loads = new Memo.SessionCache[DataFrame]
   // The inferred schema is a plain value, valid across sessions — cached
-  // per (path, fingerprint) WITHOUT session identity so the short-lived
-  // `newSession()` isolation sessions (which by design miss the DataFrame
-  // memo every call) still skip the footer-reading schema inference.
-  private val schemas = new graft.sources.Memo.Cache[org.apache.spark.sql.types.StructType]
+  // under the same context-free family and fingerprint WITHOUT session
+  // identity so the short-lived `newSession()` isolation sessions (which
+  // by design miss the DataFrame memo every call) still skip the
+  // footer-reading schema inference.
+  private val schemas = new Memo.Cache[org.apache.spark.sql.types.StructType]
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val abs = new java.io.File(sfDir).getAbsolutePath
-    val key = s"$abs/$name|${graft.sources.Memo.fingerprint(sfDir, name)}"
-    loads.get(spark, key) {
+    val family = Memo.family(sfDir, name)
+    val version = Memo.fingerprint(sfDir, name)
+    loads.get(spark, family, version) {
       val path = s"$sfDir/$name.parquet"
-      val schema = schemas.get(key)(spark.read.parquet(path).schema)
+      val schema = schemas.get(family, version)(spark.read.parquet(path).schema)
       spark.read.schema(schema).parquet(path)
     }
   }

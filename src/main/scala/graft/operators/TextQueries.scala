@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Memo
 import graft.sources.Memo.PinOps
 import graft.functions.TextFns
 
@@ -63,14 +64,11 @@ object TextQueries extends QueryPack {
     * at 100 TB two extra corpus scans per report. Same artifact pattern as
     * [[docGrams10]].
     */
-  private val shingleSetCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private def docShingleSets(s: org.apache.spark.sql.SparkSession, d: String) =
-    shingleSetCache.get(graft.sources.Memo.key(s, d, "documents") + "#shsets")(
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          array_distinct(TextFns.shinglesFromText(col("text"), 3)).as("shs"))
-        .select(col("doc_id"), col("shs"), size(col("shs")).as("n_sh"))
-        .pin())
+  private val docShingleSets = Memo.artifact("documents")((s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        array_distinct(TextFns.shinglesFromText(col("text"), 3)).as("shs"))
+      .select(col("doc_id"), col("shs"), size(col("shs")).as("n_sh")))
 
   /** [[docShingles]] over an arbitrary document subset — the incremental
     * path shingles ONLY the new snapshot, never the whole corpus.
@@ -298,14 +296,15 @@ object TextQueries extends QueryPack {
     * whole MinHash pipeline per consumer measured 2× the cost for zero
     * information.
     */
-  private val edgeCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
+  private[graft] val candidateEdges = Memo.artifact("documents")((s, d) =>
+    bandPairsOf(memoBandBuckets(s, d)).distinct())
 
   /** Persisted corpus signature tables (q_dedup_incremental) — the NAME
     * hashes the path + source fingerprint (stable across sessions, fresh on
-    * regeneration); the memo key additionally carries the context identity
-    * so a new session re-registers the table in its own catalog.
+    * regeneration); the memo family additionally carries the context
+    * identity so a new session re-registers the table in its own catalog.
     */
-  private val sigTableCache = new graft.sources.Memo.Cache[String]
+  private val sigTableCache = new Memo.Cache[String]
   /** Serializes the (rare) cross-context writes of the shared-name
     * signature table; see the comment at the write site.
     */
@@ -314,22 +313,13 @@ object TextQueries extends QueryPack {
     * [[starEdges]] split off ONE banding pipeline run, not two. Tiny: one
     * row per (doc, band).
     */
-  private val bucketCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private def memoBandBuckets(s: org.apache.spark.sql.SparkSession, d: String) =
-    bucketCache.get(graft.sources.Memo.key(s, d, "documents") + "#buckets")(
-      bandBuckets(s, d).pin())
-
-  private[graft] def candidateEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    edgeCache.get(graft.sources.Memo.key(s, d, "documents"))(
-      bandPairsOf(memoBandBuckets(s, d)).distinct().pin())
+  private val memoBandBuckets = Memo.artifact("documents")(bandBuckets)
 
   /** Connectivity-equivalent star edge set (see [[starEdgesOf]]), memoized
     * like [[candidateEdges]] — the clustering family's input.
     */
-  private val starCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private[graft] def starEdges(s: org.apache.spark.sql.SparkSession, d: String) =
-    starCache.get(graft.sources.Memo.key(s, d, "documents") + "#star")(
-      starEdgesOf(memoBandBuckets(s, d)).distinct().pin())
+  private[graft] val starEdges = Memo.artifact("documents")((s, d) =>
+    starEdgesOf(memoBandBuckets(s, d)).distinct())
 
   /** Per-doc triangle counts over the LSH candidate graph (Suri &
     * Vassilvitskii 2011): orient each edge from its lower (degree, id)
@@ -384,7 +374,7 @@ object TextQueries extends QueryPack {
     * and occurrence totals are sum(cnt), identical by definition. The
     * collapse runs once at artifact build instead of inside every consumer.
     */
-  private val gramCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
+  private val docGrams10 = Memo.artifact("documents")(grams10Build)
   /** The pre-pin build expression of [[docGrams10]] — package-visible so
     * [[graft.ExplainPrePin]] can dump the checkpoint-PRODUCING plan
     * (VERDICT r21 item 9: pin() hides builder exchanges from the final
@@ -396,9 +386,6 @@ object TextQueries extends QueryPack {
         explode(TextFns.shinglesFromText(col("text"), 10)).as("gram"))
       .groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("cnt"))
-  private def docGrams10(s: org.apache.spark.sql.SparkSession, d: String) =
-    gramCache.get(graft.sources.Memo.key(s, d, "documents") + "#grams10")(
-      grams10Build(s, d).pin())
 
   /** Distinct rolling 8-gram membership table (doc_id, gram) for the
     * decontamination query — DISTINCT because contamination is a set
@@ -406,13 +393,11 @@ object TextQueries extends QueryPack {
     * occurrence-counting 10-gram table above. Materialized once per
     * snapshot: q_text_decontam consumes it from three branches.
     */
-  private def docGrams8(s: org.apache.spark.sql.SparkSession, d: String) =
-    gramCache.get(graft.sources.Memo.key(s, d, "documents") + "#grams8")(
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(TextFns.shinglesFromText(col("text"), 8)).as("gram"))
-        .distinct()
-        .pin())
+  private val docGrams8 = Memo.artifact("documents")((s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        explode(TextFns.shinglesFromText(col("text"), 8)).as("gram"))
+      .distinct())
 
   /** Byte-banded Hamming pairing over an integer signature column — ONE
     * pipeline shared by q_dedup_simhash_pairs (16-bit SimHash, 2 bands)
@@ -561,10 +546,7 @@ object TextQueries extends QueryPack {
     * stats, audits) reads that table. q_dedup_components itself does NOT go
     * through this memo — it times the contraction honestly on every run.
     */
-  private val labelCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String) =
-    labelCache.get(graft.sources.Memo.key(s, d, "documents"))(
-      dedupClusters(s, d).pin())
+  private val clusterLabels = Memo.artifact("documents")(dedupClusters)
 
   /** DSIR sufficient statistics per document — (doc_id, n_tok, s6) where s6
     * is the exact µ-unit sum of per-token log-likelihood ratios under the
@@ -649,10 +631,7 @@ object TextQueries extends QueryPack {
     * honestly on every run; downstream consumers (q_sample_dsir) read the
     * scored table instead of retraining both LMs.
     */
-  private val dsirCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private def dsirScoresMemo(s: org.apache.spark.sql.SparkSession, d: String) =
-    dsirCache.get(graft.sources.Memo.key(s, d, "documents"))(
-      dsirScores(s, d).pin())
+  private val dsirScoresMemo = Memo.artifact("documents")(dsirScores)
 
   /** Persisted corpus band-key store — (corpus_doc, skey) for the corpus
     * split (doc_id % 10 != 7), bucketed+sorted by skey ("yesterday's
@@ -661,7 +640,7 @@ object TextQueries extends QueryPack {
     * (context, source fingerprint).
     */
   private def corpusSigTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    sigTableCache.get(graft.sources.Memo.key(s, d, "documents")) {
+    sigTableCache.get(Memo.family(s, d, "documents"), Memo.fingerprint(d, "documents")) {
       // Name is (path, fingerprint)-stable — NOT per-application: an appId
       // component would leak one full bucketed table per run into the
       // warehouse (nothing ever drops the previous run's name). The
@@ -672,7 +651,7 @@ object TextQueries extends QueryPack {
       val name = "graft_dedup_sigs_" +
         f"${scala.util.hashing.MurmurHash3.stringHash(
           new java.io.File(d).getAbsolutePath +
-            graft.sources.Memo.fingerprint(d, "documents"))}%08x"
+            Memo.fingerprint(d, "documents"))}%08x"
       sigTableWriteLock.synchronized {
         // The name encodes (path, fingerprint), so an existing table IS the
         // content this write would produce — skip the rewrite entirely.
@@ -700,17 +679,13 @@ object TextQueries extends QueryPack {
     * corpus split's own candidate edges. Memoized: in production this is
     * the persisted output of the previous nightly clustering.
     */
-  private val corpusLabelCache = new graft.sources.Memo.Cache[org.apache.spark.sql.DataFrame](graft.sources.Memo.releasePin)
-  private def corpusClusterLabels(s: org.apache.spark.sql.SparkSession, d: String) =
-    corpusLabelCache.get(graft.sources.Memo.key(s, d, "documents") + "#corpus") {
-      Components.labels(
-        starEdgesOf(bandBucketsOf(shinglesOf(
-            Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7))))
-          .distinct()
-          .select(col("doc_a").as("u"), col("doc_b").as("v")))
-        .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
-        .pin()
-    }
+  private val corpusClusterLabels = Memo.artifact("documents")((s, d) =>
+    Components.labels(
+      starEdgesOf(bandBucketsOf(shinglesOf(
+          Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7))))
+        .distinct()
+        .select(col("doc_a").as("u"), col("doc_b").as("v")))
+      .select(col("v").as("doc_id"), col("lbl").as("cluster_id")))
 
   /** The new snapshot's candidate edges (u, v), u = any endpoint: corpus↔new
     * via the persisted skey store (hot corpus buckets > 100 excluded — the

@@ -1,19 +1,23 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Shared staleness-proof memoization for per-snapshot artifacts (LSH edge
   * sets, cluster labels, trained centroids, persisted signature tables).
   *
+  * An artifact is declared once, with [[artifact]]; the declaration owns
+  * its cache, its cache key, the pin of every build and the release of the
+  * pin a new snapshot supersedes. A cache key is a [[Family]] plus a
+  * version, the source [[fingerprint]], and is never spelled as a string.
+  *
   * Two hazards this fixes over a bare TrieMap keyed on the sfDir path:
   *
   *  - STALENESS: a fixture regenerated in-JVM under the same path would be
-  *    served the previous snapshot's artifact. The key therefore embeds a
-  *    fingerprint of the source parquet (size + mtime — the same guard
-  *    [[PartitionedLayout.eventsByDay]] introduced, factored here) and the
-  *    owning SparkContext's identity (localCheckpoint'ed DataFrames die
-  *    with their context; a new session in the same JVM must never be
-  *    handed another context's checkpoints).
+  *    served the previous snapshot's artifact. The key therefore carries a
+  *    fingerprint of the source parquet and the owning SparkContext's
+  *    identity (localCheckpoint'ed DataFrames die with their context; a new
+  *    session in the same JVM must never be handed another context's
+  *    checkpoints).
   *  - RACES: TrieMap.getOrElseUpdate is not atomic for side effects — two
   *    concurrent first callers could both run an expensive pipeline, or
   *    both DROP/CREATE the same warehouse table.
@@ -21,6 +25,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    key, with later callers for that key blocking until it finishes.
   */
 object Memo {
+
+  /** `table`'s source parquet under `sfDir`: absolute, as spelled (not
+    * canonicalized).
+    */
+  private def source(sfDir: String, table: String): java.io.File =
+    new java.io.File(new java.io.File(sfDir).getAbsolutePath, s"$table.parquet")
 
   /** Fingerprint of `table`'s source parquet under `sfDir`. Stable across
     * sessions; changes whenever the source is regenerated.
@@ -39,7 +49,7 @@ object Memo {
     *    bench fixtures are single files and never pay it.
     */
   def fingerprint(sfDir: String, table: String): String = {
-    val src = new java.io.File(new java.io.File(sfDir).getAbsolutePath, s"$table.parquet")
+    val src = source(sfDir, table)
     // Fail loudly on a missing source: java.io.File stats resolve ONLY the
     // driver's local filesystem, and a path that doesn't exist there (typo,
     // or an HDFS/S3 URI this local variant cannot see) would silently
@@ -63,65 +73,57 @@ object Memo {
     }
   }
 
-  /** Memo key for an artifact derived from `table` under `sfDir`, owned by
-    * session `s`: absolute path + source fingerprint + context identity.
+  /** What stays the same across snapshots of an artifact's source: the
+    * source's absolute path, as spelled (not canonicalized), and the owning
+    * SparkContext's identity, empty for a value valid in every context (a
+    * schema). Two cache entries of one family are one artifact for two
+    * versions of its source; only the newest is kept.
     */
-  def key(s: SparkSession, sfDir: String, table: String): String = {
-    val abs = new java.io.File(sfDir).getAbsolutePath
-    // applicationId + startTime is unique per context for the JVM's life —
-    // identityHashCode is NOT (identity hashes recycle after GC, and a
-    // collision would hand a new context a dead context's localCheckpoints).
-    s"$abs/$table|${fingerprint(sfDir, table)}" +
-      s"|sc@${s.sparkContext.applicationId}:${s.sparkContext.startTime}"
-  }
+  final case class Family(source: String, context: String)
 
-  /** Family/version split of a memo key. [[key]] produces
-    * `<abs>/<table>|<fingerprint>|sc@<app>:<start>` (call sites may append
-    * `#suffix` to the END), where `<fingerprint>` is either the single-file
-    * `<size>:<mtime>` form or the directory `dir:<hash>` form of
-    * [[fingerprint]] — neither contains '|', so the split is unambiguous:
-    * segment 1 is the source FINGERPRINT (version);
-    * everything else — path, context identity, suffix — is the FAMILY. Two
-    * keys of one family are the same artifact for two snapshots of its
-    * source; only one can be current. A key without a fingerprint segment
-    * is its own family (no rotation).
+  /** The context-free family of `table` under `sfDir`. */
+  def family(sfDir: String, table: String): Family = Family(source(sfDir, table).getPath, "")
+
+  /** The family of an artifact of `table` under `sfDir` owned by `s`'s
+    * context. applicationId + startTime is unique per context for the JVM's
+    * life — identityHashCode is NOT (identity hashes recycle after GC, and a
+    * collision would hand a new context a dead context's localCheckpoints).
     */
-  def splitKey(key: String): (String, String) = {
-    val parts = key.split('|')
-    if (parts.length < 2) (key, "")
-    else ((parts.take(1) ++ parts.drop(2)).mkString("|"), parts(1))
-  }
+  def family(s: SparkSession, sfDir: String, table: String): Family =
+    Family(source(sfDir, table).getPath,
+      s"${s.sparkContext.applicationId}:${s.sparkContext.startTime}")
 
-  /** Per-key-atomic memo with SUPERSEDED-VERSION eviction: when a compute
-    * lands a new version of a family (the source fingerprint rotated), the
-    * family's previous entry is removed and handed to `onEvict` — for
-    * pinned DataFrames that's [[releasePin]], which frees the checkpoint
-    * blocks/files a strong map reference would otherwise keep alive for
-    * the JVM's life (a long-lived daemon regenerating snapshots would leak
-    * executor disk otherwise). Eviction fires only when a NEW key is
-    * actually computed, i.e. once per source regeneration; by then every
+  /** Per-key-atomic memo keyed on (family, version) with SUPERSEDED-VERSION
+    * eviction: when a compute lands a new version of a family (the source
+    * fingerprint rotated), the family's previous entry is removed and handed
+    * to `onEvict` — for an [[artifact]] that's [[releasePin]], which frees
+    * the checkpoint blocks/files a strong map reference would otherwise keep
+    * alive for the JVM's life (a long-lived daemon regenerating snapshots
+    * would leak executor disk otherwise). Eviction fires only when a NEW key
+    * is actually computed, i.e. once per source regeneration; by then every
     * new lookup resolves to the new fingerprint, so the evicted snapshot
     * has no future readers (in-flight jobs over the OLD snapshot must not
     * race a regeneration — same contract as the fixture rotation itself).
+    *
+    * A compute must not read this same cache: ConcurrentHashMap forbids
+    * updating other mappings of a map inside its computeIfAbsent (it can
+    * throw "Recursive update"), which is why every [[artifact]] owns one.
     */
   final class Cache[V](onEvict: V => Unit = (_: V) => ()) {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
-    private val live = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def get(key: String)(compute: => V): V = {
+    private val m = new java.util.concurrent.ConcurrentHashMap[(Family, String), V]()
+    private val live = new java.util.concurrent.ConcurrentHashMap[Family, String]()
+    def get(family: Family, version: String)(compute: => V): V = {
       var inserted = false
-      val v = m.computeIfAbsent(key, _ => { inserted = true; compute })
+      val v = m.computeIfAbsent((family, version), _ => { inserted = true; compute })
       if (inserted) {
-        val (family, version) = splitKey(key)
-        if (version.nonEmpty) {
-          val prev = live.put(family, key)
-          if (prev != null && prev != key) {
-            val old = m.remove(prev)
-            if (old != null)
-              try onEvict(old)
-              catch { case e: Throwable =>
-                System.err.println(s"[memo] WARN: evict of superseded $prev failed: ${e.getMessage}")
-              }
-          }
+        val prev = live.put(family, version)
+        if (prev != null && prev != version) {
+          val old = m.remove((family, prev))
+          if (old != null)
+            try onEvict(old)
+            catch { case e: Throwable =>
+              System.err.println(s"[memo] WARN: evict of superseded $family@$prev failed: ${e.getMessage}")
+            }
         }
       }
       v
@@ -129,6 +131,26 @@ object Memo {
     /** Live (non-evicted) entry count — spec hook for the bounded-size claim. */
     def size: Int = m.size
   }
+
+  /** A memoized per-snapshot DataFrame derived from `table`, as the
+    * `(session, sfDir) => DataFrame` its call sites use. The first call per
+    * (family, fingerprint) runs `build` and pins its result exactly once
+    * (`build` itself must not pin its result); later calls are served the
+    * pinned frame; a call after the source rotated builds anew and releases
+    * the superseded pin. Artifacts may read other artifacts inside `build`:
+    * each declaration owns its [[Cache]].
+    */
+  final class Artifact private[Memo] (table: String, build: (SparkSession, String) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    private val cache = new Cache[DataFrame](releasePin)
+    def apply(s: SparkSession, sfDir: String): DataFrame =
+      cache.get(family(s, sfDir, table), fingerprint(sfDir, table))(pin(build(s, sfDir)))
+    /** Live entry count — spec hook for the bounded-size claim. */
+    private[graft] def size: Int = cache.size
+  }
+
+  def artifact(table: String)(build: (SparkSession, String) => DataFrame): Artifact =
+    new Artifact(table, build)
 
   /** Per-SESSION memo for artifacts that are session-bound, not merely
     * context-bound — e.g. the [[graft.Tables]] DataFrame reads: a Dataset
@@ -152,22 +174,22 @@ object Memo {
     * re-accessed on every query, so churn from one-shot isolation sessions
     * can only evict OTHER one-shot sessions), and in the long-lived-daemon
     * posture the retained set is at most `maxSessions` sessions' worth of
-    * resolved reads.
+    * resolved reads. Within a session, a [[Cache]] keeps one version per
+    * family.
     */
   final class SessionCache[V](maxSessions: Int = 8) {
-    private type Inner = java.util.concurrent.ConcurrentHashMap[String, V]
     private val outer =
-      new java.util.LinkedHashMap[SparkSession, Inner](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[SparkSession, Inner]): Boolean =
+      new java.util.LinkedHashMap[SparkSession, Cache[V]](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[SparkSession, Cache[V]]): Boolean =
           size > maxSessions
       }
-    def get(s: SparkSession, key: String)(compute: => V): V = {
+    def get(s: SparkSession, family: Family, version: String)(compute: => V): V = {
       val inner = outer.synchronized {
         var m = outer.get(s)
-        if (m == null) { m = new Inner(); outer.put(s, m) }
+        if (m == null) { m = new Cache[V](); outer.put(s, m) }
         m
       }
-      inner.computeIfAbsent(key, _ => compute)
+      inner.get(family, version)(compute)
     }
     /** Retained session count — spec hook for the bounded-growth claim. */
     def sessionCount: Int = outer.synchronized(outer.size)
@@ -242,31 +264,24 @@ object Memo {
     def pin(): Dataset[T] = Memo.pin(ds)
   }
 
-  /** Release the materialization behind a SUPERSEDED pinned Dataset — the
-    * [[Cache]] `onEvict` hook for DataFrame caches.
+  /** Release the materialization behind a SUPERSEDED [[Artifact]] value —
+    * its [[Cache]] `onEvict` hook.
     *
-    * A `pin()` result's analyzed plan is a bare `LogicalRDD` whose RDD is
-    * the checkpointed one: `unpersist` frees the localCheckpoint blocks
-    * (local mode), and deleting `getCheckpointFile` removes the reliable
-    * checkpoint directory (reliable mode) — deterministic cleanup instead
-    * of waiting on GC + ContextCleaner. A cache value that is NOT a bare
-    * pin root (some caches store a cheap view over another family's pin)
-    * is left alone: releasing a leaf under it could kill a LIVE pin owned
-    * by a different family, so those fall back to the GC-driven path
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints`, on in
-    * [[graft.Sessions.tuned]]).
+    * Every artifact value is a `pin()` result, whose analyzed plan is a
+    * bare `LogicalRDD` over the checkpointed RDD: `unpersist` frees the
+    * localCheckpoint blocks (local mode), and deleting `getCheckpointFile`
+    * removes the reliable checkpoint directory (reliable mode) —
+    * deterministic cleanup instead of waiting on GC + ContextCleaner.
     */
-  def releasePin(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
-    case l: org.apache.spark.sql.execution.LogicalRDD =>
-      val rdd = l.rdd
-      rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        try p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-        catch { case e: Throwable =>
-          System.err.println(s"[memo] WARN: checkpoint dir $f not deleted: ${e.getMessage}")
-        }
+  private def releasePin(ds: DataFrame): Unit = {
+    val rdd = ds.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    rdd.getCheckpointFile.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      try p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+      catch { case e: Throwable =>
+        System.err.println(s"[memo] WARN: checkpoint dir $f not deleted: ${e.getMessage}")
       }
-      rdd.unpersist(blocking = false)
-    case _ => ()
+    }
+    rdd.unpersist(blocking = false)
   }
 }

@@ -18,19 +18,19 @@ object PartitionedLayout {
     * re-writes, so a torn first write is redone, never half-read).
     *
     * Cache keying: the directory embeds a hash of the ABSOLUTE sfDir path
-    * (two sfDirs sharing a basename must not collide) and a fingerprint of
-    * the source parquet (size + mtime) is written next to the layout and
-    * compared before trusting _SUCCESS — a regenerated source invalidates
-    * the cached layout instead of serving stale rows. `synchronized` guards
+    * (two sfDirs sharing a basename must not collide) and the source's
+    * [[Memo.fingerprint]] is written next to the layout and compared before
+    * trusting _SUCCESS — a regenerated source (also one rewritten in place
+    * under a Spark-written directory) invalidates the cached layout instead
+    * of serving stale rows, and a missing source fails loudly. `synchronized` guards
     * this JVM only; cross-process races are resolved by the overwrite-mode
     * rewrite being idempotent.
     */
   def eventsByDay(s: SparkSession, sfDir: String): String = synchronized {
     val abs = new java.io.File(sfDir).getAbsolutePath
-    val src = new java.io.File(abs, "events.parquet")
-    val fingerprint = s"${src.length}:${src.lastModified}"
+    val fingerprint = Memo.fingerprint(sfDir, "events")
     val key = f"${scala.util.hashing.MurmurHash3.stringHash(abs)}%08x"
-    val dir = s"/tmp/graft_layouts/${src.getParentFile.getName}_$key/events_by_day"
+    val dir = s"/tmp/graft_layouts/${new java.io.File(abs).getName}_$key/events_by_day"
     val fpFile = Paths.get(dir + ".fingerprint")
     val fresh = Files.exists(Paths.get(dir, "_SUCCESS")) &&
       Files.exists(fpFile) && Files.readString(fpFile).trim == fingerprint

@@ -29,19 +29,24 @@ class DeterminismSpec extends AnyFunSuite with SparkSpec {
     // count and require identical rows.
     val s7 = spark.newSession()
     s7.conf.set("spark.sql.shuffle.partitions", "7")
-    // q_dedup_components' chain is memoized, and Memo.key embeds the sfDir
-    // STRING plus the CONTEXT identity — which newSession() shares — so
-    // running it on `d` under s7 would be served the base session's
-    // checkpointed artifacts and never execute a single stage at 7
-    // partitions (a vacuous pass). Spell the same directory differently
-    // for the s7 leg: same files, same fingerprint, different key → the
+    // q_dedup_components' chain is memoized, and a memo family holds the
+    // source path as SPELLED plus the CONTEXT identity — which newSession()
+    // shares — so running it on `d` under s7 would be served the base
+    // session's checkpointed artifacts and never execute a single stage at
+    // 7 partitions (a vacuous pass). Spell the same directory differently
+    // for the s7 leg: same files, same fingerprint, different family → the
     // whole chain genuinely replans and runs at shuffle.partitions=7. The
-    // assert pins the mechanism so a future key normalization can't
-    // silently re-vacuate the test.
+    // asserts pin the mechanism on a probe artifact so a future path
+    // normalization can't silently re-vacuate the test.
     val d7 = d + "/."
-    assert(graft.sources.Memo.key(s7, d7, "documents") !=
-      graft.sources.Memo.key(spark, d, "documents"),
-      "d7 spelling no longer yields a distinct memo key; fix the test")
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val probe = graft.sources.Memo.artifact("documents") { (s, _) =>
+      builds.incrementAndGet(); s.range(1).toDF()
+    }
+    probe(spark, d); probe(s7, d)
+    assert(builds.get == 1, "a newSession() sibling must share the base session's artifacts")
+    probe(s7, d7)
+    assert(builds.get == 2, "d7 spelling no longer misses the base session's artifacts; fix the test")
     for (n <- Seq("q_dedup_prefix", "q_dedup_simhash_pairs", "q_dedup_minhash",
         "q_dedup_cap_audit", "q_dedup_components")) {
       val a = SparkEntry.queries(n)(spark, d).collect().toSeq

@@ -24,13 +24,30 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     f.setLastModified(f.lastModified() + 1000)
   }
 
+  /** A one-file source `table` under `dir` whose fingerprint is a function
+    * of `tick`: each new tick is a regenerated snapshot.
+    */
+  private def touch(dir: String, table: String, tick: Int): Unit = {
+    val f = new java.io.File(dir, s"$table.parquet")
+    if (!f.exists) java.nio.file.Files.write(f.toPath, Array[Byte](0))
+    f.setLastModified(1000000000000L + tick * 1000L)
+  }
+
+  // the same root-pin introspection releasePin uses — a pin() result's
+  // analyzed plan is a bare LogicalRDD over the checkpointed RDD
+  private def pinnedRdd(ds: org.apache.spark.sql.DataFrame) =
+    ds.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+  private def persisted(ds: org.apache.spark.sql.DataFrame): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(pinnedRdd(ds).id)
+
   test("key changes when the source parquet is regenerated in place") {
     val dir = java.nio.file.Files.createTempDirectory("graft_memo_key").toString
     writeDocs(dir, Seq((1L, "alpha beta gamma delta")))
-    val k1 = Memo.key(spark, dir, "documents")
+    val (f1, v1) = (Memo.family(spark, dir, "documents"), Memo.fingerprint(dir, "documents"))
     writeDocs(dir, Seq((1L, "totally different words here now")))
-    val k2 = Memo.key(spark, dir, "documents")
-    assert(k1 != k2)
+    val (f2, v2) = (Memo.family(spark, dir, "documents"), Memo.fingerprint(dir, "documents"))
+    assert(f1 == f2, "a regenerated source is the same family")
+    assert(v1 != v2, "a regenerated source is a new version")
   }
 
   test("memoized dedup pipeline serves fresh results after a fixture rewrite") {
@@ -114,27 +131,27 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("superseded pins are evicted on fingerprint rotation: blocks unpersisted, reliable checkpoint dirs deleted, results live") {
-    import graft.sources.Memo.PinOps
-    // the same root-pin introspection releasePin uses — a pin() result's
-    // analyzed plan is a bare LogicalRDD over the checkpointed RDD
-    def pinnedRdd(ds: org.apache.spark.sql.DataFrame) =
-      ds.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
-    val cache = new Memo.Cache[org.apache.spark.sql.DataFrame](Memo.releasePin)
+    val dir = java.nio.file.Files.createTempDirectory("graft_evict_t").toString
+    var rows = 50L
+    var builds = 0
+    val art = Memo.artifact("t") { (s, _) => builds += 1; s.range(rows).toDF("id") }
 
     // LOCAL mode: rotation unpersists the superseded localCheckpoint blocks
-    val v1 = cache.get("t|fp1|sc@x")(spark.range(50).toDF("id").pin())
-    val rdd1 = pinnedRdd(v1)
-    assert(spark.sparkContext.getPersistentRDDs.contains(rdd1.id), "pin must persist blocks")
-    val v2 = cache.get("t|fp2|sc@x")(spark.range(60).toDF("id").pin())
-    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd1.id),
-      "superseded pin's blocks must be unpersisted on rotation")
+    touch(dir, "t", 1)
+    val v1 = art(spark, dir)
+    assert(persisted(v1), "the artifact must pin its build")
+    touch(dir, "t", 2); rows = 60
+    val v2 = art(spark, dir)
+    assert(!persisted(v1), "superseded pin's blocks must be unpersisted on rotation")
     assert(v2.count() == 60, "live entry unaffected by the eviction")
-    assert(cache.size == 1, "cache holds only the live version per family")
+    assert(art.size == 1, "cache holds only the live version per family")
     // same fingerprint re-lookup: no eviction, served entry intact
-    assert(cache.get("t|fp2|sc@x")(fail("must not recompute")).count() == 60)
+    assert(art(spark, dir).count() == 60 && builds == 2, "must not recompute")
     // distinct families never evict each other
-    val other = cache.get("u|fp1|sc@x")(spark.range(7).toDF("id").pin())
-    assert(cache.size == 2 && other.count() == 7 && v2.count() == 60)
+    val dirU = java.nio.file.Files.createTempDirectory("graft_evict_u").toString
+    touch(dirU, "t", 1); rows = 7
+    val other = art(spark, dirU)
+    assert(art.size == 2 && other.count() == 7 && v2.count() == 60 && persisted(v2))
 
     // RELIABLE mode: rotation deletes the superseded checkpoint DIRECTORY
     val ckpDir = java.nio.file.Files.createTempDirectory("graft_evict_ckp").toString
@@ -142,10 +159,13 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     spark.conf.set(modeKey, "reliable")
     try {
       spark.sparkContext.setCheckpointDir(ckpDir)
-      val r1 = cache.get("r|fp1|sc@x")(spark.range(40).toDF("id").pin())
+      val rArt = Memo.artifact("r")((s, _) => s.range(rows).toDF("id"))
+      touch(dir, "r", 1); rows = 40
+      val r1 = rArt(spark, dir)
       val ckpFile1 = pinnedRdd(r1).getCheckpointFile.get
       assert(new java.io.File(new java.net.URI(ckpFile1).getPath).exists, "reliable pin wrote its dir")
-      val r2 = cache.get("r|fp2|sc@x")(spark.range(41).toDF("id").pin())
+      touch(dir, "r", 2); rows = 41
+      val r2 = rArt(spark, dir)
       assert(!new java.io.File(new java.net.URI(ckpFile1).getPath).exists,
         "superseded reliable checkpoint dir must be deleted on rotation")
       assert(r2.count() == 41 && pinnedRdd(r2).getCheckpointFile.isDefined)
@@ -199,12 +219,13 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     // the root session is re-touched between them (as it is between real
     // queries).
     val cache = new Memo.SessionCache[String](maxSessions = 8)
-    assert(cache.get(spark, "k")("root") == "root")
+    val k = Memo.Family("k", "")
+    assert(cache.get(spark, k, "v")("root") == "root")
     val firstIso = spark.newSession()
-    cache.get(firstIso, "k")("iso0")
+    cache.get(firstIso, k, "v")("iso0")
     (1 to 40).foreach { i =>
-      cache.get(spark.newSession(), "k")(s"iso$i") // one-shot churn
-      assert(cache.get(spark, "k")(fail("root entry must survive churn")) == "root")
+      cache.get(spark.newSession(), k, "v")(s"iso$i") // one-shot churn
+      assert(cache.get(spark, k, "v")(fail("root entry must survive churn")) == "root")
     }
     assert(cache.sessionCount <= 8, s"LRU must bound retained sessions, got ${cache.sessionCount}")
     assert(cache.retains(spark), "hot root session must stay resident")
@@ -212,25 +233,24 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("eviction soak: 50 fingerprint rotations per mode leave cache size and storage flat") {
-    import graft.sources.Memo.PinOps
-    def pinnedRdd(ds: org.apache.spark.sql.DataFrame) =
-      ds.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
     val modeKey = "spark.graft.checkpoint.mode"
+    val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    var rows = 0L
 
-    // LOCAL mode: 50 rotations of one pin-backed family — exactly one live
-    // cache entry and exactly one persisted checkpoint RDD at every step.
-    val cache = new Memo.Cache[org.apache.spark.sql.DataFrame](Memo.releasePin)
+    // LOCAL mode: 50 rotations of one artifact — exactly one live cache
+    // entry and exactly one persisted checkpoint RDD at every step.
+    val art = Memo.artifact("soak")((s, _) => s.range(rows).toDF("id"))
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    var lastRdd = -1
+    var last: org.apache.spark.sql.DataFrame = null
     (1 to 50).foreach { i =>
-      val v = cache.get(s"soak|fp$i|sc@x")(spark.range(10 + i).toDF("id").pin())
-      assert(v.count() == 10 + i)
-      lastRdd = pinnedRdd(v).id
-      assert(cache.size == 1, s"rotation $i: cache grew to ${cache.size}")
+      touch(dir, "soak", i); rows = 10 + i
+      last = art(spark, dir)
+      assert(last.count() == 10 + i)
+      assert(art.size == 1, s"rotation $i: cache grew to ${art.size}")
       val extra = spark.sparkContext.getPersistentRDDs.size - persistedBefore
       assert(extra <= 1, s"rotation $i: $extra superseded checkpoint RDDs still persisted")
     }
-    assert(spark.sparkContext.getPersistentRDDs.contains(lastRdd), "live pin must stay persisted")
+    assert(persisted(last), "live pin must stay persisted")
 
     // RELIABLE mode: same soak; the checkpoint DIRECTORY count must stay
     // flat (deterministic releasePin deletes, not GC timing).
@@ -243,11 +263,12 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     spark.conf.set(modeKey, "reliable")
     try {
       spark.sparkContext.setCheckpointDir(ckpDir)
-      val rCache = new Memo.Cache[org.apache.spark.sql.DataFrame](Memo.releasePin)
+      val rArt = Memo.artifact("rsoak")((s, _) => s.range(rows).toDF("id"))
       (1 to 50).foreach { i =>
-        val v = rCache.get(s"rsoak|fp$i|sc@x")(spark.range(10 + i).toDF("id").pin())
+        touch(dir, "rsoak", i); rows = 10 + i
+        val v = rArt(spark, dir)
         assert(v.count() == 10 + i)
-        assert(rCache.size == 1)
+        assert(rArt.size == 1)
         assert(rddDirs() <= 1, s"rotation $i: ${rddDirs()} reliable checkpoint dirs accumulated")
       }
       assert(rddDirs() == 1, "the live pin's checkpoint dir must remain")
@@ -261,11 +282,60 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     val results = (1 to 8).map { _ =>
       pool.submit(new java.util.concurrent.Callable[java.lang.Long] {
         def call(): java.lang.Long =
-          cache.get("k") { Thread.sleep(50); calls.incrementAndGet() }
+          cache.get(Memo.Family("k", ""), "v") { Thread.sleep(50); calls.incrementAndGet() }
       })
     }
     val got = results.map(_.get()).toSet
     pool.shutdown()
     assert(calls.get() == 1L && got == Set(1L: java.lang.Long))
+  }
+
+  test("a source path containing '|' releases the superseded pin on rotation") {
+    // A '|'-joined string key parsed back into (family, version) took a
+    // path fragment for the version here, so the fingerprint leaked into
+    // the family and a rotation never found the pin it superseded.
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_a|b").toString
+    var rows = 3L
+    val art = Memo.artifact("t")((s, _) => s.range(rows).toDF("id"))
+    touch(dir, "t", 1)
+    val v1 = art(spark, dir)
+    touch(dir, "t", 2); rows = 4
+    val v2 = art(spark, dir)
+    assert(!persisted(v1), "superseded pin under a '|' path must be released")
+    assert(art.size == 1 && v2.count() == 4 && persisted(v2))
+  }
+
+  test("a nested artifact builds each level once per fingerprint, and a rotation rebuilds and releases both") {
+    // The outer build reads the inner artifact, so the inner compute runs
+    // inside the outer's computeIfAbsent: each declaration must own its
+    // map (a shared ConcurrentHashMap forbids that nesting).
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_nested").toString
+    var rows = 5L
+    val innerBuilds = new java.util.concurrent.atomic.AtomicInteger
+    val outerBuilds = new java.util.concurrent.atomic.AtomicInteger
+    val inner = Memo.artifact("t") { (s, _) => innerBuilds.incrementAndGet(); s.range(rows).toDF("id") }
+    val outer = Memo.artifact("t") { (s, d) =>
+      outerBuilds.incrementAndGet(); inner(s, d).select((col("id") * 2).as("id2"))
+    }
+    touch(dir, "t", 1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val firsts = try {
+      (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+        def call(): org.apache.spark.sql.DataFrame = outer(spark, dir)
+      })).map(_.get())
+    } finally pool.shutdown()
+    val o1 = firsts.head
+    assert(firsts.forall(_ eq o1), "concurrent callers share one outer value")
+    val i1 = inner(spark, dir)
+    assert((innerBuilds.get, outerBuilds.get) == ((1, 1)), "each level builds once per fingerprint")
+    assert(persisted(i1) && persisted(o1) && pinnedRdd(i1).id != pinnedRdd(o1).id,
+      "each level is its own pin")
+
+    touch(dir, "t", 2); rows = 7
+    val o2 = outer(spark, dir)
+    assert((innerBuilds.get, outerBuilds.get) == ((2, 2)), "a rotation rebuilds both levels")
+    assert(!persisted(i1) && !persisted(o1), "a rotation releases both superseded pins")
+    assert(o2.as[Long].collect().sorted.toSeq == (0L until 7L).map(_ * 2))
+    assert(inner.size == 1 && outer.size == 1)
   }
 }
