@@ -64,7 +64,6 @@ object CompactionDemo {
 
     // 5c. Persistent co-located layout (bucketing ≙ pre-split regions): the
     // recurring user⋈compacted join without a runtime shuffle.
-    spark.sql("DROP TABLE IF EXISTS demo_compacted")
     graft.sources.BucketedTables.writeBucketed(compacted, "demo_compacted", "user_id", 4)
     val bucketedPlan = spark.table("demo_compacted")
       .groupBy("user_id").count().queryExecution.executedPlan.toString

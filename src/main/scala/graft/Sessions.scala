@@ -24,12 +24,12 @@ object Sessions {
       // path; this catches the per-run intermediate pins no artifact owns)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
-
-  def tuned(master: String, cpus: String): SparkSession =
-    shared(master, cpus)
+      // one warehouse, so one SnapshotStore root, whatever the working directory
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-      .getOrCreate()
+
+  def tuned(master: String, cpus: String): SparkSession =
+    shared(master, cpus).getOrCreate()
 
   /** The multi-JVM probe session ([[ClusterProbe]], [[StreamClusterProbe]]):
     * `local-cluster[2,2,1024]` — a REAL standalone scheduler with two

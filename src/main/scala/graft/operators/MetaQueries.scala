@@ -42,7 +42,7 @@ object MetaQueries extends QueryPack {
     }),
 
     // S2b: partition-pruned scan — reads the day-partitioned events layout
-    // (Hive-style day=YYYY-MM-DD dirs, built once per sf by
+    // (Hive-style day=YYYY-MM-DD dirs, built once per source snapshot by
     // [[graft.sources.PartitionedLayout]]) with a 3-day filter that prunes
     // 27 of 30 partitions at the scan (PartitionFilters, pinned in
     // PartitionPruningSpec). Sums run in DECIMAL for order-exactness.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.sources.Memo
+import graft.sources.{BucketedTables, Memo, SnapshotStore}
 import graft.sources.Memo.PinOps
 import graft.functions.TextFns
 
@@ -299,16 +299,6 @@ object TextQueries extends QueryPack {
   private[graft] val candidateEdges = Memo.artifact("documents")((s, d) =>
     bandPairsOf(memoBandBuckets(s, d)).distinct())
 
-  /** Persisted corpus signature tables (q_dedup_incremental) — the NAME
-    * hashes the path + source fingerprint (stable across sessions, fresh on
-    * regeneration); the memo family additionally carries the context
-    * identity so a new session re-registers the table in its own catalog.
-    */
-  private val sigTableCache = new Memo.Cache[String]
-  /** Serializes the (rare) cross-context writes of the shared-name
-    * signature table; see the comment at the write site.
-    */
-  private val sigTableWriteLock = new Object
   /** Band-bucket table memoized per snapshot so [[candidateEdges]] and
     * [[starEdges]] split off ONE banding pipeline run, not two. Tiny: one
     * row per (doc, band).
@@ -636,43 +626,22 @@ object TextQueries extends QueryPack {
   /** Persisted corpus band-key store — (corpus_doc, skey) for the corpus
     * split (doc_id % 10 != 7), bucketed+sorted by skey ("yesterday's
     * state"). Shared by q_dedup_incremental (scoring) and
-    * q_dedup_cluster_incremental (label folding); written once per
-    * (context, source fingerprint).
+    * q_dedup_cluster_incremental (label folding). A table per source,
+    * re-registered over one [[SnapshotStore]] version per source
+    * fingerprint, which the first JVM to need it writes.
     */
-  private def corpusSigTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    sigTableCache.get(Memo.family(s, d, "documents"), Memo.fingerprint(d, "documents")) {
-      // Name is (path, fingerprint)-stable — NOT per-application: an appId
-      // component would leak one full bucketed table per run into the
-      // warehouse (nothing ever drops the previous run's name). The
-      // cross-context DROP/CREATE race (computeIfAbsent is per-key-atomic
-      // and the key is per-context) is closed by a JVM-wide write lock
-      // instead; concurrent contexts then serialize on an overwrite of
-      // IDENTICAL content (same fingerprint → same rows).
-      val name = "graft_dedup_sigs_" +
-        f"${scala.util.hashing.MurmurHash3.stringHash(
-          new java.io.File(d).getAbsolutePath +
-            Memo.fingerprint(d, "documents"))}%08x"
-      sigTableWriteLock.synchronized {
-        // The name encodes (path, fingerprint), so an existing table IS the
-        // content this write would produce — skip the rewrite entirely.
-        // saveAsTable overwrite is delete-then-write, not atomic, so every
-        // skipped rewrite is one fewer missing-file window for a concurrent
-        // reader (and a warm run saves the write). Scope honestly: the
-        // catalog is per-JVM (in-memory, non-Hive), so a FRESH JVM sharing
-        // the warehouse still rebuilds once and can race a reader in
-        // another JVM during that first write — full cross-JVM safety needs
-        // a shared metastore or a rename-swap layout, both out of scope for
-        // the fixture warehouse. CTAS commits catalog metadata after the
-        // data write, so a crashed write never registers and the rebuild
-        // still triggers.
-        if (!s.catalog.tableExists(name))
-          graft.sources.BucketedTables.writeBucketed(
-            bandKeysOf(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7))
-              .withColumnRenamed("doc_id", "corpus_doc"),
-            name, "skey", 8)
-      }
-      name
+  private val sigTables = new Memo.Cache[String]
+  private def corpusSigTable(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val version = Memo.fingerprint(d, "documents")
+    sigTables.get(Memo.family(s, d, "documents"), version) {
+      val table = SnapshotStore.family("graft_dedup_sigs", d, "documents")
+      BucketedTables.writeBucketed(
+        bandKeysOf(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7))
+          .withColumnRenamed("doc_id", "corpus_doc"),
+        table, "skey", 8, version)
+      table
     }
+  }
 
   /** Corpus-only cluster labels (doc_id, cluster_id) — "yesterday's" label
     * store the incremental fold starts from: [[Components]] over the
@@ -1401,7 +1370,7 @@ object TextQueries extends QueryPack {
     "q_dedup_incremental" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // One-time corpus-side layout (in production: yesterday's persisted
-      // state) — written once per (context, source fingerprint); the timed query is ONLY what
+      // state) — committed once per source fingerprint; the timed query is ONLY what
       // a daily run pays: shingle the new snapshot, join the bucketed store.
       val table = corpusSigTable(s, d)
       val fresh = bandKeysOf(docs.filter(col("doc_id") % 10 === 7))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table layout for co-located joins (SURVEY.md §4.3): persisting
   * both sides of a recurring fact⋈fact join bucketed (and sorted) by the
@@ -12,50 +12,31 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object BucketedTables {
 
-  /** Persist `df` bucketed+sorted by `key` as managed table `name`.
-    *
-    * The in-memory catalog forgets tables between sessions while the
-    * warehouse directory persists, and Overwrite refuses a location the
-    * catalog doesn't own (LOCATION_ALREADY_EXISTS) — so drop both the
-    * registration and any orphaned location first.
+  /** Persist `df` bucketed+sorted by `key` as table `name`, over `version`
+    * of the [[SnapshotStore]] family `name` — a fresh version by default; a
+    * committed one is reused, not rewritten. The table is re-registered over
+    * the committed version before the previous one is retired, so a failed
+    * write leaves the previous table readable.
     */
-  def writeBucketed(df: DataFrame, name: String, key: String, buckets: Int): Unit = {
-    // The name is interpolated into SQL and joined onto the warehouse path
-    // below — restrict it to identifier characters so a crafted name can
-    // neither escape the DROP statement nor point the recursive delete
-    // outside the warehouse; the leading character must be non-numeric
-    // because a digit-led identifier ("1tbl") fails the unquoted DROP/CREATE
-    // parse instead of this require. Lowercased because the catalog
-    // lowercases managed-table locations; a mixed-case name would miss the
-    // orphan dir.
+  def writeBucketed(df: DataFrame, name: String, key: String, buckets: Int,
+      version: String = java.util.UUID.randomUUID().toString): Unit = {
+    // The name is interpolated into SQL and names a store directory: only
+    // identifier characters, and not digit-led ("1tbl" fails the unquoted
+    // DROP/CREATE parse instead of this require). Lowercased like the catalog.
     require(name.matches("[a-zA-Z_][a-zA-Z0-9_]*"), s"invalid table name: $name")
     val table = name.toLowerCase(java.util.Locale.ROOT)
     val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(loc)
+    val scratch = s"graft_scratch_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    SnapshotStore.commit(spark, table, version, publish = dir => {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      // the column list is required: Spark refuses a bucket spec without one
+      spark.sql(s"CREATE TABLE $table (${df.schema.toDDL}) USING parquet CLUSTERED BY ($key) " +
+        s"SORTED BY ($key) INTO $buckets BUCKETS LOCATION '${dir.replace("\\", "\\\\").replace("'", "\\'")}'")
+    }) { dir =>
+      // Spark writes bucketed files only for a catalog table: a scratch
+      // table with a path, whose drop leaves the files in `dir`
+      try df.write.bucketBy(buckets, key).sortBy(key).format("parquet").option("path", dir).saveAsTable(scratch)
+      finally spark.sql(s"DROP TABLE IF EXISTS $scratch")
     }
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Bucket-local join of two tables persisted with [[writeBucketed]] on the
-    * same key and bucket count.
-    */
-  def colocatedJoin(spark: SparkSession, left: String, right: String,
-      leftKey: String, rightKey: String): DataFrame = {
-    val l = spark.table(left)
-    val r = spark.table(right)
-    l.join(r, l(leftKey) === r(rightKey))
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *    checkpoints).
   *  - RACES: TrieMap.getOrElseUpdate is not atomic for side effects — two
   *    concurrent first callers could both run an expensive pipeline, or
-  *    both DROP/CREATE the same warehouse table.
+  *    both write the same persisted table.
   *    ConcurrentHashMap.computeIfAbsent runs the compute at most once per
   *    key, with later callers for that key blocking until it finishes.
   */

@@ -135,7 +135,7 @@ object StreamingDaemon {
     * LATEST pointer atomically (tmp + ATOMIC_MOVE, the CursorCheckpoint
     * discipline) — readers never observe a half-written store, and the
     * prior snapshot stays valid for in-flight reads. Old snapshots are
-    * kept: nothing deletes them yet (retention is ROADMAP item 4).
+    * kept: nothing deletes them yet (retention is ROADMAP item 1).
     */
   private[graft] def applyMergeBatch(
       spark: SparkSession, storeDir: String,
@@ -271,7 +271,7 @@ object StreamingDaemon {
     * the store side is a skey/hash-keyed join whose prior-batch read prunes
     * on the `batch` partition column. In production the store is compacted
     * periodically into the bucketed signature table q_dedup_incremental
-    * reads (TextQueries.sigTable), so the join stays Exchange-free on the
+    * reads (TextQueries.corpusSigTable), so the join stays Exchange-free on the
     * corpus side; the per-batch `batch=N` directories here are the
     * between-compactions delta. batchId-keyed overwrite of BOTH the data
     * and the signature directories makes replays idempotent (at-least-once
