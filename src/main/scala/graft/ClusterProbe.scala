@@ -40,7 +40,7 @@ object ClusterProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val ckpDir = java.nio.file.Files.createTempDirectory("graft_cluster_ckp").toString
+    val ckpDir = ProbeKill.tempDir("graft_cluster_ckp")
 
     // Phase 1: local-mode truth (own context; stopped before the cluster one)
     val sLocal = Sessions.tuned("local[4]", "4")
@@ -124,7 +124,7 @@ object ClusterProbe {
     // whole pin chain re-runs cold; the killer fires on the task start a
     // quarter of the way into the task-start count measured in phase 2's
     // cold run and SIGKILLs the executor that task launched on.
-    val dirA = java.nio.file.Files.createTempDirectory("graft_probe_rotate").toString
+    val dirA = ProbeKill.tempDir("graft_probe_rotate")
     for (t <- Seq("documents", "embeddings"))
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sfDir/$t.parquet"),

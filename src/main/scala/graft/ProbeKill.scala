@@ -31,6 +31,16 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeKill {
 
+  /** A fresh directory under the system temp dir for a probe's inputs,
+    * outputs or checkpoints, deleted with its contents when the probe's JVM
+    * exits, pass or fail.
+    */
+  def tempDir(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
+
   /** Executor-JVM pids of this application, keyed by Spark executor id.
     * pgrep reads /proc directly (ProcessHandle.descendants proved
     * unreliable for Worker-spawned processes); matching on the appId keeps

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.SnapshotStore
 import graft.streaming.StreamingDaemon
 
 /** Multi-JVM validation of the STREAMING daemon's fault tolerance — the
@@ -96,7 +97,7 @@ object StreamClusterProbe {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[StreamingDaemon.LwwUpdate], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+          SnapshotStore.commit(SnapshotStore.local(s"$outDir/batch=$batchId"))(batch.write.parquet(_))
           ()
       }
       .start()
@@ -105,7 +106,7 @@ object StreamClusterProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
+    def tmp(tag: String) = ProbeKill.tempDir(tag)
     val inDir = tmp("scp_docs_in")
     val evDir = tmp("scp_ev_in")
 

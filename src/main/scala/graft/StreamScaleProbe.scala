@@ -114,8 +114,7 @@ object StreamScaleProbe {
     walk(new java.io.File(path))
   }
 
-  private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(tag).toString
+  private def tmp(tag: String) = ProbeKill.tempDir(tag)
 
   /** Write `df` as `files` mtime-ordered single-part parquet files so the
     * file stream (maxFilesPerTrigger=1) replays them as `files` deterministic

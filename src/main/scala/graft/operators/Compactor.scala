@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.SnapshotStore
 
 /** The full compaction job (SURVEY.md §2.1 S5 + §3.2): what the reference
   * triggers remotely via `hadmin.majorCompact`
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   *   read → LWW dedup (one hash-agg shuffle, map-side partial) →
   *   repartitionByRange(k, key) (range shards ≙ HBase regions) →
   *   sortWithinPartitions(key) (HFile sorted-run invariant) →
-  *   write maxRecordsPerFile
+  *   write maxRecordsPerFile → commit (one atomic rename)
   *
   * At 100 TB: range partitioning gives balanced shards via sampled bounds,
   * the sort is per-partition (no global sort barrier), and the output file
@@ -23,7 +24,9 @@ import org.apache.spark.sql.functions._
 object Compactor {
 
   /** One compaction pass over a keyed, versioned table. Returns the compacted
-    * frame (also written to `outDir` if given).
+    * frame. If `outDir` is given, the frame is also committed there through
+    * [[SnapshotStore]]: a kill leaves no `outDir` or a complete one. The
+    * directory must not exist yet; graft never rewrites one in place.
     */
   def compact(
       df: DataFrame,
@@ -38,9 +41,10 @@ object Compactor {
       .repartitionByRange(math.max(numFiles, 1), keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
     outDir.foreach { dir =>
-      val w = shaped.write.mode(SaveMode.Overwrite)
-      (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w)
-        .parquet(dir)
+      SnapshotStore.create(dir) { tmp =>
+        val w = shaped.write
+        (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w).parquet(tmp)
+      }
     }
     shaped
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{FileInputStream, FileOutputStream}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.util.Properties
 import scala.util.{Failure, Success, Try}
 
@@ -61,23 +61,19 @@ object CompactionConfig {
 }
 
 /** Durable rolling-cursor checkpoint — the reference's `regionindex`
-  * (QHBaseCompact.java:29-34,102-115) as its own small file with atomic
-  * replace. Used by batch orchestration; Structured Streaming paths use the
-  * engine checkpointLocation instead (SURVEY.md §2.10).
+  * (QHBaseCompact.java:29-34,102-115) as its own small driver-local file,
+  * replaced atomically by [[SnapshotStore.point]]. Used by batch
+  * orchestration; Structured Streaming paths use the engine
+  * checkpointLocation instead (SURVEY.md §2.10).
   */
 final class CursorCheckpoint(path: String) {
-  private val target: Path = Paths.get(path)
+  private val target: Path = SnapshotStore.local(path)
 
   def read(): Int =
     if (Files.exists(target)) new String(Files.readAllBytes(target), "UTF-8").trim.toInt
     else 0
 
-  def write(cursor: Int): Unit = {
-    val tmp = Files.createTempFile(
-      Option(target.getParent).getOrElse(Paths.get(".")), ".cursor", ".tmp")
-    Files.write(tmp, cursor.toString.getBytes("UTF-8"))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def write(cursor: Int): Unit = SnapshotStore.point(target, cursor.toString)
 
   /** Advance with wrap-around — the reference's `if (i >= size) i = 0`
     * (QHBaseCompact.java:140-143).

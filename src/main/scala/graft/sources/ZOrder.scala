@@ -35,15 +35,14 @@ object ZOrder {
   }
 
   /** Write `df` as `nFiles` parquet files range-partitioned and sorted by
-    * the z-value of (`a`, `b`) — the Z-order OPTIMIZE. The z column is an
+    * the z-value of (`a`, `b`) — the Z-order OPTIMIZE — committed at `path`
+    * through [[SnapshotStore]], which must not exist yet. The z column is an
     * unnamed shuffle/sort key only; the written schema is unchanged.
     */
   def writeZOrdered(df: DataFrame, a: String, b: String, bits: Int,
                     nFiles: Int, path: String): Unit = {
     val z = zvalue(col(a), col(b), bits)
-    df.repartitionByRange(nFiles, z)
-      .sortWithinPartitions(z)
-      .write.mode("overwrite").parquet(path)
+    SnapshotStore.create(path)(df.repartitionByRange(nFiles, z).sortWithinPartitions(z).write.parquet(_))
   }
 
   /** Per-file [min, max] of `c1` and `c2` for a written layout — the

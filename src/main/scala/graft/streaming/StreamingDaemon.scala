@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.operators.Compaction
+import graft.sources.SnapshotStore
 
 /** Structured-Streaming re-expression of the reference daemon loop
   * (/root/reference/src/main/java/com/qunar/dba/QHBaseCompact.java:135-195;
@@ -16,8 +18,15 @@ import graft.operators.Compaction
   *   - one region per tick (ref :146, README.md:8-9) → `maxFilesPerTrigger=1`
   *   - `regionindex` properties checkpoint (ref :102-115) → `checkpointLocation`
   *     (exactly-once progress, no hand-rolled cursor)
+  *   - majorCompact per region (ref :167) → [[mergeSink]]: each micro-batch
+  *     upserts into one keyed LWW store, committed as a new snapshot
   *   - quickPoll completion detection (ref :62-73) → obsolete: a foreachBatch
   *     action's return IS completion
+  *
+  * Every directory a sink writes is committed through
+  * [[graft.sources.SnapshotStore]] (a tmp directory and one atomic rename),
+  * so a kill mid-batch leaves the previous state readable and a replay of
+  * the batch finds either nothing or the complete directory.
   *
   * Plus the event-time layer the reference lacks: watermark + windowed
   * aggregation with late-data handling.
@@ -70,50 +79,15 @@ object StreamingDaemon {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
 
-  /** The daemon: per micro-batch, run the LWW compaction over the new file —
-    * the reference's majorCompact call as a foreachBatch job. Checkpointed,
-    * so a restart resumes from the last completed batch (the reference's
-    * `storeNewConfig` cursor, minus the crash window between act and persist).
-    *
-    * foreachBatch is at-least-once: a crash after the write but before the
-    * checkpoint commit replays the same batchId on restart. The sink is
-    * idempotent per batch — each batch OVERWRITES its own `batch=$batchId`
-    * directory (the standard batchId-keyed idempotence pattern), so a replay
-    * rewrites identical rows instead of appending duplicates.
-    */
-  def compactionLoop(
-      spark: SparkSession,
-      inDir: String,
-      outDir: String,
-      checkpointDir: String,
-      keys: Seq[String],
-      orderCols: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val static = spark.read.parquet(inDir)
-    source(spark, inDir, static)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Compaction
-          .lastWriteWins(batch, keys, orderCols)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
   /** Current snapshot of the [[mergeSink]] store: the directory named by the
     * atomic LATEST pointer, or an empty frame of `schemaFrom`'s schema
     * before the first commit.
     */
   private[graft] def readMergeStore(
       spark: SparkSession, storeDir: String, schemaFrom: DataFrame): DataFrame = {
-    val ptr = java.nio.file.Paths.get(s"$storeDir/LATEST")
-    if (java.nio.file.Files.exists(ptr))
-      spark.read.parquet(
-        s"$storeDir/${new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim}")
+    val ptr = SnapshotStore.local(storeDir).resolve("LATEST")
+    if (Files.exists(ptr))
+      spark.read.parquet(s"$storeDir/${new String(Files.readAllBytes(ptr), "UTF-8").trim}")
     else schemaFrom.limit(0)
   }
 
@@ -124,56 +98,46 @@ object StreamingDaemon {
     *  1. an applied-batch LEDGER — marker file per batchId, committed AFTER
     *     the snapshot pointer swap — so a clean replay of batch N is skipped
     *     without touching data;
-    *  2. CONVERGENT merge math for the torn window (crash between pointer
-    *     swap and marker): the merge is keyed LWW upsert (batch rows
-    *     replace same-key store rows; within-batch versions collapse by
-    *     `orderCols` first), so re-merging the identical batch against the
-    *     already-merged snapshot rewrites the same rows — content idempotent
-    *     even when the ledger check cannot short-circuit.
+    *  2. a SNAPSHOT COMMIT for the torn window (crash after `snap-N` is
+    *     committed, before the marker): `snap-N` is committed through
+    *     [[SnapshotStore.commit]], which reuses a committed directory
+    *     instead of writing. That is correct because a replay of batch N
+    *     merges the same prior snapshot (N−1, or N once the pointer swap
+    *     has landed; the keyed LWW upsert converges on it) with the same
+    *     batch, so its content is what `snap-N` already holds, and it never
+    *     overwrites a directory that is being read.
     *
-    * Each commit writes a NEW snapshot directory (`snap-N`) and swaps the
-    * LATEST pointer atomically (tmp + ATOMIC_MOVE, the CursorCheckpoint
-    * discipline) — readers never observe a half-written store, and the
-    * prior snapshot stays valid for in-flight reads. Old snapshots are
-    * kept: nothing deletes them yet (retention is ROADMAP item 1).
+    * LATEST is swapped with [[SnapshotStore.point]] after the commit:
+    * readers never observe a half-written store, and the prior snapshot
+    * stays valid for in-flight reads. A write that fails leaves no `snap-N`
+    * and LATEST and the ledger untouched. Old snapshots are kept: nothing
+    * deletes them yet (retention is ROADMAP item 1).
     */
   private[graft] def applyMergeBatch(
       spark: SparkSession, storeDir: String,
       keys: Seq[String], orderCols: Seq[String],
       batch: DataFrame, batchId: Long): Boolean = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val marker = Paths.get(s"$storeDir/_applied/batch-$batchId")
+    val store = SnapshotStore.local(storeDir)
+    val marker = store.resolve(s"_applied/batch-$batchId")
     if (Files.exists(marker)) return false
     val prior = readMergeStore(spark, storeDir, batch)
     val batchLww = Compaction.lastWriteWins(batch, keys, orderCols)
     val merged = prior
       .join(batchLww.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(batchLww)
-    // snapshot dirs are unique per APPLICATION, not per batch: a torn
-    // replay of batch N re-merges while READING the snap its first attempt
-    // pointed LATEST at — overwriting that same dir would corrupt the read.
-    var snap = s"snap-$batchId"
-    var attempt = 0
-    while (Files.exists(Paths.get(s"$storeDir/$snap"))) {
-      attempt += 1; snap = s"snap-$batchId-r$attempt"
-    }
-    merged.write.mode("overwrite").parquet(s"$storeDir/$snap")
-    val tmp = Files.createTempFile(Paths.get(storeDir), ".latest", ".tmp")
-    Files.write(tmp, snap.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(s"$storeDir/LATEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val snap = s"snap-$batchId"
+    SnapshotStore.commit(store.resolve(snap))(merged.write.parquet(_))
+    SnapshotStore.point(store.resolve("LATEST"), snap)
     Files.createDirectories(marker.getParent)
     Files.write(marker, batchId.toString.getBytes("UTF-8"))
     true
   }
 
-  /** The idempotent foreachBatch MERGE sink — [[compactionLoop]]'s
-    * exactly-once twin: instead of one output dir per batch, every
-    * micro-batch UPSERTS into a single keyed store (the batch
-    * q_merge_upsert semantics), and replays are no-ops via
-    * [[applyMergeBatch]]'s ledger + convergent merge. This is the stream →
-    * serving-table bridge: the store is always one consistent LWW snapshot
-    * of everything ingested so far.
+  /** The idempotent foreachBatch MERGE sink: every micro-batch UPSERTS into
+    * a single keyed store (the batch q_merge_upsert semantics), and replays
+    * are no-ops via [[applyMergeBatch]]'s ledger and snapshot commit. This
+    * is the stream → serving-table bridge: the store is always one
+    * consistent LWW snapshot of everything ingested so far.
     */
   def mergeSink(
       spark: SparkSession,
@@ -183,7 +147,7 @@ object StreamingDaemon {
       keys: Seq[String],
       orderCols: Seq[String],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
+    Files.createDirectories(SnapshotStore.local(storeDir))
     val static = spark.read.parquet(inDir)
     source(spark, inDir, static)
       .writeStream
@@ -218,27 +182,24 @@ object StreamingDaemon {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(keys)
 
-  /** One side of the dynamic signature store: `dir/batch=N` parquet written
-    * per micro-batch. Reading the root infers the `batch` partition column;
-    * `excludeBatch` drops the CURRENT batch's own directory so an
-    * at-least-once replay of batch N is gated exactly as its first attempt
-    * was — never against its own earlier partial write. Partition pruning
-    * keeps the exclusion a metadata operation, not a scan.
+  /** One side of the dynamic signature store: `dir/batch=N` parquet
+    * committed per micro-batch. Reading the root infers the `batch`
+    * partition column; `excludeBatch` drops the CURRENT batch's own
+    * directory so an at-least-once replay of batch N is gated exactly as its
+    * first attempt was — never against its own earlier output. Partition
+    * pruning keeps the exclusion a metadata operation, not a scan. A
+    * `batch=` directory exists only once committed, and an in-flight or
+    * killed `.tmp-*` one is hidden from Spark's file index.
     */
   private def readSigStore(
       spark: SparkSession, dir: String, empty: DataFrame,
       cols: Seq[String], excludeBatch: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // A batch= dir must hold a COMMITTED part file to count: a crash between
-    // directory creation and commit leaves only _temporary inside, and
-    // schema inference over zero footers would throw on every replay of
-    // that batch — the at-least-once recovery path must tolerate the torn
-    // write it exists to recover from (its own overwrite then repairs it).
-    val hasCommitted = fs.exists(path) &&
-      fs.listStatus(path).exists(s => s.getPath.getName.startsWith("batch=") &&
-        fs.listStatus(s.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-    if (!hasCommitted) empty.select(cols.map(col): _*)
+    val root = SnapshotStore.local(dir)
+    val hasBatch = Files.isDirectory(root) && {
+      val it = Files.list(root)
+      try it.anyMatch(_.getFileName.toString.startsWith("batch=")) finally it.close()
+    }
+    if (!hasBatch) empty.select(cols.map(col): _*)
     else spark.read.parquet(dir)
       .filter(col("batch") =!= excludeBatch)
       .select(cols.map(col): _*)
@@ -273,9 +234,11 @@ object StreamingDaemon {
     * periodically into the bucketed signature table q_dedup_incremental
     * reads (TextQueries.corpusSigTable), so the join stays Exchange-free on the
     * corpus side; the per-batch `batch=N` directories here are the
-    * between-compactions delta. batchId-keyed overwrite of BOTH the data
-    * and the signature directories makes replays idempotent (at-least-once
-    * foreachBatch → exactly-once directory contents).
+    * between-compactions delta. Each batch commits its data and signature
+    * `batch=N` directories through [[SnapshotStore.commit]]; a replay
+    * reuses every one already committed and writes only the missing ones,
+    * which the `excludeBatch` gate makes identical to the first attempt's
+    * (at-least-once foreachBatch → exactly-once directory contents).
     *
     * `corpusEmbSigs` (optional): the corpus-side EMBEDDING sign-LSH index
     * (ekey, embedding) — when supplied, the gate also catches SEMANTIC
@@ -385,22 +348,16 @@ object StreamingDaemon {
             .join(nearDup.union(exactDup).union(semDup).distinct(),
               Seq("doc_id"), "left_anti")
             .persist()
+          def commitBatch(dir: String)(df: DataFrame): Unit =
+            SnapshotStore.commit(SnapshotStore.local(s"$dir/batch=$batchId"))(df.write.parquet(_))
           try {
-            accepted.drop("content_hash")
-              .write.mode("overwrite")
-              .parquet(s"$outDir/batch=$batchId")
-            sigs.join(accepted.select(col("doc_id")), "doc_id")
-              .select(col("skey"))
-              .write.mode("overwrite")
-              .parquet(s"$sigStoreDir/skeys/batch=$batchId")
-            accepted.select(col("content_hash"))
-              .write.mode("overwrite")
-              .parquet(s"$sigStoreDir/hashes/batch=$batchId")
+            commitBatch(outDir)(accepted.drop("content_hash"))
+            commitBatch(s"$sigStoreDir/skeys")(
+              sigs.join(accepted.select(col("doc_id")), "doc_id").select(col("skey")))
+            commitBatch(s"$sigStoreDir/hashes")(accepted.select(col("content_hash")))
             bsigs.foreach { bs =>
-              bs.join(accepted.select(col("doc_id")), "doc_id")
-                .select(col("ekey"), col("embedding"))
-                .write.mode("overwrite")
-                .parquet(s"$sigStoreDir/ekeys/batch=$batchId")
+              commitBatch(s"$sigStoreDir/ekeys")(
+                bs.join(accepted.select(col("doc_id")), "doc_id").select(col("ekey"), col("embedding")))
             }
           } finally accepted.unpersist() // a failed write must not pin the cache across retries
         } finally {

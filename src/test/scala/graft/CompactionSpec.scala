@@ -57,7 +57,7 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compact() writes range-sharded key-sorted files (HFile invariant)") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact").resolve("out").toString
     val rnd = new Random(1)
     val df = versions(Seq.fill(500)(
       (rnd.nextInt(100).toLong, "f", rnd.nextInt(10).toLong, rnd.nextDouble())))
@@ -77,6 +77,19 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
     // and it is the LWW result: one row per key
     val out = spark.read.parquet(dir)
     assert(out.count() == out.select("key").distinct().count())
+  }
+
+  test("compact() into an existing directory throws and leaves its files untouched") {
+    val dir = tempDir("compact-existing").resolve("store")
+    val old = versions(Seq((1L, "f", 10L, 1.0), (2L, "f", 20L, 2.0)))
+    old.coalesce(1).write.parquet(dir.toString)
+    def files() = dir.toFile.listFiles().map(f => f.getName -> ((f.length, f.lastModified))).toMap
+    val before = files()
+    val e = intercept[IllegalArgumentException](Compactor.compact(
+      versions(Seq((3L, "f", 30L, 3.0))), Seq("key"), Seq("ts"), numFiles = 1, outDir = Some(dir.toString)))
+    assert(e.getMessage.contains(dir.toString))
+    assert(files() == before)
+    assert(spark.read.parquet(dir.toString).orderBy("key").collect().toSeq == old.orderBy("key").collect().toSeq)
   }
 
   test("planFileCount mirrors the documented size-threshold intent") {

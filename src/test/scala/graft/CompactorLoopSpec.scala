@@ -21,7 +21,7 @@ class CompactorLoopSpec extends AnyFunSuite with SparkSpec {
 
   test("two ticks: classify → cursor → compact → change fires → checkpoint advances and wraps") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-loop").toString
+    val work = tempDir("graft-loop").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
 
     // Two "stores" (≙ regions), each deliberately fragmented into many

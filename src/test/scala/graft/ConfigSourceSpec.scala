@@ -5,10 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{CompactionConfig, CursorCheckpoint}
 
-class ConfigSourceSpec extends AnyFunSuite {
+class ConfigSourceSpec extends AnyFunSuite with SparkSpec {
+
+  private lazy val cfgDir = tempDir("cfg")
 
   private def writeProps(body: String): String = {
-    val f = Files.createTempFile("cfg", ".properties")
+    val f = Files.createTempFile(cfgDir, "cfg", ".properties")
     Files.write(f, body.getBytes("UTF-8"))
     f.toString
   }
@@ -43,7 +45,7 @@ class ConfigSourceSpec extends AnyFunSuite {
   }
 
   test("cursor checkpoint: read-empty=0, atomic write, wrap-around advance") {
-    val dir = Files.createTempDirectory("ckp")
+    val dir = tempDir("ckp")
     val ckp = new CursorCheckpoint(s"$dir/cursor")
     assert(ckp.read() == 0)
     ckp.write(99)

@@ -12,7 +12,7 @@ class JsonlIngestSpec extends AnyFunSuite with SparkSpec {
     .add("doc_id", LongType).add("text", StringType).add("lang", StringType)
 
   private def writeFixture(lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("jsonl")
+    val dir = tempDir("jsonl")
     Files.write(dir.resolve("part-0.jsonl"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString

@@ -11,7 +11,7 @@ class MarkBucketsSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("markbuckets").toString
+    val d = tempDir("markbuckets").toString
     // 110 clones (over-cap bucket) + three 2-doc near-dup families (small
     // buckets) + noise singletons.
     val template = "alpha beta gamma delta epsilon zeta eta theta"

@@ -41,7 +41,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     spark.sparkContext.getPersistentRDDs.contains(pinnedRdd(ds).id)
 
   test("key changes when the source parquet is regenerated in place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_key").toString
+    val dir = tempDir("graft_memo_key").toString
     writeDocs(dir, Seq((1L, "alpha beta gamma delta")))
     val (f1, v1) = (Memo.family(spark, dir, "documents"), Memo.fingerprint(dir, "documents"))
     writeDocs(dir, Seq((1L, "totally different words here now")))
@@ -51,7 +51,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("memoized dedup pipeline serves fresh results after a fixture rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_q").toString
+    val dir = tempDir("graft_memo_q").toString
     // Snapshot 1: docs 1 and 2 are identical -> one near-dup cluster {1, 2}.
     writeDocs(dir, Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -73,8 +73,8 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
 
   test("pin() honors spark.graft.checkpoint.mode: local by default, reliable writes the checkpoint dir, results identical") {
     import graft.sources.Memo.PinOps
-    val ckpDir = java.nio.file.Files.createTempDirectory("graft_pin_ckp").toString
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin_q").toString
+    val ckpDir = tempDir("graft_pin_ckp").toString
+    val dir = tempDir("graft_pin_q").toString
     writeDocs(dir, Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
@@ -131,7 +131,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("superseded pins are evicted on fingerprint rotation: blocks unpersisted, reliable checkpoint dirs deleted, results live") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evict_t").toString
+    val dir = tempDir("graft_evict_t").toString
     var rows = 50L
     var builds = 0
     val art = Memo.artifact("t") { (s, _) => builds += 1; s.range(rows).toDF("id") }
@@ -148,13 +148,13 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     // same fingerprint re-lookup: no eviction, served entry intact
     assert(art(spark, dir).count() == 60 && builds == 2, "must not recompute")
     // distinct families never evict each other
-    val dirU = java.nio.file.Files.createTempDirectory("graft_evict_u").toString
+    val dirU = tempDir("graft_evict_u").toString
     touch(dirU, "t", 1); rows = 7
     val other = art(spark, dirU)
     assert(art.size == 2 && other.count() == 7 && v2.count() == 60 && persisted(v2))
 
     // RELIABLE mode: rotation deletes the superseded checkpoint DIRECTORY
-    val ckpDir = java.nio.file.Files.createTempDirectory("graft_evict_ckp").toString
+    val ckpDir = tempDir("graft_evict_ckp").toString
     val modeKey = "spark.graft.checkpoint.mode"
     spark.conf.set(modeKey, "reliable")
     try {
@@ -178,7 +178,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     // absolute count).
     spark.conf.set(modeKey, "reliable")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_evict_q").toString
+      val dir = tempDir("graft_evict_q").toString
       def rddDirs(): Int = {
         def walk(f: java.io.File): Int =
           if (f.isDirectory) (if (f.getName.startsWith("rdd-")) 1 else 0) + f.listFiles().map(walk).sum
@@ -234,7 +234,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
 
   test("eviction soak: 50 fingerprint rotations per mode leave cache size and storage flat") {
     val modeKey = "spark.graft.checkpoint.mode"
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val dir = tempDir("graft_soak").toString
     var rows = 0L
 
     // LOCAL mode: 50 rotations of one artifact — exactly one live cache
@@ -254,7 +254,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
 
     // RELIABLE mode: same soak; the checkpoint DIRECTORY count must stay
     // flat (deterministic releasePin deletes, not GC timing).
-    val ckpDir = java.nio.file.Files.createTempDirectory("graft_soak_ckp").toString
+    val ckpDir = tempDir("graft_soak_ckp").toString
     def rddDirs(): Int = {
       val kids = new java.io.File(ckpDir).listFiles()
       if (kids == null) 0
@@ -294,7 +294,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     // A '|'-joined string key parsed back into (family, version) took a
     // path fragment for the version here, so the fingerprint leaked into
     // the family and a rotation never found the pin it superseded.
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_a|b").toString
+    val dir = tempDir("graft_memo_a|b").toString
     var rows = 3L
     val art = Memo.artifact("t")((s, _) => s.range(rows).toDF("id"))
     touch(dir, "t", 1)
@@ -309,7 +309,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     // The outer build reads the inner artifact, so the inner compute runs
     // inside the outer's computeIfAbsent: each declaration must own its
     // map (a shared ConcurrentHashMap forbids that nesting).
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_nested").toString
+    val dir = tempDir("graft_memo_nested").toString
     var rows = 5L
     val innerBuilds = new java.util.concurrent.atomic.AtomicInteger
     val outerBuilds = new java.util.concurrent.atomic.AtomicInteger

@@ -13,7 +13,7 @@ import graft.sources.SnapshotStore
 class PartitionPruningSpec extends AnyFunSuite with SparkSpec {
 
   test("day-partitioned layout prunes at the scan") {
-    val dir = Files.createTempDirectory("events-by-day").toString
+    val dir = tempDir("events-by-day").toString
     Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -43,8 +43,8 @@ class PartitionPruningSpec extends AnyFunSuite with SparkSpec {
     // A directory's own length is constant and its mtime moves only when
     // entries are added or removed: a size + mtime stat of the directory
     // cannot see a part file rewritten in place under the same name.
-    val sf = Files.createTempDirectory("events-inplace").toString
-    val next = Files.createTempDirectory("events-next").toString
+    val sf = tempDir("events-inplace").toString
+    val next = tempDir("events-next").toString
     val layouts = SnapshotStore.root(spark)
       .resolve(SnapshotStore.family("events_by_day", sf, "events")).toFile
     try {

@@ -12,7 +12,7 @@ class PrefixStarSpec extends AnyFunSuite with SparkSpec {
 
   test("over-cap bucket emits sz-1 verified star edges to the min-id rep; small buckets still all-pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prefixstar").toString
+    val dir = tempDir("prefixstar").toString
     // 120 identical docs (every prefix-token bucket holds all 120 → over
     // cap) + one small family of 3 near-identical docs (its rare tokens
     // bucket at sz=3 → all-pairs path) + noise docs with unique tokens.

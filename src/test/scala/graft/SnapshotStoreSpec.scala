@@ -76,8 +76,43 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a pointer swap replaces the whole value and leaves no tmp file") {
+    val dir = tempDir("pointer")
+    val ptr = dir.resolve("LATEST")
+    SnapshotStore.point(ptr, "snap-10")
+    SnapshotStore.point(ptr, "snap-9")
+    assert(Files.readString(ptr) == "snap-9")
+    assert(entries(dir) == Set("LATEST"))
+  }
+
+  test("only driver-local paths commit: another scheme throws, naming the path") {
+    assert(SnapshotStore.local("file:///tmp/x") == Paths.get("/tmp/x"))
+    assert(SnapshotStore.local("/tmp/x") == Paths.get("/tmp/x"))
+    val e = intercept[IllegalArgumentException](SnapshotStore.local("hdfs://nn/store"))
+    assert(e.getMessage.contains("hdfs://nn/store"))
+  }
+
+  test("only SnapshotStore commits a directory: no overwrite or rename elsewhere in operators, sources, streaming") {
+    // One commit protocol: every writer of these packages goes through
+    // SnapshotStore.commit / point. Scans the sources for the spellings of
+    // an in-place overwrite and of a hand-rolled rename.
+    val roots = Seq("operators", "sources", "streaming").map(Paths.get("src/main/scala/graft", _))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repository root, not ${r.toAbsolutePath}"))
+    val banned = """SaveMode|mode\("overwrite"\)|Files\.move|ATOMIC_MOVE""".r
+    val hits = roots.flatMap { r =>
+      val walk = Files.walk(r)
+      try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "SnapshotStore.scala")
+        .flatMap(f => Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if banned.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+        }).toList
+      finally walk.close()
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("rotating a documents source retires the superseded signature table and its directory") {
-    val sf = Files.createTempDirectory("sigs-rotate")
+    val sf = tempDir("sigs-rotate")
     val docs = sf.resolve("documents.parquet")
     val family = SnapshotStore.family("graft_dedup_sigs", sf.toString, "documents")
     val dir = SnapshotStore.root(spark).resolve(family)

@@ -28,7 +28,7 @@ class StarEdgeSpec extends AnyFunSuite with SparkSpec {
 
   test("over-cap minhash buckets are star-recovered on BOTH paths: clustering and the pair list") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("starovercap").toString
+    val dir = tempDir("starovercap").toString
     // 120 identical docs: every minhash band bucket holds all 120 members,
     // i.e. over the 2..100 pair cap. The clustering path (starEdges) must
     // recover the component with 119 min→member edges (O(sz), round 9;

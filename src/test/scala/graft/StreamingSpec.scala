@@ -8,7 +8,7 @@ import graft.streaming.StreamingDaemon
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
 
-  private def tmp(tag: String) = Files.createTempDirectory(tag).toString
+  private def tmp(tag: String) = tempDir(tag).toString
 
   test("mergeSink is exactly-once: upserts converge, batch replay is a no-op, torn replay converges") {
     val in    = tmp("merge-in")
@@ -39,8 +39,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(snapshot() == want)
 
     // TORN REPLAY (crash AFTER the pointer swap but BEFORE the marker):
-    // simulate by deleting the marker — the merge re-runs against the
-    // already-merged store and must converge to identical content.
+    // simulate by deleting the marker — the replay finds snap-0 committed
+    // and reuses it, so the content is identical.
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$store/_applied/batch-0"))
     assert(StreamingDaemon.applyMergeBatch(
       spark, store, keys, ord, spark.read.parquet(in), batchId = 0L))
@@ -57,84 +57,101 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(snapshot() != want, "the delta must actually change some rows")
   }
 
-  test("compactionLoop consumes files one per trigger and matches batch LWW") {
-    val in  = tmp("stream-in")
-    val out = tmp("stream-out")
-    val ckp = tmp("stream-ckp")
-    // two "store files" arriving: two halves of sf0.001 events
+  test("a merge batch whose write fails leaves LATEST, the ledger and every snap-* entry unchanged, and a retry applies it") {
+    val store = tmp("mergefail-store")
+    val keys = Seq("user_id", "event_type"); val ord = Seq("ts", "event_id")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    ev.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(in)
-    ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(in)
-
-    val q = StreamingDaemon.compactionLoop(
-      spark, in, out, ckp, Seq("user_id", "event_type"), Seq("ts", "event_id"))
-    q.awaitTermination()
-
-    // each per-batch output is itself LWW-compacted
-    val batches = new java.io.File(out).listFiles().filter(_.getName.startsWith("batch="))
-    assert(batches.length >= 1)
-    batches.foreach { b =>
-      val df = spark.read.parquet(b.getPath)
-      assert(df.count() == df.select("user_id", "event_type").distinct().count())
+    assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, ev, batchId = 0L))
+    def state() = {
+      val root = new java.io.File(store)
+      (root.list().toSet, Files.readString(root.toPath.resolve("LATEST")), root.toPath.resolve("_applied").toFile.list().toSet)
     }
-    // union of batches re-compacted equals batch-mode LWW over the full input
-    val streamed = Compaction.lastWriteWins(
-      spark.read.parquet(s"$out/batch=*"), Seq("user_id", "event_type"), Seq("ts", "event_id"))
-    val batch = Compaction.lastWriteWins(ev, Seq("user_id", "event_type"), Seq("ts", "event_id"))
-    assert(streamed.orderBy("user_id", "event_type").collect().toSeq ==
-      batch.orderBy("user_id", "event_type").collect().toSeq)
+    val before = state()
+    assert(before == ((Set("LATEST", "_applied", "snap-0"), "snap-0", Set("batch-0"))))
+
+    val delta = ev.filter(col("user_id") % 5 === 0)
+      .withColumn("ts", col("ts") + expr("INTERVAL 10 DAYS"))
+      .withColumn("value", col("value") + 1000.0)
+    // The batch frame throws in the write's own stage, once the output
+    // directory is set up: the repartition on the keys moves the failing
+    // projection past the only exchange, which adaptive execution runs
+    // before the write begins.
+    val failing = delta.repartition(col("user_id"), col("event_type")).withColumn("value",
+      when(col("user_id") >= 0, raise_error(lit("injected write failure"))).otherwise(col("value")))
+    intercept[Exception](StreamingDaemon.applyMergeBatch(spark, store, keys, ord, failing, batchId = 1L))
+    assert(state() == before, "a failed write must leave the store as it was")
+
+    assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, delta, batchId = 1L))
+    assert(state() == ((Set("LATEST", "_applied", "snap-0", "snap-1"), "snap-1", Set("batch-0", "batch-1"))))
+    assert(StreamingDaemon.readMergeStore(spark, store, ev).orderBy("user_id", "event_type").collect().toSeq ==
+      Compaction.lastWriteWins(ev.unionByName(delta), keys, ord).orderBy("user_id", "event_type").collect().toSeq)
   }
 
-  test("compactionLoop restart-from-checkpoint: resumes at the next batch, prior output untouched, torn batch dir repaired") {
+  test("mergeSink restart-from-checkpoint: one snapshot per new file, committed snapshots untouched, a stale tmp dir ignored, a torn replay reuses its snapshot") {
     // The reference's crash-resumable-cursor semantics
     // (QHBaseCompact.java:102-115,133) end to end: the daemon dies between
-    // polls (run 1 drains and stops), a new file lands AND a half-written
-    // output of the never-committed next batch is left behind (crash after
-    // the data write began, before the checkpoint commit); the restarted
-    // daemon must resume from checkpointLocation — reprocessing nothing it
-    // committed, repairing the torn directory via the batchId-keyed
-    // overwrite.
-    val in  = tmp("restart-in")
-    val out = tmp("restart-out")
-    val ckp = tmp("restart-ckp")
+    // polls (run 1 drains and stops); a new file lands AND a killed
+    // writer's tmp directory for the next snapshot, holding wrong rows, is
+    // left in the store; the restarted daemon must resume from
+    // checkpointLocation, reprocess nothing it committed, and never read
+    // the tmp directory.
+    val in    = tmp("restart-in")
+    val store = tmp("restart-store")
+    val ckp   = tmp("restart-ckp")
     val keys = Seq("user_id", "event_type"); val ord = Seq("ts", "event_id")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     val half1 = ev.filter(col("event_id") % 2 === 0)
+    // the second file's versions are newer than any of the first's, so
+    // upserting it yields the LWW of all input
     val half2 = ev.filter(col("event_id") % 2 === 1)
-    half1.coalesce(1).write.mode("append").parquet(in)
-
-    StreamingDaemon.compactionLoop(spark, in, out, ckp, keys, ord).awaitTermination()
+      .withColumn("ts", col("ts") + expr("INTERVAL 3650 DAYS"))
+    def lww(df: org.apache.spark.sql.DataFrame) =
+      Compaction.lastWriteWins(df, keys, ord).orderBy("user_id", "event_type").collect().toSeq
+    def latest() = StreamingDaemon.readMergeStore(spark, store, ev)
+      .orderBy("user_id", "event_type").collect().toSeq
+    def snaps() = new java.io.File(store).list().filter(_.startsWith("snap-")).toSet
     def fileSig(dir: String): Map[String, (Long, Long)] =
       new java.io.File(dir).listFiles().filter(_.isFile)
-        .map(f => f.getName -> (f.length, f.lastModified)).toMap
-    assert(new java.io.File(s"$out/batch=0").exists, "run 1 must commit batch 0")
-    val b0sig = fileSig(s"$out/batch=0")
+        .map(f => f.getName -> ((f.length, f.lastModified))).toMap
+    half1.coalesce(1).write.mode("append").parquet(in)
 
-    // while the daemon is down: a new input file lands, and a TORN write of
-    // the next batch sits in the output (wrong rows — a failed overwrite
-    // would be detectable, unlike an empty placeholder)
+    StreamingDaemon.mergeSink(spark, in, store, ckp, keys, ord).awaitTermination()
+    assert(snaps() == Set("snap-0"), "run 1 must commit batch 0")
+    assert(latest() == lww(half1))
+    val s0 = fileSig(s"$store/snap-0")
+
+    // while the daemon is down: a new input file lands, and a killed
+    // writer's tmp directory for snap-1 sits in the store
     half2.coalesce(1).write.mode("append").parquet(in)
     half2.limit(3).withColumn("value", lit(-999.0))
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=1")
+      .coalesce(1).write.parquet(s"$store/.tmp-snap-1-killed")
 
-    StreamingDaemon.compactionLoop(spark, in, out, ckp, keys, ord).awaitTermination()
-    // batch 0 was not reprocessed — byte-identical file listing
-    assert(fileSig(s"$out/batch=0") == b0sig, "restart reprocessed a committed batch")
-    // the torn batch=1 was repaired: exactly the LWW of the new file
-    val b1 = spark.read.parquet(s"$out/batch=1")
-    assert(b1.filter(col("value") === -999.0).count() == 0, "torn write survived the replay")
-    assert(b1.orderBy("user_id", "event_type").collect().toSeq ==
-      Compaction.lastWriteWins(half2, keys, ord).orderBy("user_id", "event_type").collect().toSeq)
-    // resumed output re-compacted equals batch truth over everything
-    val streamed = Compaction.lastWriteWins(spark.read.parquet(s"$out/batch=*"), keys, ord)
-    assert(streamed.orderBy("user_id", "event_type").collect().toSeq ==
-      Compaction.lastWriteWins(ev, keys, ord).orderBy("user_id", "event_type").collect().toSeq)
+    StreamingDaemon.mergeSink(spark, in, store, ckp, keys, ord).awaitTermination()
+    assert(snaps() == Set("snap-0", "snap-1"), "one snapshot per input file")
+    assert(fileSig(s"$store/snap-0") == s0, "restart rewrote a committed snapshot")
+    assert(spark.read.parquet(s"$store/snap-1").filter(col("value") === -999.0).count() == 0,
+      "the stale tmp directory leaked into the committed snapshot")
+    assert(latest() == lww(half1.unionByName(half2)))
 
     // a third restart with no new input: nothing new, nothing rewritten
-    val allSig = fileSig(s"$out/batch=0") ++ fileSig(s"$out/batch=1").map { case (k, v) => s"b1/$k" -> v }
-    StreamingDaemon.compactionLoop(spark, in, out, ckp, keys, ord).awaitTermination()
-    assert(new java.io.File(out).listFiles().count(_.getName.startsWith("batch=")) == 2)
-    assert(fileSig(s"$out/batch=0") ++ fileSig(s"$out/batch=1").map { case (k, v) => s"b1/$k" -> v } == allSig)
+    val all = Seq("", "/snap-0", "/snap-1", "/_applied").map(d => d -> fileSig(s"$store$d")).toMap
+    StreamingDaemon.mergeSink(spark, in, store, ckp, keys, ord).awaitTermination()
+    assert(snaps() == Set("snap-0", "snap-1"))
+    assert(Seq("", "/snap-0", "/snap-1", "/_applied").map(d => d -> fileSig(s"$store$d")).toMap == all)
+
+    // a crash after snap-1 committed but before its pointer swap, ledger
+    // marker and checkpoint commit: the restart replays batch 1, which
+    // merges the same prior snapshot with the same file, so it reuses the
+    // committed snap-1 instead of writing a second copy
+    val s1 = fileSig(s"$store/snap-1")
+    Files.writeString(java.nio.file.Paths.get(s"$store/LATEST"), "snap-0")
+    Seq(s"$store/_applied/batch-1", s"$ckp/commits/1", s"$ckp/commits/.1.crc")
+      .foreach(f => Files.deleteIfExists(java.nio.file.Paths.get(f)))
+    StreamingDaemon.mergeSink(spark, in, store, ckp, keys, ord).awaitTermination()
+    assert(snaps() == Set("snap-0", "snap-1"), "the replay wrote a second snapshot of batch 1")
+    assert(fileSig(s"$store/snap-1") == s1)
+    assert(Files.readString(java.nio.file.Paths.get(s"$store/LATEST")) == "snap-1")
+    assert(latest() == lww(half1.unionByName(half2)))
   }
 
   test("ingestDedupLoop restart-from-checkpoint: dedup state persists across the process death") {

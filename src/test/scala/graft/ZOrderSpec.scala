@@ -23,7 +23,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("z-order layout prunes files on both dimensions; x-sort only on one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder").toString
     // 64x64 grid — every (x, y) point once, 16 files of 256 rows each.
     val grid = spark.range(64 * 64)
       .select((col("id") / 64).cast("long").as("x"), pmod(col("id"), lit(64)).as("y"))
