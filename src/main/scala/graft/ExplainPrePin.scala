@@ -22,9 +22,13 @@ object ExplainPrePin {
       // scans expected: both the df aggregate and the join-back read the
       // checkpoint)
       "prefix_docs_build" -> operators.TextQueries.prefixDocsOf(spark, sfDir),
-      // the consolidated one-window bucket marking of q_dedup_lsh_sweep
-      "lsh_sweep_marked_build" -> operators.TextQueries.lshSweepMarkedBuild(
-        operators.TextQueries.lshSweepSigsBuild(spark, sfDir)))
+      // the consolidated one-window bucket marking of q_dedup_lsh_sweep:
+      // what TextQueries.cappedPairs pins for the sweep's (r, band, bkey)
+      // buckets
+      "lsh_sweep_marked_build" -> operators.TextQueries.markBuckets(
+        operators.TextQueries.lshSweepBandsBuild(
+          operators.TextQueries.lshSweepSigsBuild(spark, sfDir)),
+        Seq("r", "band", "bkey"), org.apache.spark.sql.functions.col("doc_id")))
     targets.foreach { case (name, df) =>
       println(s"\n========== $name ==========")
       df.explain("formatted")

@@ -36,25 +36,20 @@ object Sessions {
     * separate executor JVM processes, the only in-sandbox posture where an
     * executor can actually die. Executors are spawned by the Worker, so they
     * need the app classes (same machine → extraClassPath of this JVM's
-    * classpath) and the same JDK17 --add-opens set the driver runs with.
+    * classpath); SparkContext itself prepends the JDK17 `--add-opens` set to
+    * `spark.executor.extraJavaOptions`. The executors' `java.io.tmpdir` is a
+    * [[ProbeKill.tempDir]], so the native libraries snappy and lz4 extract
+    * there are deleted with it even when a probe SIGKILLs the executor.
     * Requires SPARK_SCALA_VERSION=2.13 in the environment (the Worker builds
     * the executor command through the launcher library, whose Scala-version
     * probe otherwise dies with "Cannot find any build directories" when
     * SPARK_HOME is a bare dist without launcher/target).
     */
   def localCluster(extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val b = shared("local-cluster[2,2,1024]", "8")
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config("spark.executor.extraJavaOptions",
+        s"-Djava.io.tmpdir=${ProbeKill.tempDir("graft_executor_tmp")}")
     extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
   }
 }

@@ -25,13 +25,11 @@ object TextQueries extends QueryPack {
   /** The LSH over-cap bucket boundary (standard practice: a bucket shared
     * by more members is boilerplate; enumerating its pairs is the n²
     * blowup banding exists to avoid). ONE Scala-side landing for every
-    * expansion gate — the pair caps, the star switchovers, the cap audit,
-    * the ingest-join hot-bucket guard, and [[bandPairsOf]]'s
-    * `BucketCap + 1` row pre-truncation (101 distinguishes "over cap"
-    * from "exactly full"). The DuckDB oracles and the plan-pinning specs
-    * mirror the literals 100/101; the correctness gate fails loudly if
-    * the sides ever drift, so changing this constant forces the oracle
-    * edit rather than silently diverging.
+    * expansion gate — [[cappedPairs]]' all-pairs/star switchover, the cap
+    * audit and the ingest-join hot-bucket guard. The DuckDB oracles and
+    * the plan-pinning specs mirror the literals 100/101; the correctness
+    * gate fails loudly if the sides ever drift, so changing this constant
+    * forces the oracle edit rather than silently diverging.
     */
   private[graft] val BucketCap = 100
 
@@ -201,7 +199,7 @@ object TextQueries extends QueryPack {
     * blowup LSH exists to avoid; singleton buckets can't produce pairs. The
     * cap bounds the HOF expansion at C(100,2) pairs per bucket; over-cap
     * buckets star-recover around their minimum member (round 11 — see
-    * [[bandPairsOf]]) instead of dropping. Connectivity-only consumers
+    * [[cappedPairs]]) instead of dropping. Connectivity-only consumers
     * read [[starEdgesOf]] instead, which has no cap at all (stars are
     * O(sz)).
     */
@@ -226,9 +224,8 @@ object TextQueries extends QueryPack {
     * prices what the star still leaves non-enumerated).
     */
   /** Mark every bucket row with its bucket's representative (`mn` =
-    * min(mnExpr)) and size (`sz`) — the shared pre-pass of all four
-    * bounded-state expansions (bandPairsOf, starEdgesOf,
-    * bandedHammingPairs, q_dedup_prefix): min/count over
+    * min(mnExpr)) and size (`sz`) — the shared pre-pass of
+    * [[cappedPairs]] and [[starEdgesOf]]: min/count over
     * Window.partitionBy(part) — ONE exchange on the bucket key; a
     * degenerate bucket is one task's spillable sort. Unused marks are
     * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
@@ -246,47 +243,57 @@ object TextQueries extends QueryPack {
       .filter(col("doc_id") =!= col("mn")) // singleton buckets emit nothing
       .select(col("mn").as("doc_a"), col("doc_id").as("doc_b"))
 
-  /** [[bandPairs]] over an arbitrary bucket set — the incremental
-    * clustering path pairs the corpus and the new snapshot separately.
-    *
-    * Two-phase, bounded-state expansion (round 11: the
-    * [[bandedHammingPairs]] shape, replacing the round-9 truncate-and-drop
-    * form so the pair path keeps the verified-star semantics the prefix
-    * and Hamming paths already have): each bucket row is first marked with
-    * its bucket's minimum doc_id and size via ONE window pass (spillable
-    * sort — never a collect buffer), then
-    *   · buckets of 2..100 members take the all-pairs collect path — the
-    *     collect buffer is bounded at 100 ids by the sz filter BEFORE the
-    *     aggregation, not after it;
+  /** The dedup family's bounded-state pair expansion — the ONE landing of
+    * the cap policy for every pair-list consumer ([[bandPairsOf]],
+    * [[bandedHammingPairs]], q_dedup_prefix, q_dedup_lsh_sweep). Each
+    * bucket row (bucket key `carried ++ bucket`) is first marked with its
+    * bucket's minimum `member` and size via ONE window pass
+    * ([[markBuckets]]: a spillable sort, never a collect buffer); the
+    * marked table is pinned because both phases read it. Then
+    *   · buckets of 2..[[BucketCap]] members take the all-pairs collect
+    *     path — the sorted member list is bounded at BucketCap entries by
+    *     the sz filter BEFORE the aggregation, not after it — and emit
+    *     `pair(a, b)` for every a < b, expanded in-bucket (no self-join);
     *   · over-cap buckets (hot template families at real scale) emit a
-    *     STAR around the bucket minimum RELATIONALLY — one output row per
-    *     member row, no membership list ever materialized — so their
-    *     members stay candidates instead of silently vanishing from the
-    *     pair list. Every consumer verifies candidates exactly downstream
-    *     (3-gram Jaccard, signature agreement), so a star pair is a
-    *     genuine candidate; only the in-bucket clique ENUMERATION stays
-    *     capped (expanding a hot bucket is inherently quadratic), and
-    *     q_dedup_cap_audit prices exactly that difference.
-    * The marked table is pinned (Memo.pin) because both phases read it —
-    * thin rows (doc_id, band, bkey string, mn, sz), sized by n·nBands.
+    *     STAR around the bucket minimum RELATIONALLY — `pair(min, m)` for
+    *     each other member row, no membership list ever materialized — so
+    *     their members stay candidates instead of silently vanishing.
+    *     Every consumer verifies candidates exactly downstream (Jaccard,
+    *     Hamming), so a star pair is a genuine candidate; only the clique
+    *     ENUMERATION stays capped, and q_dedup_cap_audit prices exactly
+    *     that difference.
+    * `pair` returns a struct; its fields, after the `carried` columns,
+    * are the output columns. `carried` columns are part of the bucket key,
+    * so buckets of different carried values never mix.
     */
-  private def bandPairsOf(buckets: org.apache.spark.sql.DataFrame) = {
-    val marked = markBuckets(buckets, Seq("band", "bkey"), col("doc_id"))
-      .pin()
+  private[graft] def cappedPairs(buckets: org.apache.spark.sql.DataFrame,
+      bucket: Seq[String], member: Column, carried: Seq[String])(
+      pair: (Column, Column) => Column): org.apache.spark.sql.DataFrame = {
+    val marked = markBuckets(buckets, carried ++ bucket, member).pin()
+    // each side unnests its own pair struct: a union of the two structs
+    // would widen the small side's non-null ids to the star's nullable `mn`
+    def pairs(df: org.apache.spark.sql.DataFrame, p: Column) =
+      df.select(carried.map(col) :+ p.as("p"): _*).select(carried.map(col) :+ col("p.*"): _*)
     val small = marked
       .filter(col("sz").between(2, BucketCap))
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(explode(flatten(transform(col("ds"), (a, i) =>
-        transform(
-          slice(col("ds"), i + lit(2), size(col("ds")) - i - 1),
-          b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-    val star = marked
-      .filter(col("sz") > BucketCap && col("doc_id") =!= col("mn"))
-      .select(col("mn").as("doc_a"), col("doc_id").as("doc_b"))
-    small.unionAll(star)
+      .groupBy((carried ++ bucket).map(col): _*)
+      .agg(sort_array(collect_list(member)).as("ds"))
+    val star = marked.filter(col("sz") > BucketCap && member =!= col("mn"))
+    pairs(small, explode(flatten(transform(col("ds"), (a, i) =>
+        transform(slice(col("ds"), i + lit(2), size(col("ds")) - i - 1), b => pair(a, b))))))
+      .unionAll(pairs(star, pair(col("mn"), member)))
   }
+
+  /** An unordered id pair (doc_a < doc_b) — the pair shape of the minhash
+    * candidate lists.
+    */
+  private def idPair(a: Column, b: Column) = struct(a.as("doc_a"), b.as("doc_b"))
+
+  /** [[bandPairs]] over an arbitrary bucket set — the incremental
+    * clustering path pairs the corpus and the new snapshot separately.
+    */
+  private def bandPairsOf(buckets: org.apache.spark.sql.DataFrame) =
+    cappedPairs(buckets, Seq("band", "bkey"), col("doc_id"), Nil)(idPair)
 
   /** LSH candidate edge set, computed once per (context, source fingerprint) and
     * pinned (Memo.pin) (tiny: one row per candidate pair). The clustering
@@ -393,8 +400,8 @@ object TextQueries extends QueryPack {
     * pipeline shared by q_dedup_simhash_pairs (16-bit SimHash, 2 bands)
     * and q_dedup_phash (32-bit gradient hash, 4 bands): candidates from
     * any matching 8-bit band (Charikar pigeonhole: hamming ≤ nBands−1
-    * guarantees a shared band), the standard 2–100 bucket cap (a skew-hot
-    * byte bucket is boilerplate and is dropped, never expanded
+    * guarantees a shared band), the [[cappedPairs]] bucket cap (a skew-hot
+    * byte bucket star-recovers around its minimum, never expanded
     * quadratically), in-bucket pair expansion without a self-join, exact
     * `bit_count(xor)` on candidates only, `distinct` because several bands
     * can surface the same pair. Returns the FULL bounded pair set (what a
@@ -417,51 +424,19 @@ object TextQueries extends QueryPack {
 
   private[graft] def bandedHammingPairs(
       sigs: org.apache.spark.sql.DataFrame, sigCol: String,
-      nBands: Int, maxHamming: Int): org.apache.spark.sql.DataFrame = {
-    // Two-phase, bounded-state expansion (round-9 pre-count hygiene): each
-    // bucket row is first marked with its bucket's minimum (doc_id, sig)
-    // and size via ONE window pass (spillable sort — never a collect
-    // buffer), then
-    //   · buckets of 2..100 members take the all-pairs collect path — the
-    //     collect buffer is bounded at 100 structs by the sz filter BEFORE
-    //     the aggregation, not after it;
-    //   · over-cap buckets (>100 signatures sharing a band byte — hot
-    //     template families at real scale) emit a verified STAR around the
-    //     bucket minimum RELATIONALLY — one output row per member row, the
-    //     exact bit_count verify computed against the window-carried rep
-    //     signature, no membership list ever materialized anywhere.
-    // Cluster connectivity is preserved (same star shape as
-    // q_dedup_prefix), landed here once for every banded-Hamming consumer
-    // (simhash pairs, phash, phash_png, phash_frames); q_dedup_cap_audit
-    // reports what the star leaves non-enumerated. The marked table is
-    // pinned (Memo.pin) because both phases read it — thin rows (two
-    // longs, two band bytes, the rep struct), sized by n·nBands.
-    val marked = markBuckets(bandedOf(sigs, sigCol, nBands),
-        Seq("band", "bval"), struct(col("doc_id"), col("sig")))
-      .pin()
-    def pairStruct(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      struct(
-        a.getField("doc_id").as("doc_a"),
-        b.getField("doc_id").as("doc_b"),
-        bit_count(a.getField("sig").bitwiseXOR(b.getField("sig")))
-          .cast("long").as("hamming"))
-    val allPairs = flatten(transform(col("vs"), (a, i) =>
-      transform(
-        slice(col("vs"), i + lit(2), size(col("vs")) - i - 1),
-        b => pairStruct(a, b))))
-    val small = marked
-      .filter(col("sz").between(2, BucketCap))
-      .groupBy(col("band"), col("bval"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("vs"))
-      .select(explode(allPairs).as("p"))
-    val star = marked
-      .filter(col("sz") > BucketCap && col("doc_id") =!= col("mn.doc_id"))
-      .select(pairStruct(col("mn"), struct(col("doc_id"), col("sig"))).as("p"))
-    small.unionAll(star)
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.hamming"))
+      nBands: Int, maxHamming: Int): org.apache.spark.sql.DataFrame =
+    // [[cappedPairs]] over (doc_id, sig) members: over-cap byte buckets
+    // (hot template families at real scale) emit the verified star, the
+    // exact bit_count computed against the window-carried rep signature.
+    cappedPairs(bandedOf(sigs, sigCol, nBands), Seq("band", "bval"),
+        struct(col("doc_id"), col("sig")), Nil)((a, b) =>
+        struct(
+          a.getField("doc_id").as("doc_a"),
+          b.getField("doc_id").as("doc_b"),
+          bit_count(a.getField("sig").bitwiseXOR(b.getField("sig")))
+            .cast("long").as("hamming")))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
 
   /** Top-n closest pairs under the total order (hamming, doc_a, doc_b) —
     * the REPORT shape the four perceptual-dedup queries share. Round 10:
@@ -584,18 +559,15 @@ object TextQueries extends QueryPack {
       .agg(count(lit(1)).as("n_tok"), sum(col("llr6")).as("s6"))
   }
 
-  /** Per-doc unigram-LM log-probability sufficient statistics: (doc_id,
-    * lang, sum_lp6, n_tok), where sum_lp6 is the exact µ-unit integer sum of
-    * per-token log probs under the CAPPED top-K(=20) corpus LM with OOV mass
-    * folded into one add-1-smoothed UNK class (the CCNet/DSIR vocabulary
-    * bound — an uncapped web-corpus LM broadcast dies at 100 TB). The ≤K-row
-    * LM broadcasts onto the token stream; the stream never shuffles for the
-    * join. Shared by q_text_unigram_lp (reports the per-doc mean) and
-    * q_text_ppl_buckets (per-lang quality split on the same scores).
+  /** The capped top-K(=20) unigram LM over a token stream (doc_id, lang,
+    * w): the vocab count table `uni` (w, c), the ≤K-row LM `lm` (w, lp6) of
+    * µ-unit add-1-smoothed log probs, and the one-row `unk` (unk_lp6) cell
+    * all OOV mass folds into. One builder for [[unigramDocLp]] and
+    * q_text_bigram_lp's backoff, which also reads `uni` for its context
+    * counts.
     */
-  private def unigramDocLp(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+  private def unigramLm(tok: org.apache.spark.sql.DataFrame) = {
     val K = 20
-    val tok = docTokens(s, d)
     val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c")).pin()
     // Top-K by count, w ASC tiebreak — a TakeOrdered over the vocab-sized
     // count table, deterministic in both engines.
@@ -609,6 +581,21 @@ object TextQueries extends QueryPack {
     val unk = scal.select(
       round(log((col("n_total") - col("n_vocab") + lit(1.0)) / (col("n_total") + lit(K + 1))) * lit(1e6))
         .cast("long").as("unk_lp6"))
+    (uni, lm, unk)
+  }
+
+  /** Per-doc unigram-LM log-probability sufficient statistics: (doc_id,
+    * lang, sum_lp6, n_tok), where sum_lp6 is the exact µ-unit integer sum of
+    * per-token log probs under the CAPPED top-K(=20) corpus LM with OOV mass
+    * folded into one add-1-smoothed UNK class (the CCNet/DSIR vocabulary
+    * bound — an uncapped web-corpus LM broadcast dies at 100 TB). The ≤K-row
+    * LM broadcasts onto the token stream; the stream never shuffles for the
+    * join. Shared by q_text_unigram_lp (reports the per-doc mean) and
+    * q_text_ppl_buckets (per-lang quality split on the same scores).
+    */
+  private def unigramDocLp(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    val tok = docTokens(s, d)
+    val (_, lm, unk) = unigramLm(tok)
     tok.join(broadcast(lm), Seq("w"), "left_outer")
       .crossJoin(broadcast(unk))
       .select(col("doc_id"), col("lang"), coalesce(col("lp6"), col("unk_lp6")).as("lp6"))
@@ -697,20 +684,20 @@ object TextQueries extends QueryPack {
   /** Pre-pin builders of q_dedup_lsh_sweep — package-visible for
     * [[graft.ExplainPrePin]] plan dumps (the in-query pins hide these
     * pipelines from the final plan): the wide signature table, and the
-    * round-22 CONSOLIDATED bucket-marking pass — the three banding configs'
-    * band rows union into one (r, band, bkey)-keyed table so marking is ONE
-    * window exchange + ONE checkpoint instead of one per config.
+    * round-22 CONSOLIDATED band rows — the three banding configs' band rows
+    * union into one (r, band, bkey)-keyed table so [[cappedPairs]] marks
+    * them with ONE window exchange + ONE checkpoint instead of one per
+    * config.
     */
   private[graft] def lshSweepSigsBuild(s: org.apache.spark.sql.SparkSession, d: String) =
     minhashSigsOf(docShingles(s, d))
-  private[graft] def lshSweepMarkedBuild(sigs: org.apache.spark.sql.DataFrame) = {
+  private[graft] def lshSweepBandsBuild(sigs: org.apache.spark.sql.DataFrame) = {
     def bandsFor(r: Int) = sigs.select(lit(r.toLong).as("r"), col("doc_id"),
       posexplode(array((0 until 8 / r).map(b =>
         concat_ws(",", (0 until r).map(j =>
           col(s"m${b * r + j}").cast("string")): _*)): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    markBuckets(Seq(1, 2, 4).map(bandsFor).reduce(_ unionAll _),
-      Seq("r", "band", "bkey"), col("doc_id"))
+    Seq(1, 2, 4).map(bandsFor).reduce(_ unionAll _)
   }
 
   val queries: Map[String, Q] = Map(
@@ -916,34 +903,18 @@ object TextQueries extends QueryPack {
       //   · the candidate key table is THIN (doc_id, n, w) and one window
       //     pass marks each row with its bucket's min (doc_id, n) and size
       //     (spillable sort, no buffers);
-      //   · buckets of 2..100 docs expand all pairs via a collect bounded
-      //     at 100 (doc_id, n) structs BY THE FILTER BEFORE the
-      //     aggregation — never token arrays;
-      //   · over-cap buckets emit the verified star RELATIONALLY — one row
-      //     per member against the window-carried rep, no list anywhere;
+      //   · [[cappedPairs]] expands the thin (doc_id, n) members — never
+      //     token arrays: all pairs for buckets of 2..100 docs, the
+      //     verified star for over-cap buckets;
       //   · the length filter runs on (na, nb) BEFORE the two endpoint
       //     joins fetch token arrays, so `ws` is only ever joined onto
       //     surviving candidates, one row at a time.
       // Output is bit-identical to the round-8 spelling (same oracle);
       // PrefixStarSpec pins both the star semantics and the bounded plan.
       val docsT = prefixDocsOf(s, d).pin()
-      val marked = markBuckets(prefixTokensFrom(docsT),
-          Seq("w"), struct(col("doc_id"), col("n")))
-        .pin() // thin: (doc_id, n, w, rep struct, sz)
-      val small = marked
-        .filter(col("sz").between(2, BucketCap))
-        .groupBy(col("w"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"))
-        .select(explode(flatten(transform(col("ds"), (a, i) =>
-          transform(slice(col("ds"), i + lit(2), size(col("ds")) - i - 1),
-            b => struct(a.getField("doc_id").as("doc_a"), a.getField("n").as("na"),
-              b.getField("doc_id").as("doc_b"), b.getField("n").as("nb")))))).as("p"))
-        .select(col("p.*"))
-      val star = marked
-        .filter(col("sz") > BucketCap && col("doc_id") =!= col("mn.doc_id"))
-        .select(col("mn.doc_id").as("doc_a"), col("mn.n").as("na"),
-          col("doc_id").as("doc_b"), col("n").as("nb"))
-      small.unionAll(star)
+      cappedPairs(prefixTokensFrom(docsT), Seq("w"), struct(col("doc_id"), col("n")), Nil)(
+          (a, b) => struct(a.getField("doc_id").as("doc_a"), a.getField("n").as("na"),
+            b.getField("doc_id").as("doc_b"), b.getField("n").as("nb")))
         .filter(least(col("na"), col("nb")) * 10 >= greatest(col("na"), col("nb")) * 6)
         .dropDuplicates("doc_a", "doc_b")
         .join(docsT.select(col("doc_id").as("doc_a"), col("ws").as("wsa")), "doc_a")
@@ -969,11 +940,11 @@ object TextQueries extends QueryPack {
     // oracled. The minhash band table is audited under BOTH of its
     // consumers' semantics, one row each: `minhash` is the clustering
     // path ([[starEdgesOf]]) and `minhash_pairs` the pair-list path
-    // (q_dedup_minhash / q_dedup_near / ... via [[bandPairsOf]]). Since
-    // round 11 both star-recover over-cap buckets, so the two rows report
-    // the same star formulas (foregone = C(sz,2) − (sz−1), star_edges =
-    // sz−1) — kept as separate rows because they audit separate consumers
-    // and would diverge again if either path's semantics moved. The
+    // (q_dedup_minhash / q_dedup_near / ... via [[cappedPairs]]). Both
+    // reduce an over-cap bucket to the same star, so the two rows report
+    // the same formulas (foregone = C(sz,2) − (sz−1), star_edges = sz−1);
+    // each row names the consumer it audits. The size histogram below
+    // mirrors cappedPairs' gate (sz > BucketCap) to price its stars. The
     // fixture corpora already exercise every column:
     // prefix template families are over-cap at sf0.01 (13 buckets) and
     // simhash bands go over-cap at sf0.1 (28 buckets), all verified
@@ -1093,27 +1064,16 @@ object TextQueries extends QueryPack {
       // Round 22 (guide §2.4): the three configs' band rows UNION into one
       // table keyed (r, band, bkey), so bucket marking is ONE window
       // exchange + ONE checkpoint instead of one per config (the per-config
-      // bandPairsOf paid 3 window exchanges + 3 pin jobs); the in-bucket
-      // expansion and the star recovery are unchanged, grouped by
-      // (r, band, bkey) so configs never mix — pairs per config identical.
-      val marked = lshSweepMarkedBuild(sigs).pin()
-      val smallPairs = marked
-        .filter(col("sz").between(2, BucketCap))
-        .groupBy(col("r"), col("band"), col("bkey"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .select(col("r"), explode(flatten(transform(col("ds"), (a, i) =>
-          transform(
-            slice(col("ds"), i + lit(2), size(col("ds")) - i - 1),
-            b => struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-        .select(col("r"), col("p.doc_a"), col("p.doc_b"))
-      val starPairs = marked
-        .filter(col("sz") > BucketCap && col("doc_id") =!= col("mn"))
-        .select(col("r"), col("mn").as("doc_a"), col("doc_id").as("doc_b"))
+      // bandPairsOf paid 3 window exchanges + 3 pin jobs); [[cappedPairs]]
+      // carries r, so its buckets are (r, band, bkey) and configs never mix
+      // — pairs per config identical.
       // pinned (round 21): both the exact-verify pass and the final
       // per-config rollup read the candidate union; unpinned, all three
       // re-banding/expansion chains ran twice (tiny table: one row per
       // (config, candidate pair))
-      val cand = smallPairs.unionAll(starPairs).distinct().pin()
+      val cand = cappedPairs(lshSweepBandsBuild(sigs), Seq("band", "bkey"), col("doc_id"),
+          Seq("r"))(idPair)
+        .distinct().pin()
       // memoized shingle-set table (round 22): both endpoint joins read it
       val sets = docShingleSets(s, d)
       val verified = cand.select(col("doc_a"), col("doc_b")).distinct()
@@ -1547,19 +1507,9 @@ object TextQueries extends QueryPack {
     // integer arithmetic. Bigrams via the one-pass [[TokenShingles]]
     // expression — never a HOF recompute trap.
     "q_text_bigram_lp" -> ((s, d) => {
-      val K = 20; val K2 = 30
-      val tok = docTokens(s, d)
-      val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c")).pin()
-      val topk = uni.orderBy(col("c").desc, col("w")).limit(K).pin()
-      val scal = uni.agg(sum(col("c")).as("n_total"))
-        .crossJoin(topk.agg(sum(col("c")).as("n_vocab")))
-      val ulm = topk.crossJoin(broadcast(scal))
-        .select(col("w").as("w2"),
-          round(log((col("c") + lit(1.0)) / (col("n_total") + lit(K + 1))) * lit(1e6))
-            .cast("long").as("ulp6"))
-      val unk = scal.select(
-        round(log((col("n_total") - col("n_vocab") + lit(1.0)) / (col("n_total") + lit(K + 1))) * lit(1e6))
-          .cast("long").as("unk_lp6"))
+      val K2 = 30
+      val (uni, lm, unk) = unigramLm(docTokens(s, d))
+      val ulm = lm.select(col("w").as("w2"), col("lp6").as("ulp6"))
       val bg = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(graft.functions.TextFns.shinglesFromText(col("text"), 2)).as("bg"))

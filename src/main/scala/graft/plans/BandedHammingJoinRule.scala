@@ -45,7 +45,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Disable with Spark's own
   * `spark.sql.optimizer.excludedRules=graft.plans.BandedHammingJoinRule`.
   */
-object BandedHammingJoinRule extends Rule[LogicalPlan] {
+object BandedHammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val MaxK = 15
 
@@ -101,11 +101,6 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] {
     (gen, pos, bval)
   }
 
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other     => Seq(other)
-  }
-
   /** A conjunct Catalyst would extract as a hash-join key — if one exists,
     * the join is already an equi join and the rewrite would only inflate it.
     */
@@ -123,7 +118,7 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
-        val conjuncts = splitAnd(cond)
+        val conjuncts = splitConjunctivePredicates(cond)
         val distances = conjuncts.flatMap(c => matchDistancePredicate(c).map(c -> _))
         val rest = conjuncts.filterNot(c => distances.exists(_._1 eq c))
         distances match {

@@ -66,7 +66,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Disable with Spark's own
   * `spark.sql.optimizer.excludedRules=graft.plans.BucketedRangeJoinRule`.
   */
-object BucketedRangeJoinRule extends Rule[LogicalPlan] {
+object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Grid resolution: a bucket is 2^BucketBits units of the point domain. */
   private val BucketBits = 8
@@ -106,11 +106,6 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     case _                         => None
   }
 
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other     => Seq(other)
-  }
-
   private def isCrossSideEqui(e: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
     def sides(l: Expression, r: Expression): Boolean =
       (l.references.subsetOf(left.outputSet) && r.references.subsetOf(right.outputSet)) ||
@@ -129,7 +124,7 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if j.getTagValue(widePathTag).isEmpty =>
-        val conjuncts = splitAnd(cond)
+        val conjuncts = splitConjunctivePredicates(cond)
         // Every inequality reads as a lower bound on one operand AND an
         // upper bound on the other, so interpretations are resolved by
         // PAIRING: a (lower, upper) pair qualifies only when both read the

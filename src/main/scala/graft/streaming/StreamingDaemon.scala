@@ -160,20 +160,10 @@ object StreamingDaemon {
       .start()
   }
 
-  /** Stateful per-key compaction state via flatMapGroupsWithState analog —
-    * expressed with the simpler dropDuplicates-on-stream (state store keyed
-    * dedup): keep first arrival per (key, version) within the watermark.
-    */
-  def streamingDedup(events: DataFrame, keys: Seq[String]): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .dropDuplicates(keys :+ "ts")
-
-  /** Dedup on the BUSINESS keys alone within the watermark window —
-    * [[streamingDedup]] treats (key, ts) as the identity, so the same key
-    * re-emitted with a different event time passes; this form keeps only
-    * the first arrival per key until the watermark ages the key's state
-    * out. The crawl-ingest semantics (a re-fetched page has a new
+  /** Dedup on the BUSINESS keys alone within the watermark window — the
+    * same key re-emitted with a different event time is still a duplicate:
+    * only the first arrival per key passes until the watermark ages the
+    * key's state out. The crawl-ingest semantics (a re-fetched page has a new
     * timestamp but is the same document), with state still bounded by the
     * watermark horizon rather than growing with the stream.
     */

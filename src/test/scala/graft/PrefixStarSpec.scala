@@ -46,8 +46,8 @@ class PrefixStarSpec extends AnyFunSuite with SparkSpec {
     // bucket whose size was not bounded FIRST. In q_dedup_prefix and
     // q_dedup_simhash_pairs the bucket membership collect runs on rows
     // pre-filtered to sz ∈ [2, 100] (over-cap buckets take the relational
-    // star and never reach a buffer) — since round 11 the bandPairsOf
-    // consumers (q_dedup_minhash) share exactly that shape.
+    // star and never reach a buffer) — all three go through
+    // TextQueries.cappedPairs, as q_dedup_minhash does.
     // The gates live ABOVE the localCheckpoint scans, so they are
     // visible in the final physical plan. Checked on the PRINTED tree
     // (children print after parents, so "gate index > collect index" means
