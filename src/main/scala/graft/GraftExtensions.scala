@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.expr.{DotProductF32, SqL2DistF32}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions.expr.FloatArrayKernel
+import graft.functions.expr.FloatArrayKernel.{Dot, SqL2}
 
-/** SparkSessionExtensions entry point: registers graft's custom expressions
-  * as SQL functions, so `spark.sql("SELECT graft_dot(a, b) ...")` works and
+/** SparkSessionExtensions entry point: registers the [[FloatArrayKernel]]'s
+  * dot and squared-L2 operations as the SQL functions `graft_dot` and
+  * `graft_sql2`, so `spark.sql("SELECT graft_dot(a, b) ...")` works and
   * spark-submit users can opt in with
   * `--conf spark.sql.extensions=graft.GraftExtensions`, plus the
   * [[graft.plans.BandedHammingJoinRule]] optimizer rule that turns naive
@@ -19,19 +21,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.BandedHammingJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.BucketedRangeJoinRule)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(
-        classOf[DotProductF32].getName, null, "graft_dot",
-        "graft_dot(a, b) - double-precision dot product of two float arrays", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductF32(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sql2"),
-      new ExpressionInfo(
-        classOf[SqL2DistF32].getName, null, "graft_sql2",
-        "graft_sql2(a, b) - squared L2 distance of two float arrays (double precision)", ""),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SqL2DistF32(children(0), children(1))))
+    Seq(
+      ("graft_dot", Dot, "double-precision dot product of two float arrays"),
+      ("graft_sql2", SqL2, "squared L2 distance of two float arrays (double precision)"))
+      .foreach { case (name, op, usage) =>
+        ext.injectFunction((
+          new FunctionIdentifier(name),
+          new ExpressionInfo(classOf[FloatArrayKernel].getName, null, name, s"$name(a, b) - $usage", ""),
+          (children: Seq[Expression]) => FloatArrayKernel(children(0), children(1), op)))
+      }
   }
 }

@@ -13,13 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object VectorFns {
   import org.apache.spark.sql.graftshim.GraftColumn
-  import graft.functions.expr.DotProductF32
+  import graft.functions.expr.FloatArrayKernel
+  import graft.functions.expr.FloatArrayKernel.{Cosine, Dot, SqL2}
 
-  /** Dot product in double precision — the codegen'd [[DotProductF32]]
-    * expression (hot-path form; same fold order as [[dotHof]]).
+  /** Dot product in double precision — the codegen'd [[FloatArrayKernel]]
+    * (hot-path form; same fold order as [[dotHof]]).
     */
   def dot(a: Column, b: Column): Column =
-    GraftColumn.lift2(DotProductF32.apply)(a, b)
+    GraftColumn.lift2(FloatArrayKernel(_, _, Dot))(a, b)
 
   /** Higher-order-function dot — the portable reference formulation the
     * DuckDB oracle mirrors; property-tested equal to [[dot]].
@@ -32,22 +33,22 @@ object VectorFns {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Fused squared-L2 distance (|a|²+|b|²-2a·b in ONE array pass) — see
-    * [[graft.functions.expr.SqL2DistF32]]; bit-equal to [[sqL2Composed]],
+  /** Fused squared-L2 distance (|a|²+|b|²-2a·b in ONE expression) — the
+    * [[FloatArrayKernel]]'s `SqL2`; bit-equal to [[sqL2Composed]],
     * property-tested. The PQ distance kernel.
     */
   def sqL2(a: Column, b: Column): Column =
-    GraftColumn.lift2(graft.functions.expr.SqL2DistF32.apply)(a, b)
+    GraftColumn.lift2(FloatArrayKernel(_, _, SqL2))(a, b)
 
   /** Composed three-dot form — the property-test reference for [[sqL2]]. */
   def sqL2Composed(a: Column, b: Column): Column =
     dot(a, a) + dot(b, b) - lit(2.0) * dot(a, b)
 
-  /** Fused single-expression cosine (see [[graft.functions.expr.CosineSimF32]]);
+  /** Fused single-expression cosine (the [[FloatArrayKernel]]'s `Cosine`);
     * bit-equal to [[cosineComposed]], property-tested.
     */
   def cosine(a: Column, b: Column): Column =
-    GraftColumn.lift2(graft.functions.expr.CosineSimF32.apply)(a, b)
+    GraftColumn.lift2(FloatArrayKernel(_, _, Cosine))(a, b)
 
   /** Composed form (three expression evaluations) — reference for the test. */
   def cosineComposed(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

@@ -20,19 +20,14 @@ import java.io.ByteArrayInputStream
   *
   * Scale posture: decode is a pure per-row map (no shuffle), the magic-byte
   * gate rejects non-image payloads before any codec work, and a pixel-count
-  * cap bounds per-row memory so one hostile 65k×65k header can't OOM an
-  * executor. `ImageIO.setUseCache(false)` keeps decode on-heap — the
-  * default disk-backed stream cache would write a temp file per payload.
+  * cap ([[Luma.MaxPixels]]) bounds per-row memory so one hostile 65k×65k
+  * header can't OOM an executor. `ImageIO.setUseCache(false)` keeps decode
+  * on-heap — the default disk-backed stream cache would write a temp file
+  * per payload.
   */
 object ImageIoDecode {
 
   javax.imageio.ImageIO.setUseCache(false)
-
-  /** Refuse to materialize planes past 2^24 pixels (16 MiB luma): a decode
-    * bomb (tiny file, huge declared dims) must fail the row, not the
-    * executor. Real corpus thumbnails sit orders of magnitude below this.
-    */
-  val MaxPixels: Long = 1L << 24
 
   /** Magic-byte gate: JPEG (FF D8 FF), GIF (GIF87a/GIF89a), TIFF
     * (II*\0 / MM\0*). PNG/BMP/PPM are NOT routed here — [[PngDecode]] /
@@ -48,13 +43,12 @@ object ImageIoDecode {
   }
 
   /** Luminance plane of a payload one of the JDK codecs accepts, else null.
-    * Same integer Rec.601 weighting as the hand decoders —
-    * `(299·R + 587·G + 114·B) / 1000`, truncating — over the decoded
-    * image's sRGB view, so a pixel-identical image produces the same plane
-    * regardless of which arm decoded it. Callable from generated code
-    * (static forwarder), total: every failure mode (bad stream, truncated
-    * entropy data, unsupported subformat) returns null and callers fall
-    * back to the opaque-bytes path.
+    * Same integer luma as the hand decoders ([[Luma.rec601]]) over the
+    * decoded image's sRGB view, so a pixel-identical image produces the
+    * same plane regardless of which arm decoded it. Callable from
+    * generated code (static forwarder), total: every failure mode (bad
+    * stream, truncated entropy data, unsupported subformat) returns null
+    * and callers fall back to the opaque-bytes path.
     */
   def lumaOrNull(p: Array[Byte]): Array[Byte] = {
     if (!looksDecodable(p)) return null
@@ -63,7 +57,7 @@ object ImageIoDecode {
       if (img == null) return null
       val w = img.getWidth
       val h = img.getHeight
-      if (w < 1 || h < 1 || w.toLong * h.toLong > MaxPixels) return null
+      if (w < 1 || h < 1 || w.toLong * h.toLong > Luma.MaxPixels) return null
       lumaOf(img)
     } catch {
       // ImageIO throws IIOException on corrupt streams, but hostile inputs
@@ -78,7 +72,7 @@ object ImageIoDecode {
     * TYPE_BYTE_GRAY image gamma-converts linear gray to sRGB (measured
     * meanAbsErr ≈ 64/255 on a smooth ramp vs ≈ 0.03 via the raster), which
     * would corrupt every gray JPEG's plane. Multi-band images go through
-    * the sRGB view with the same Rec.601 truncating weighting as the hand
+    * the sRGB view with the same [[Luma.rec601]] weighting as the hand
     * decoders, so a pixel-identical image produces the same plane
     * regardless of which arm decoded it.
     */
@@ -98,7 +92,7 @@ object ImageIoDecode {
         val r = (v >>> 16) & 0xff
         val g = (v >>> 8) & 0xff
         val b = v & 0xff
-        out(i) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+        out(i) = Luma.rec601(r, g, b)
         i += 1
       }
     }

@@ -15,8 +15,9 @@ package graft.multimodal
   * trailing pad bits ignored); interlace 0 (none) or 1 (Adam7 — round 9:
   * the seven passes are unfiltered independently, each against its own
   * pass neighbors per the spec, and scattered to (xs + px·dx, ys + py·dy)),
-  * at most 2^24 pixels and 2^26 raw sample bytes (the byte cap only bites
-  * 16-bit inputs — the 8-bit acceptance set is unchanged). 16-bit samples
+  * at most 2^24 pixels ([[Luma.MaxPixels]]) and 2^26 raw sample bytes
+  * (the byte cap only bites 16-bit inputs — the 8-bit acceptance set is
+  * unchanged). 16-bit samples
   * reduce to their HIGH byte (network order, v >> 8 — pure integer, both
   * engines reproduce it). IDAT chunks concatenate in order; every other
   * chunk is skipped (tRNS included — alpha is ignored for luminance).
@@ -44,14 +45,12 @@ package graft.multimodal
   * fully-valid Deflater-compressed files, filter-by-filter, including
   * Adam7 and 16-bit planes.
   *
-  * Luminance matches [[PpmDecode]] exactly: integer Rec.601 truncating
-  * division `(299*R + 587*G + 114*B) / 1000`; gray samples pass through,
-  * alpha is ignored (dedup compares content, not transparency).
+  * Luminance is [[Luma.rec601]], as in every decoder; gray samples pass
+  * through, alpha is ignored (dedup compares content, not transparency).
   */
 object PngDecode {
 
   private val Sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-  private val MaxPixels = 1 << 24 // 16 Mpx ≈ 16 MB plane: bounds executor memory per row
   private val MaxSampleBytes = 1L << 26 // pixel plane bytes incl. 16-bit samples
 
   /** Adam7 pass geometry: (xStart, yStart, xStep, yStep), spec order. The
@@ -98,8 +97,8 @@ object PngDecode {
         // 2^32−1, so a crafted 0xFFFFFFFF×0xFFFFFFFF header would wrap
         // wL*hL negative and sail past both caps, decoding to a bogus
         // 1-byte "plane" (spec-pinned reject).
-        if (wL < 1 || hL < 1 || wL > MaxPixels || hL > MaxPixels ||
-          wL * hL > MaxPixels) return null
+        if (wL < 1 || hL < 1 || wL > Luma.MaxPixels || hL > Luma.MaxPixels ||
+          wL * hL > Luma.MaxPixels) return null
         w = wL.toInt; h = hL.toInt
         depth = p(dataOff + 8) & 0xff
         colorType = p(dataOff + 9) & 0xff
@@ -293,7 +292,7 @@ object PngDecode {
         val r = palette(3 * j) & 0xff
         val g = palette(3 * j + 1) & 0xff
         val b = palette(3 * j + 2) & 0xff
-        lut(j) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+        lut(j) = Luma.rec601(r, g, b)
         j += 1
       }
       val out = new Array[Byte](w * h)
@@ -320,7 +319,7 @@ object PngDecode {
         val r = pix(base) & 0xff
         val g = pix(base + sampleBytes) & 0xff
         val b = pix(base + 2 * sampleBytes) & 0xff
-        out(k) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+        out(k) = Luma.rec601(r, g, b)
       }
       k += 1
     }

@@ -15,9 +15,8 @@ package graft.multimodal
   * section must be exactly the declared size — anything else returns null
   * and callers fall back to the opaque-bytes path.
   *
-  * Luminance is the integer Rec.601 weighting, truncating division —
-  * `(299*R + 587*G + 114*B) / 1000` — so a DuckDB oracle reproduces the
-  * plane exactly with `//` arithmetic.
+  * Luminance is [[Luma.rec601]], the integer Rec.601 weighting, so a
+  * DuckDB oracle reproduces the plane exactly with `//` arithmetic.
   */
 object PpmDecode {
 
@@ -102,7 +101,7 @@ object PpmDecode {
       val r = p(i + 3 * k) & 0xff
       val g = p(i + 3 * k + 1) & 0xff
       val b = p(i + 3 * k + 2) & 0xff
-      out(k) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+      out(k) = Luma.rec601(r, g, b)
       k += 1
     }
     out
@@ -147,7 +146,7 @@ object PpmDecode {
         val b = p(base + 3 * x) & 0xff // BGR order in BMP
         val g = p(base + 3 * x + 1) & 0xff
         val r = p(base + 3 * x + 2) & 0xff
-        out(row * w + x) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+        out(row * w + x) = Luma.rec601(r, g, b)
         x += 1
       }
       row += 1

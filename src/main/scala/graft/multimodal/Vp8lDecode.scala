@@ -37,12 +37,10 @@ package graft.multimodal
   * (x ∈ [-7,8], y ∈ [0,7]) sorted by x²+y², then |x|, then sign), head-
   * pinned in the spec and byte-identical to libwebp's kCodeToPlane table.
   *
-  * Luminance matches [[PpmDecode]]/[[PngDecode]] exactly: integer Rec.601
-  * truncating division `(299*R + 587*G + 114*B) / 1000`; alpha ignored.
+  * Luminance is [[Luma.rec601]], as in [[PpmDecode]]/[[PngDecode]]; alpha
+  * ignored.
   */
 object Vp8lDecode {
-
-  private val MaxPixels = 1 << 24
 
   /** LSB-first bit reader over the VP8L payload, buffered 64 bits at a
     * time with an un-consuming 8-bit lookahead for the prefix LUT.
@@ -320,7 +318,7 @@ object Vp8lDecode {
     * Returns null on any malformation.
     */
   private def decodeImage(br: Br, w: Int, h: Int, level0: Boolean): Array[Int] = {
-    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return null
+    if (w <= 0 || h <= 0 || w.toLong * h > Luma.MaxPixels) return null
     val nPix = w * h
 
     val hasCache = br.bits(1) == 1
@@ -580,7 +578,7 @@ object Vp8lDecode {
     val h = br.bits(14) + 1
     br.bits(1) // alpha-is-used hint
     if (br.bits(3) != 0 || !br.ok) return null // version must be 0
-    if (w0.toLong * h > MaxPixels) return null
+    if (w0.toLong * h > Luma.MaxPixels) return null
 
     // Transforms, in read order; each type at most once.
     var transforms = List.empty[Transform]
@@ -698,7 +696,7 @@ object Vp8lDecode {
       val r = (px >> 16) & 0xff
       val g = (px >> 8) & 0xff
       val b = px & 0xff
-      luma(i) = ((299 * r + 587 * g + 114 * b) / 1000).toByte
+      luma(i) = Luma.rec601(r, g, b)
       i += 1
     }
     luma

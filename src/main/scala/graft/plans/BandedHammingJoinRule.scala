@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -32,10 +33,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * Scope guards (rewrite ONLY when it is a strict win):
   *   - the join condition is a conjunction containing exactly one distance
-  *     predicate and NO cross-side equi conjunct (an equi key already gives
-  *     Catalyst a hash join — rewriting would only inflate it; this also
-  *     keeps the rule from re-matching its own output, whose condition
-  *     carries the band-key equi conjuncts). Other conjuncts — the
+  *     predicate and NO cross-side equi conjunct, i.e. no key Catalyst's
+  *     `ExtractEquiJoinKeys` finds (an equi key already gives Catalyst a
+  *     hash join — rewriting would only inflate it; this also keeps the
+  *     rule from re-matching its own output, whose condition carries the
+  *     band-key equi conjuncts). Other conjuncts — the
   *     ubiquitous `a.id < b.id` pair-ordering tiebreak — ride along as
   *     residual filters;
   *   - both distance operands are single-side deterministic LongType
@@ -101,20 +103,6 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     (gen, pos, bval)
   }
 
-  /** A conjunct Catalyst would extract as a hash-join key — if one exists,
-    * the join is already an equi join and the rewrite would only inflate it.
-    */
-  private def isCrossSideEqui(e: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    def sides(l: Expression, r: Expression): Boolean =
-      (l.references.subsetOf(left.outputSet) && r.references.subsetOf(right.outputSet)) ||
-        (l.references.subsetOf(right.outputSet) && r.references.subsetOf(left.outputSet))
-    e match {
-      case EqualTo(l, r)       => sides(l, r)
-      case EqualNullSafe(l, r) => sides(l, r)
-      case _                   => false
-    }
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
@@ -125,7 +113,7 @@ object BandedHammingJoinRule extends Rule[LogicalPlan] with PredicateHelper {
           case Seq((_, (a, b, k))) if k >= 0 && k <= MaxK &&
               a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet) &&
               a.deterministic && b.deterministic &&
-              !rest.exists(isCrossSideEqui(_, left, right)) && rest.forall(_.deterministic) =>
+              ExtractEquiJoinKeys.unapply(j).isEmpty && rest.forall(_.deterministic) =>
             val nBands = k + 1
             val w = 64 / nBands
             val (genL, posL, bvalL) = explodeBands(left, a, nBands, w, "l")

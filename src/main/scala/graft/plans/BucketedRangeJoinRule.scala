@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -38,7 +39,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     inequalities participate (the bucket cover is implied by the
   *     non-strict relaxation; the strict predicate itself rides as the
   *     residual);
-  *   - NO cross-side equi conjunct (an equi key already gives Catalyst a
+  *   - NO cross-side equi conjunct, i.e. no key Catalyst's
+  *     `ExtractEquiJoinKeys` finds (an equi key already gives Catalyst a
   *     hash join — and this also keeps the rule from re-matching its own
   *     output, whose condition carries the bucket equi key). Remaining
   *     conjuncts ride along as residual filters.
@@ -106,17 +108,6 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     case _                         => None
   }
 
-  private def isCrossSideEqui(e: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    def sides(l: Expression, r: Expression): Boolean =
-      (l.references.subsetOf(left.outputSet) && r.references.subsetOf(right.outputSet)) ||
-        (l.references.subsetOf(right.outputSet) && r.references.subsetOf(left.outputSet))
-    e match {
-      case EqualTo(l, r)       => sides(l, r)
-      case EqualNullSafe(l, r) => sides(l, r)
-      case _                   => false
-    }
-  }
-
   private def bucket(x: Expression): Expression =
     ShiftRight(x, Literal(BucketBits, IntegerType))
 
@@ -156,7 +147,7 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     val pointRight = p.references.subsetOf(right.outputSet) &&
       lo.references.subsetOf(left.outputSet) && hi.references.subsetOf(left.outputSet)
     val sidesOk = (pointLeft || pointRight) && rest.forall(_.deterministic) &&
-      !rest.exists(isCrossSideEqui(_, left, right))
+      ExtractEquiJoinKeys.unapply(j).isEmpty
     if (!sidesOk) return j
 
     // Constant bounds decide narrow/wide at REWRITE time: every interval

@@ -121,10 +121,16 @@ object StreamingDaemon {
     val marker = store.resolve(s"_applied/batch-$batchId")
     if (Files.exists(marker)) return false
     val prior = readMergeStore(spark, storeDir, batch)
-    val batchLww = Compaction.lastWriteWins(batch, keys, orderCols)
+    // Last write wins by `orderCols` across batches, not by arrival: a late
+    // batch's older version loses to the stored one. Only prior rows of
+    // the keys the batch touches enter the LWW; the rest pass through.
+    // The touched keys stay undeduplicated: the semi and anti joins need no
+    // unique keys, and a distinct would add an exchange before the merge.
+    val touched = batch.select(keys.map(col): _*)
     val merged = prior
-      .join(batchLww.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(batchLww)
+      .join(touched, keys, "left_anti")
+      .unionByName(Compaction.lastWriteWins(
+        prior.join(touched, keys, "left_semi").unionByName(batch), keys, orderCols))
     val snap = s"snap-$batchId"
     SnapshotStore.commit(store.resolve(snap))(merged.write.parquet(_))
     SnapshotStore.point(store.resolve("LATEST"), snap)
@@ -134,7 +140,7 @@ object StreamingDaemon {
   }
 
   /** The idempotent foreachBatch MERGE sink: every micro-batch UPSERTS into
-    * a single keyed store (the batch q_merge_upsert semantics), and replays
+    * a single keyed store (last write wins by `orderCols`), and replays
     * are no-ops via [[applyMergeBatch]]'s ledger and snapshot commit. This
     * is the stream → serving-table bridge: the store is always one
     * consistent LWW snapshot of everything ingested so far.

@@ -305,7 +305,7 @@ class DecodeFuzzSpec extends AnyFunSuite {
   }
 
   test("ImageIO arm (JPEG/GIF/TIFF): seeded fuzz never throws; truncation sweep; decode-bomb cap; magic-byte gate") {
-    import graft.multimodal.ImageIoDecode
+    import graft.multimodal.{ImageIoDecode, Luma}
     def via(fmt: String, bi: java.awt.image.BufferedImage): Array[Byte] = {
       val baos = new java.io.ByteArrayOutputStream()
       assert(javax.imageio.ImageIO.write(bi, fmt, baos), s"JDK cannot write $fmt")
@@ -327,7 +327,7 @@ class DecodeFuzzSpec extends AnyFunSuite {
         val got = driveOnce(ImageIoDecode.lumaOrNull _, corrupt(rnd, pristine), s"$name trial=$trial")
         if (got != null) {
           accepted += 1
-          assert(got.nonEmpty && got.length <= ImageIoDecode.MaxPixels,
+          assert(got.nonEmpty && got.length <= Luma.MaxPixels,
             s"$name trial=$trial: plane size ${got.length} outside the decode cap")
         }
       }

@@ -221,6 +221,83 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(got(1).isNullAt(0))
   }
 
+  test("float-array kernel: interpreted eval equals the generated code and the composed reference for dot, cosine and sql2") {
+    // DataFrame tests over local Seqs run the interpreted path (the
+    // optimizer folds a projection of a local relation in place), so the
+    // generated code is compiled here directly, without the interpreted
+    // fallback, and both paths are held to each other and to the reference.
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions.expr.FloatArrayKernel
+    import graft.functions.expr.FloatArrayKernel.{Cosine, Dot, SqL2}
+    val arg = (i: Int) => BoundReference(i, ArrayType(FloatType, containsNull = false), nullable = true)
+    val ops = Seq(Dot, Cosine, SqL2)
+    val kernels = ops.map(FloatArrayKernel(arg(0), arg(1), _))
+    val generated = GenerateUnsafeProjection.generate(kernels)
+    // (interpreted, generated) per operation
+    def both(a: Array[Float], b: Array[Float]): Seq[(Any, Any)] = {
+      val row = InternalRow(Option(a).map(ArrayData.toArrayData).orNull, Option(b).map(ArrayData.toArrayData).orNull)
+      val out = generated(row)
+      kernels.indices.map(i => (kernels(i).eval(row), if (out.isNullAt(i)) null else out.getDouble(i)))
+    }
+
+    val rnd = new scala.util.Random(59)
+    val vecs = Seq.fill(50)((
+      Array.fill(48)(rnd.nextFloat() * 2 - 1),
+      Array.fill(48)(rnd.nextFloat() * 2 - 1)))
+    val refs = vecs.toDF("a", "b").select(
+      VectorFns.dotHof(col("a"), col("b")),
+      VectorFns.cosineComposed(col("a"), col("b")),
+      VectorFns.sqL2Composed(col("a"), col("b"))).collect()
+    for (((a, b), ref) <- vecs.zip(refs); ((interpreted, gen), i) <- both(a, b).zipWithIndex) {
+      assert(interpreted == gen, s"${ops(i)}: interpreted $interpreted, generated $gen")
+      assert(interpreted == ref.getDouble(i), s"${ops(i)}: kernel $interpreted, reference ${ref.getDouble(i)}")
+    }
+
+    // null input -> null in both paths
+    val nulls: Seq[(Array[Float], Array[Float])] = Seq((null, Array(1f)), (Array(1f), null), (null, null))
+    for ((a, b) <- nulls) assert(both(a, b) == ops.map(_ => (null, null)), s"${Option(a)} ${Option(b)}")
+
+    // mismatched lengths: the dot over min(len), each norm over its whole array
+    val (dot, na, nb) = (1.0 * 4 + 2.0 * 5, 1.0 + 4 + 9, 16.0 + 25)
+    val want = Seq(dot, dot / (math.sqrt(na) * math.sqrt(nb)), na + nb - 2.0 * dot)
+    assert(both(Array(1f, 2f, 3f), Array(4f, 5f)) == want.map(v => (v, v)))
+    assert(both(Array(4f, 5f), Array(1f, 2f, 3f)) == want.map(v => (v, v)))
+  }
+
+  test("one float-array fold and one luma formula: src/main/scala spells each only in its definition") {
+    // A second expression folding float arrays, or a second copy of the
+    // Rec.601 weights or of the 2^24 pixel cap, lets the copies drift
+    // apart. Comments are skipped: docs may quote the formula.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
+    val kernel = root.resolve("graft/functions/expr/FloatArrayKernel.scala")
+    val luma = root.resolve("graft/multimodal/Luma.scala")
+    // (pattern, its one home, code lines expected there)
+    val spellings = Seq(
+      ("""\bgetFloat\(|\btoFloatArray\(""".r, kernel, 2), // the interpreted and the generated fold
+      ("""\b299\b.*\b587\b.*\b114\b""".r, luma, 1),
+      ("""\b1L?\s*<<\s*24\b""".r, luma, 1))
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val code = files.flatMap(f => Files.readAllLines(f).asScala.zipWithIndex.collect {
+      case (line, i) if !Seq("*", "/*", "//").exists(line.trim.startsWith) =>
+        (f, s"$f:${i + 1}: ${line.trim}", line.replaceAll("//.*", ""))
+    })
+    for ((re, home, n) <- spellings) {
+      val (own, stray) = code.filter(c => re.findFirstIn(c._3).isDefined).partition(_._1 == home)
+      assert(stray.isEmpty, stray.map(_._2).mkString("\n"))
+      assert(own.size == n, s"$re: expected $n code line(s) in $home, found ${own.map(_._2)}")
+    }
+  }
+
   test("graft_dot is registered as a SQL function via GraftExtensions") {
     val got = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
       .selectExpr("graft_dot(a, b)").as[Double].collect().head

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.multimodal.{ImageIoDecode, MediaPipeline}
+import graft.multimodal.{ImageIoDecode, Luma, MediaPipeline}
 
 /** The JDK-codec decode arm (JPEG / GIF / TIFF via javax.imageio): golden
   * roundtrips per format, the gamma trap (gray rasters read through
@@ -113,7 +113,7 @@ class ImageIoDecodeSpec extends AnyFunSuite with SparkSpec {
     // A 1×(MaxPixels+1) gray TIFF header would allocate 16 MiB+ per row;
     // the guard must bail before materializing. Craft via a real encode of
     // modest size, then assert the guard constant is wired (unit-level).
-    assert(ImageIoDecode.MaxPixels == (1L << 24))
+    assert(Luma.MaxPixels == (1L << 24))
     val ok = ImageIoDecode.encodeGrayJpeg(gradPlane(8, 8), width = 8)
     assert(ImageIoDecode.lumaOrNull(ok) != null)
   }
