@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * never exercise (one JVM = nothing to kill).
   *
   * Runs the two memoized pipelines the switch guards — the
-  * `q_dedup_components` contraction chain and the vector IVF memo path —
+  * `q_dedup_components` banding chain and the vector IVF memo path —
   * on `local-cluster[2,2,1024]` (real standalone scheduler, 2 separate
   * executor JVMs), pins everything to a fault-tolerant checkpoint dir,
   * then SIGKILLs one executor JVM and re-consumes the pinned artifacts:

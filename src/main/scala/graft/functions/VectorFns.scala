@@ -87,4 +87,12 @@ object VectorFns {
       when(get(v, lit(j + offset)) > 0, lit(1 << j)).otherwise(lit(0)))
       .reduce(_ + _)
   }
+
+  /** The embedding LSH banding: an array of 8 band buckets, band b the
+    * [[signBucketAt]] of dims [8b, 8b + 8). `q_dedup_embed`'s candidates
+    * and the streaming ingest gate both band with it, so the gate finds
+    * the pairs the batch query does.
+    */
+  def signBands(v: Column): Column =
+    array((0 until 8).map(b => signBucketAt(v, b * 8, 8)): _*)
 }

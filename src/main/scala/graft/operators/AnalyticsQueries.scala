@@ -1053,7 +1053,6 @@ object AnalyticsQueries extends QueryPack {
     // recursion: level k holds every customer still walking after k
     // orders, and ONE equi join per level (on o_custkey, against the
     // rn-indexed order table) advances all of them in parallel — the
-    // UnionLoop analog of Components' star-contraction loop, and the
     // shape windows cannot express when the step depends on the
     // accumulated state (here the stop condition consumes the running
     // sum mid-walk). The rn table is materialized ONCE (Memo.pin)

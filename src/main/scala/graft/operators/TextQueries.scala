@@ -509,7 +509,7 @@ object TextQueries extends QueryPack {
     * ON the clustering output rather than re-deriving it: production
     * clusters once per snapshot and every downstream output (kept corpus,
     * stats, audits) reads that table. q_dedup_components itself does NOT go
-    * through this memo — it times the contraction honestly on every run.
+    * through this memo — it times the labelling honestly on every run.
     */
   private val clusterLabels = Memo.artifact("documents")(dedupClusters)
 
@@ -1146,11 +1146,9 @@ object TextQueries extends QueryPack {
     // X2f: duplicate CLUSTERS — connected components over the MinHash
     // candidate graph, the pass that turns pairwise near-dup hits into
     // keep/drop groups (cluster_id = min doc_id of the component, the
-    // canonical keeper). [[Components]]: union-find on the driver for a
-    // graph of at most DriverMaxEdges edges (one bounded collect), alternating
-    // large-star/small-star contraction above it — O(log n) rounds, a
-    // per-round checksum, and a THROW, not silent partial labels, if the
-    // iteration cap is ever hit.
+    // canonical keeper). [[Components]]: union-find on the driver over one
+    // bounded collect; a graph above DriverMaxEdges (2^20) edges THROWS,
+    // naming the cap.
     "q_dedup_components" -> ((s, d) =>
       dedupClusters(s, d).orderBy(col("doc_id"))),
 
@@ -1351,7 +1349,7 @@ object TextQueries extends QueryPack {
     // (re-clustering 100 TB nightly is not viable; this is the daily-crawl
     // production path). The fold contracts only the QUOTIENT graph: corpus
     // endpoints of new edges collapse to their stored label, so the graph
-    // star-contraction sees is sized by the day's edges, never the corpus.
+    // Components labels is sized by the day's edges, never the corpus.
     // Exact, not approximate: corpus labels are component minima, so
     // collapsing a component to its label preserves both connectivity and
     // the min — the fold provably equals full recontraction over the same
@@ -2449,7 +2447,7 @@ object TextQueries extends QueryPack {
 
   /** Shared CTE chain: the clustering family's edge set → exact transitive
     * closure (`reach`), the ground truth q_dedup_components / q_dedup_keep
-    * verify the star-contraction labels against. Mirrors [[starEdgesOf]]:
+    * verify the [[Components]] labels against. Mirrors [[starEdgesOf]]:
     * since round 9 the clustering input star-recovers over-cap buckets
     * (NO upper size gate — every bucket of ≥2 docs contributes min→member
     * edges), so the closure here runs over the per-bucket star edge set,

@@ -127,8 +127,7 @@ object VectorQueries extends QueryPack {
     // (dedup before vs after the deterministic cosine is equivalent).
     val banded = e.select(
         col("vec_id"),
-        posexplode(array((0 until 8).map(b =>
-          VectorFns.signBucketAt(col("embedding"), b * 8, 8)): _*)))
+        posexplode(VectorFns.signBands(col("embedding"))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkt")
     // Pinned (round 21): both self-join sides read this table; unpinned,
     // the 8-band posexplode (sign-bucket projections) plus the bucket-size

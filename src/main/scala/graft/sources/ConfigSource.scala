@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.io.{FileInputStream, FileOutputStream}
-import java.nio.file.{Files, Path}
+import java.io.FileInputStream
+import java.nio.file.Path
 import java.util.Properties
 import scala.util.{Failure, Success, Try}
 
@@ -69,9 +69,11 @@ object CompactionConfig {
 final class CursorCheckpoint(path: String) {
   private val target: Path = SnapshotStore.local(path)
 
-  def read(): Int =
-    if (Files.exists(target)) new String(Files.readAllBytes(target), "UTF-8").trim.toInt
-    else 0
+  /** The stored cursor, 0 before the first write. A file that does not
+    * hold an integer throws, naming the path and its content.
+    */
+  def read(): Int = SnapshotStore.pointed(target).fold(0)(v => v.toIntOption.getOrElse(
+    throw new IllegalStateException(s"$target: cursor checkpoint holds '$v', not an integer")))
 
   def write(cursor: Int): Unit = SnapshotStore.point(target, cursor.toString)
 

@@ -224,8 +224,7 @@ object Memo {
     *    The dataset is persisted around the checkpoint call: Spark's
     *    reliable checkpoint writes files in a SECOND pass after the
     *    eager action, which would recompute the whole un-cached lineage
-    *    (doubling every pin — fatal for iterative consumers like the
-    *    [[graft.operators.Components]] contraction loop); the transient
+    *    (doubling the cost of every pin); the transient
     *    cache makes that pass a block read, and is dropped once the
     *    checkpoint files exist. Required for long multi-stage production
     *    runs (the 100 TB posture) where re-running from source on one

@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * so writers of one family with distinct versions must not run
   * concurrently. Other stores (compaction output, the merge store, the
   * ingest stores) commit at their own paths with `commit(target)` or
-  * [[create]] and swap their pointers with [[point]].
+  * [[create]] and swap their pointers with [[point]], read back by
+  * [[pointed]].
   */
 object SnapshotStore {
 
@@ -85,6 +86,12 @@ object SnapshotStore {
       Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** The value [[point]] last stored in `pointer`, trimmed, or None before
+    * the first swap.
+    */
+  def pointed(pointer: Path): Option[String] =
+    if (Files.exists(pointer)) Some(new String(Files.readAllBytes(pointer), "UTF-8").trim) else None
 
   /** The committed directory of `version` in `family`, through
     * `commit(target)`. `publish` runs on the committed directory; then

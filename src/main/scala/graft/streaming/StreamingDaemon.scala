@@ -85,10 +85,8 @@ object StreamingDaemon {
     */
   private[graft] def readMergeStore(
       spark: SparkSession, storeDir: String, schemaFrom: DataFrame): DataFrame = {
-    val ptr = SnapshotStore.local(storeDir).resolve("LATEST")
-    if (Files.exists(ptr))
-      spark.read.parquet(s"$storeDir/${new String(Files.readAllBytes(ptr), "UTF-8").trim}")
-    else schemaFrom.limit(0)
+    SnapshotStore.pointed(SnapshotStore.local(storeDir).resolve("LATEST"))
+      .fold(schemaFrom.limit(0))(snap => spark.read.parquet(s"$storeDir/$snap"))
   }
 
   /** One exactly-once MERGE application of micro-batch `batchId`. Returns
@@ -208,8 +206,7 @@ object StreamingDaemon {
     */
   def embedBandKeys(df: DataFrame): DataFrame =
     df.select(col("doc_id"), col("embedding"),
-        posexplode(array((0 until 8).map(b =>
-          graft.functions.VectorFns.signBucketAt(col("embedding"), b * 8, 8)): _*)))
+        posexplode(graft.functions.VectorFns.signBands(col("embedding"))))
       .select(col("doc_id"), col("embedding"),
         concat_ws(":", col("pos"), col("col")).as("ekey"))
 

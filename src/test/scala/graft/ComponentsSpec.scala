@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Components
 
@@ -25,81 +26,60 @@ class ComponentsSpec extends AnyFunSuite with SparkSpec {
     verts.map(v => v -> find(v)).toMap
   }
 
-  /** Labels from both paths — driver union-find ([[Components.labels]])
-    * and star contraction ([[Components.contract]]) — on the same input,
-    * after checking that the two output schemas are equal.
+  /** [[Components.labels]] of `df` as a map, after checking the output
+    * schema: v and lbl of the input's id type, both nullable.
     */
-  private def bothPaths(df: DataFrame, maxIter: Int = 25): (Map[Long, Long], Map[Long, Long]) = {
-    val (driver, star) = (Components.labels(df, maxIter), Components.contract(df, maxIter))
-    assert(driver.schema == star.schema)
-    def collect(out: DataFrame) =
-      out.select(col("v").cast("long"), col("lbl").cast("long")).as[(Long, Long)].collect().toMap
-    (collect(driver), collect(star))
+  private def labelsOf(df: DataFrame): Map[Long, Long] = {
+    val out = Components.labels(df)
+    val idType = df.schema("u").dataType
+    assert(out.schema == StructType(Seq(StructField("v", idType), StructField("lbl", idType))))
+    out.select(col("v").cast("long"), col("lbl").cast("long")).as[(Long, Long)].collect().toMap
   }
 
-  private def starLabels(edges: Seq[(Long, Long)], maxIter: Int = 25): Map[Long, Long] =
-    Components.contract(edges.toDF("u", "v"), maxIter)
-      .as[(Long, Long)].collect().toMap
-
-  test("property: star contraction equals union-find on random graphs") {
-    // Each graph runs through both paths: driver union-find (labels) and
-    // star contraction (contract), with equal output schemas. Random edges
-    // include duplicates, reversed pairs and self-loops; half the trials
-    // use IntegerType ids, half LongType.
+  test("property: labels equals union-find on random graphs") {
+    // Random edges include duplicates, reversed pairs and self-loops; half
+    // the trials use IntegerType ids, half LongType. The last graph is a
+    // 200-node path (diameter 199).
     val rnd = new scala.util.Random(47)
-    for (trial <- 1 to 8) {
+    val graphs = Seq.fill(8) {
       val n = 10 + rnd.nextInt(40)
-      val m = 5 + rnd.nextInt(60)
-      val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      Seq.fill(5 + rnd.nextInt(60))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    } :+ (0L until 199L).map(i => (i + 1, i))
+    for ((edges, trial) <- graphs.zipWithIndex) {
       val df =
         if (trial % 2 == 0) edges.map(e => (e._1.toInt, e._2.toInt)).toDF("u", "v")
         else edges.toDF("u", "v")
-      val want = ufLabels(edges)
-      val (driver, star) = bothPaths(df)
-      assert(driver == want, s"trial $trial driver: $edges")
-      assert(star == want, s"trial $trial star: $edges")
+      assert(labelsOf(df) == ufLabels(edges), s"trial $trial: $edges")
     }
-  }
-
-  test("long path converges to the min root in O(log n) rounds") {
-    // A 200-node path has diameter 199 — min-label propagation at the old
-    // 20-round cap would return silently-partial labels; star contraction
-    // must finish (and label everything 0) well inside 25 rounds.
-    val edges = (0L until 199L).map(i => (i, i + 1))
-    val got = starLabels(edges)
-    assert(got.size == 200 && got.values.forall(_ == 0L))
-  }
-
-  test("exhausting the iteration cap throws instead of returning partial labels") {
-    val edges = (0L until 63L).map(i => (i, i + 1))
-    val e = intercept[IllegalStateException](starLabels(edges, maxIter = 1))
-    assert(e.getMessage.contains("did not converge"))
-  }
-
-  test("edge digest separates sets the old (count, sum, sum) triple confused") {
-    // {(3,1),(4,2)} and {(4,1),(3,2)} share count=2, sum(u)=7, sum(v)=3 —
-    // the collision ADVICE flagged. The hash-XOR digest must tell them
-    // apart, and must be order-insensitive for a permuted equal set.
-    val a = Seq((3L, 1L), (4L, 2L)).toDF("u", "v")
-    val b = Seq((4L, 1L), (3L, 2L)).toDF("u", "v")
-    val aPermuted = Seq((4L, 2L), (3L, 1L)).toDF("u", "v")
-    assert(Components.edgeDigest(a) != Components.edgeDigest(b))
-    assert(Components.edgeDigest(a) == Components.edgeDigest(aPermuted))
   }
 
   test("self-loops and duplicate/reversed edges are normalized away") {
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 2L), (1L, 2L), (4L, 3L), (5L, 5L))
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L)
-    assert(bothPaths(edges.toDF("u", "v")) == ((want, want)))
-    assert(bothPaths(edges.map(e => (e._1.toInt, e._2.toInt)).toDF("u", "v")) == ((want, want)))
+    assert(labelsOf(edges.toDF("u", "v")) == want)
+    assert(labelsOf(edges.map(e => (e._1.toInt, e._2.toInt)).toDF("u", "v")) == want)
   }
 
-  test("an edge with a null endpoint is dropped on both paths") {
-    // Vertex 7 appears only beside a null, so it is in neither output.
+  test("an edge with a null endpoint is dropped") {
+    // Vertex 7 appears only beside a null, so it is not in the output.
     val edges = Seq((Some(1L), Some(2L)), (None, Some(7L)), (Some(3L), None), (Some(2L), Some(3L)),
       (None, None))
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L)
-    assert(bothPaths(edges.toDF("u", "v")) == ((want, want)))
+    assert(labelsOf(edges.toDF("u", "v")) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("a graph above DriverMaxEdges is rejected, naming the cap") {
+    // DriverMaxEdges + 1 distinct edges of one path: normalized edges are
+    // counted, so the input is past the cap by exactly one.
+    val edges = spark.range(Components.DriverMaxEdges + 1L)
+      .select((col("id") + 1).as("u"), col("id").as("v"))
+    val e = intercept[IllegalArgumentException](Components.labels(edges))
+    assert(e.getMessage.contains("1048576"), e.getMessage)
+  }
+
+  test("non-integral vertex ids are rejected, naming the type") {
+    val e = intercept[IllegalArgumentException](
+      Components.labels(Seq(("a", "b"), ("b", "c")).toDF("u", "v")))
+    assert(e.getMessage.contains("string"), e.getMessage)
   }
 
   /** `f`'s result and the Spark jobs started while it runs, counted by a
@@ -128,24 +108,21 @@ class ComponentsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("labels on a 60-edge graph runs at most 2 Spark jobs") {
-    // The driver path's bounded collect is its only action (two jobs over
-    // a two-partition input: the limit's exchange and the result); star
-    // contraction on the same graph pays a checkpoint job per round.
+    // The bounded collect is the only action: two jobs over a
+    // two-partition input, the limit's exchange and the result.
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(60)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
     val df = edges.toDF("u", "v").repartition(2).localCheckpoint()
-    val (driver, viaDriver) = jobsRunBy(Components.labels(df))
-    val (star, viaStar) = jobsRunBy(Components.contract(df, 25))
-    assert(viaDriver <= 2, s"labels ran $viaDriver jobs")
-    assert(viaStar > 2, s"contract ran $viaStar jobs")
-    for (out <- Seq(driver, star)) assert(out.as[(Long, Long)].collect().toMap == ufLabels(edges))
+    val (out, jobs) = jobsRunBy(Components.labels(df))
+    assert(jobs <= 2, s"labels ran $jobs jobs")
+    assert(out.as[(Long, Long)].collect().toMap == ufLabels(edges))
   }
 
   test("incremental fold equals full recontraction over the same edge set") {
     // The q_dedup_cluster_incremental claim, stated directly: folding the
-    // new snapshot's edges into the corpus label store (contracting only
+    // new snapshot's edges into the corpus label store (labelling only
     // the quotient graph) must produce EXACTLY the labels a from-scratch
-    // contraction of corpus ∪ new edges produces.
+    // labelling of corpus ∪ new edges produces.
     val d = "/root/testdata/sf0.001"
     val fold = SparkEntry.queries("q_dedup_cluster_incremental")(spark, d)
       .as[(Long, Long)].collect().toMap

@@ -55,6 +55,13 @@ class ConfigSourceSpec extends AnyFunSuite with SparkSpec {
     assert(ckp.read() == 1)
   }
 
+  test("a malformed cursor checkpoint throws naming its path and content") {
+    val path = tempDir("ckp-bad").resolve("cursor")
+    Files.write(path, "12x".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](new CursorCheckpoint(path.toString).read())
+    assert(e.getMessage.contains(path.toString) && e.getMessage.contains("12x"), e.getMessage)
+  }
+
   test("the only spark.graft.* session key the library reads is spark.graft.checkpoint.mode") {
     // One spelling per decision: a new option needs a workload on each side
     // of the choice it selects. Scans the sources for key literals.

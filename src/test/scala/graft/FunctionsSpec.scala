@@ -1,11 +1,38 @@
 package graft
 
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFns, VectorFns}
+import graft.functions.expr.{BandedEditDistance, ByteGradientHash, StringPolyHash, TokenShingles}
 
 class FunctionsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
+
+  /** Per input row, each expression's (interpreted `eval`, generated code)
+    * values as Scala values. DataFrame tests over local Seqs run only the
+    * interpreted path (the optimizer folds a projection of a local
+    * relation in place), so the generated code is compiled here directly,
+    * without the interpreted fallback.
+    */
+  private def interpretedAndGenerated(exprs: Seq[Expression], rows: Seq[InternalRow]): Seq[Seq[(Any, Any)]] = {
+    val generated = GenerateUnsafeProjection.generate(exprs)
+    def scala(v: Any, t: DataType) = CatalystTypeConverters.convertToScala(v, t)
+    rows.map { row =>
+      val out = generated(row)
+      exprs.indices.map { i =>
+        val t = exprs(i).dataType
+        (scala(exprs(i).eval(row), t), scala(if (out.isNullAt(i)) null else out.get(i, t), t))
+      }
+    }
+  }
+
+  /** Column `i` of a bound row. */
+  private def arg(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
 
   test("rollingHash matches the reference fold computed in plain Scala") {
     def fold(s: String): Long =
@@ -18,11 +45,13 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
   test("property: codegen StringPolyHash equals the HOF fold on random strings") {
     val rnd = new scala.util.Random(23)
     val inputs = Seq.fill(100)(rnd.alphanumeric.take(rnd.nextInt(60) + 1).mkString(" "))
-    val df = inputs.toDF("s")
-    val got = df.select(
-      TextFns.rollingHash(col("s")).as("fast"),
-      TextFns.rollingHashHof(col("s")).as("ref")).collect()
-    got.foreach(r => assert(r.getLong(0) == r.getLong(1)))
+    val refs = inputs.toDF("s").select(TextFns.rollingHashHof(col("s"))).as[Long].collect()
+    val got = interpretedAndGenerated(Seq(StringPolyHash(arg(0, StringType))),
+      (inputs :+ null).map(s => InternalRow(UTF8String.fromString(s))))
+    for ((Seq((interpreted, generated)), want) <- got.zip(refs.toSeq :+ null)) {
+      assert(interpreted == generated, s"interpreted $interpreted, generated $generated")
+      assert(interpreted == want, s"expression $interpreted, HOF fold $want")
+    }
   }
 
   test("property: BandedEditDistance equals the thresholded builtin levenshtein") {
@@ -41,21 +70,22 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
       (a, b, rnd.nextInt(8))
     } ++ Seq(("", "", 0), ("", "abc", 2), ("abc", "", 5), ("abc", "abc", 0),
       ("aa", "a", 1), ("a", "aa", 0))
-    for ((a, b, t) <- pairs) {
+    val fulls = pairs.map { case (a, b, t) =>
       val fast = graft.functions.expr.EditDistOps.banded(a, b, t)
       val full = Seq((a, b)).toDF("a", "b")
         .select(levenshtein(col("a"), col("b"))).as[Int].head()
       val want = if (full <= t) full else -1
       assert(fast == want, s"a='$a' b='$b' t=$t fast=$fast full=$full")
+      full
     }
-    // the codegen path end-to-end (Expression inside a projection)
-    val df = pairs.toDF("a", "b", "t")
-    val got = df.select(col("a"), col("b"),
-        TextFns.bandedEditDist(col("a"), col("b"), 4).as("d4"),
-        levenshtein(col("a"), col("b")).as("full")).collect()
-    got.foreach { r =>
-      val want = if (r.getInt(3) <= 4) r.getInt(3) else -1
-      assert(r.getInt(2) == want, r.toString)
+    // the expression at thresholds 0..7, interpreted and generated
+    val thresholds = 0 until 8
+    val got = interpretedAndGenerated(thresholds.map(BandedEditDistance(arg(0, StringType), arg(1, StringType), _)),
+      pairs.map { case (a, b, _) => InternalRow(UTF8String.fromString(a), UTF8String.fromString(b)) })
+    for ((row, ((a, b, _), full)) <- got.zip(pairs.zip(fulls)); ((interpreted, generated), t) <- row.zip(thresholds)) {
+      val want = if (full <= t) full else -1
+      assert(interpreted == want && generated == want,
+        s"a='$a' b='$b' t=$t interpreted=$interpreted generated=$generated full=$full")
     }
   }
 
@@ -87,7 +117,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("property: fused CosineSimF32 equals the composed dot/norm form bit-for-bit") {
+  test("property: cosine equals the composed dot/norm form bit-for-bit") {
     val rnd = new scala.util.Random(31)
     val vecs = Seq.fill(50)((
       Array.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -115,7 +145,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("property: fused SqL2DistF32 equals the composed three-dot form bit-for-bit") {
+  test("property: sqL2 equals the composed three-dot form bit-for-bit") {
     val rnd = new scala.util.Random(37)
     val vecs = Seq.fill(50)((
       Array.fill(16)(rnd.nextFloat() * 2 - 1),
@@ -140,10 +170,14 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val inputs = Seq.fill(60)(Seq.fill(rnd.nextInt(8))(words(rnd.nextInt(words.length))).mkString(" ")) ++
       Seq("", "a", "a ", " a", "a  b") // empty/trailing/leading/double-space edges
     for (w <- Seq(2, 3)) {
-      val got = inputs.toDF("t").select(
-        TextFns.shinglesFromText(col("t"), w).as("fast"),
-        TextFns.shinglesHof(TextFns.tokens(col("t")), w).as("ref")).collect()
-      got.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString))
+      val refs = inputs.toDF("t")
+        .select(TextFns.shinglesHof(TextFns.tokens(col("t")), w)).as[Seq[String]].collect()
+      val got = interpretedAndGenerated(Seq(TokenShingles(arg(0, StringType), w)),
+        inputs.map(t => InternalRow(UTF8String.fromString(t))))
+      for ((Seq((interpreted, generated)), (t, want)) <- got.zip(inputs.zip(refs))) {
+        assert(interpreted == generated, s"w=$w '$t': interpreted $interpreted, generated $generated")
+        assert(interpreted == want, s"w=$w '$t': expression $interpreted, HOF form $want")
+      }
     }
   }
 
@@ -199,7 +233,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("property: codegen DotProductF32 equals the HOF fold bit-for-bit") {
+  test("property: dot equals the HOF fold bit-for-bit") {
     val rnd = new scala.util.Random(11)
     val vecs = Seq.fill(50)((
       Array.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -211,7 +245,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
-  test("DotProductF32 handles nulls and mismatched lengths") {
+  test("dot handles nulls and mismatched lengths") {
     val df = Seq(
       (Some(Array(1f, 2f, 3f)), Some(Array(4f, 5f))), // min-length semantics
       (None, Some(Array(1f)))                          // null -> null
@@ -222,27 +256,16 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("float-array kernel: interpreted eval equals the generated code and the composed reference for dot, cosine and sql2") {
-    // DataFrame tests over local Seqs run the interpreted path (the
-    // optimizer folds a projection of a local relation in place), so the
-    // generated code is compiled here directly, without the interpreted
-    // fallback, and both paths are held to each other and to the reference.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     import graft.functions.expr.FloatArrayKernel
     import graft.functions.expr.FloatArrayKernel.{Cosine, Dot, SqL2}
-    val arg = (i: Int) => BoundReference(i, ArrayType(FloatType, containsNull = false), nullable = true)
+    val floats = ArrayType(FloatType, containsNull = false)
     val ops = Seq(Dot, Cosine, SqL2)
-    val kernels = ops.map(FloatArrayKernel(arg(0), arg(1), _))
-    val generated = GenerateUnsafeProjection.generate(kernels)
+    val kernels = ops.map(FloatArrayKernel(arg(0, floats), arg(1, floats), _))
     // (interpreted, generated) per operation
-    def both(a: Array[Float], b: Array[Float]): Seq[(Any, Any)] = {
-      val row = InternalRow(Option(a).map(ArrayData.toArrayData).orNull, Option(b).map(ArrayData.toArrayData).orNull)
-      val out = generated(row)
-      kernels.indices.map(i => (kernels(i).eval(row), if (out.isNullAt(i)) null else out.getDouble(i)))
-    }
+    def both(a: Array[Float], b: Array[Float]): Seq[(Any, Any)] = interpretedAndGenerated(kernels,
+      Seq(InternalRow(Option(a).map(ArrayData.toArrayData).orNull, Option(b).map(ArrayData.toArrayData).orNull))).head
 
     val rnd = new scala.util.Random(59)
     val vecs = Seq.fill(50)((
@@ -362,9 +385,11 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     // exactly-33, and long payloads all pinned
     val inputs = (Seq(1, 5, 32, 33, 34) ++ Seq.fill(40)(rnd.nextInt(600) + 1))
       .map(len => Array.fill(len)(rnd.nextInt(256).toByte))
-    val got = inputs.toDF("b")
-      .select(graft.multimodal.MediaPipeline.phash(col("b"))).as[Long].collect()
-    assert(got.toSeq == inputs.map(ref))
+    val got = interpretedAndGenerated(Seq(ByteGradientHash(arg(0, BinaryType))), inputs.map(InternalRow(_)))
+    for ((Seq((interpreted, generated)), want) <- got.zip(inputs.map(ref))) {
+      assert(interpreted == generated, s"interpreted $interpreted, generated $generated")
+      assert(interpreted == want, s"expression $interpreted, reference fold $want")
+    }
   }
 
   test("ByteGradientHash is stable under near-duplication (tail truncation)") {

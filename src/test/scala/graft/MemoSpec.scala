@@ -89,8 +89,8 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     val local = df.pin()
     assert(local.collect().toSeq == df.collect().toSeq)
     // a real consumer under RELIABLE mode: same answer, checkpoint dir used.
-    // q_dedup_components runs the full memoized banding + star-contraction
-    // pipeline — 10 pin() sites fire under the switch in one query.
+    // q_dedup_components runs the full memoized banding pipeline, whose
+    // pin() sites all fire under the switch in one query.
     val modeKey = "spark.graft.checkpoint.mode"
     val want = SparkEntry.queries("q_dedup_components")(spark, dir)
       .select(col("doc_id"), col("cluster_id")).as[(Long, Long)].collect().toMap
@@ -195,7 +195,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
       run("one")
       val afterFirst = rddDirs()
       run("two"); run("three")
-      // per-run intermediate pins (the contraction loop's) ride the
+      // intermediate pins inside each build (cappedPairs' marked buckets) ride the
       // GC + ContextCleaner backstop: nudge it and poll until the count
       // settles — the DETERMINISTIC claim is the cached families' dirs
       // (evicted synchronously per rotation), which without eviction
