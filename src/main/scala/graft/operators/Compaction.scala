@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *     (QHBaseCompact.java:97-98, README.md:23-24)
   *   - [[Compactor.compact]]: the full file-merge job (sorted-run invariant)
   *
-  * Scale posture: LWW is a single hash-aggregate shuffle (`max_by(struct)`),
-  * not a window sort — partial aggregation runs map-side, so 100 TB of
-  * versioned cells reduce before the exchange.
+  * Scale posture: LWW is one `max_by(struct)` aggregate around a single
+  * shuffle, not a window. Its struct buffers are not mutable in place, so
+  * Spark plans it as a SortAggregate (a Sort on each side of the exchange);
+  * the partial aggregate still runs map-side, so 100 TB of versioned cells
+  * reduce before the exchange.
   */
 object Compaction {
 
@@ -30,8 +32,9 @@ object Compaction {
     * for reproducible output).
     *
     * Single-shuffle formulation: `max_by(struct(payload), struct(order))`
-    * aggregates with map-side partials; equivalent to (and property-tested
-    * against) the two-pass `row_number() === 1` window form.
+    * aggregates with map-side partials (a SortAggregate: struct buffers are
+    * not hash-aggregable); equivalent to (and property-tested against) the
+    * `row_number() === 1` window form.
     */
   def lastWriteWins(df: DataFrame, keys: Seq[String], orderCols: Seq[String]): DataFrame = {
     val payloadCols = df.columns.filterNot(keys.contains).toSeq

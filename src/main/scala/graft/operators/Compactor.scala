@@ -11,7 +11,7 @@ import graft.sources.SnapshotStore
   * preserve the sorted-run invariant — expressed as one declarative Spark
   * write:
   *
-  *   read → LWW dedup (one hash-agg shuffle, map-side partial) →
+  *   read → LWW dedup (one shuffle, map-side partial SortAggregate) →
   *   repartitionByRange(k, key) (range shards ≙ HBase regions) →
   *   sortWithinPartitions(key) (HFile sorted-run invariant) →
   *   write maxRecordsPerFile → commit (one atomic rename)

@@ -80,13 +80,17 @@ object StreamingDaemon {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
 
   /** Current snapshot of the [[mergeSink]] store: the directory named by the
-    * atomic LATEST pointer, or an empty frame of `schemaFrom`'s schema
-    * before the first commit.
+    * atomic LATEST pointer, or an empty frame before the first commit. Both
+    * carry `schemaFrom`'s columns with `keys` first, the order
+    * [[applyMergeBatch]] writes; the snapshot is read with that schema, so
+    * no Spark job infers it from the parquet footers.
     */
   private[graft] def readMergeStore(
-      spark: SparkSession, storeDir: String, schemaFrom: DataFrame): DataFrame = {
+      spark: SparkSession, storeDir: String, schemaFrom: DataFrame, keys: Seq[String]): DataFrame = {
+    val ordered = schemaFrom.select(
+      (keys ++ schemaFrom.columns.filterNot(keys.contains)).map(col): _*)
     SnapshotStore.pointed(SnapshotStore.local(storeDir).resolve("LATEST"))
-      .fold(schemaFrom.limit(0))(snap => spark.read.parquet(s"$storeDir/$snap"))
+      .fold(ordered.limit(0))(snap => spark.read.schema(ordered.schema).parquet(s"$storeDir/$snap"))
   }
 
   /** One exactly-once MERGE application of micro-batch `batchId`. Returns
@@ -118,7 +122,7 @@ object StreamingDaemon {
     val store = SnapshotStore.local(storeDir)
     val marker = store.resolve(s"_applied/batch-$batchId")
     if (Files.exists(marker)) return false
-    val prior = readMergeStore(spark, storeDir, batch)
+    val prior = readMergeStore(spark, storeDir, batch, keys)
     // Last write wins by `orderCols` across batches, not by arrival: a late
     // batch's older version loses to the stored one. Only prior rows of
     // the keys the batch touches enter the LWW; the rest pass through.

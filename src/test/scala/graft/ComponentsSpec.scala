@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -80,31 +79,6 @@ class ComponentsSpec extends AnyFunSuite with SparkSpec {
     val e = intercept[IllegalArgumentException](
       Components.labels(Seq(("a", "b"), ("b", "c")).toDF("u", "v")))
     assert(e.getMessage.contains("string"), e.getMessage)
-  }
-
-  /** `f`'s result and the Spark jobs started while it runs, counted by a
-    * listener.
-    */
-  private def jobsRunBy[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val sentinel = "components-spec-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      // The bus delivers in order: once the sentinel job is seen, every
-      // job `f` started has been counted.
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains(sentinel), "sentinel job start not delivered within 30 s")
-      (out, jobs.size - 1)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("labels on a 60-edge graph runs at most 2 Spark jobs") {

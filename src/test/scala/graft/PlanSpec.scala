@@ -87,10 +87,20 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("q_simsearch_ivf: centroid assignment is a partial aggregate, no Window anywhere") {
+    // The assignment is the build of the memoized IVF index
+    // (VectorQueries.assignCells); the query only probes the pinned index.
+    val build = graft.operators.VectorQueries.assignCells(spark, d).queryExecution.executedPlan.toString
+    assert(!build.contains(PlanPins.Window), build)
+    // A map-side partial max_by before the exchange: struct buffers are not
+    // hash-aggregable, so both halves are SortAggregates.
+    assert(build.contains("partial_max_by"), build)
+    assert("SortAggregate".r.findAllIn(build).size >= 2, build)
     val p = plan("q_simsearch_ivf")
     assert(!p.contains(PlanPins.Window), p)
-    // max_by partial+final pair proves the map-side combine survived.
-    assert(p.contains("max_by") || p.contains("SortAggregate") || p.contains("HashAggregate"), p)
+    // The query reads the pinned index: no aggregate, and no nested-loop
+    // join of the embeddings against the centroids.
+    assert(p.contains(PlanPins.ExistingRDD), p)
+    assert(!p.contains("Aggregate") && !p.contains(PlanPins.BroadcastNestedLoopJoin), p)
   }
 
   test("q_round_robin_cursor: global window is a deliberate metadata-only single task") {

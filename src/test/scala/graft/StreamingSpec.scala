@@ -23,7 +23,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // the store is ONE consistent LWW snapshot of everything ingested
     val want = Compaction.lastWriteWins(ev, keys, ord)
       .orderBy("user_id", "event_type").collect().toSeq
-    def snapshot() = StreamingDaemon.readMergeStore(spark, store, ev)
+    def snapshot() = StreamingDaemon.readMergeStore(spark, store, ev, keys)
       .orderBy("user_id", "event_type").collect().toSeq
     assert(snapshot() == want)
     val ptr = java.nio.file.Paths.get(s"$store/LATEST")
@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, ev, batchId = 0L))
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, newer, batchId = 1L))
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, older, batchId = 2L))
-    val got = StreamingDaemon.readMergeStore(spark, store, ev).orderBy("user_id", "event_type").collect().toSeq
+    val got = StreamingDaemon.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq
     val want = Compaction.lastWriteWins(ev.unionByName(newer).unionByName(older), keys, ord)
       .orderBy("user_id", "event_type").collect().toSeq
     assert(got.size == want.size)
@@ -106,7 +106,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, delta, batchId = 1L))
     assert(state() == ((Set("LATEST", "_applied", "snap-0", "snap-1"), "snap-1", Set("batch-0", "batch-1"))))
-    assert(StreamingDaemon.readMergeStore(spark, store, ev).orderBy("user_id", "event_type").collect().toSeq ==
+    assert(StreamingDaemon.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq ==
       Compaction.lastWriteWins(ev.unionByName(delta), keys, ord).orderBy("user_id", "event_type").collect().toSeq)
   }
 
@@ -130,7 +130,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .withColumn("ts", col("ts") + expr("INTERVAL 3650 DAYS"))
     def lww(df: org.apache.spark.sql.DataFrame) =
       Compaction.lastWriteWins(df, keys, ord).orderBy("user_id", "event_type").collect().toSeq
-    def latest() = StreamingDaemon.readMergeStore(spark, store, ev)
+    def latest() = StreamingDaemon.readMergeStore(spark, store, ev, keys)
       .orderBy("user_id", "event_type").collect().toSeq
     def snaps() = new java.io.File(store).list().filter(_.startsWith("snap-")).toSet
     def fileSig(dir: String): Map[String, (Long, Long)] =
