@@ -5,9 +5,8 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
-/** Shared kill/evidence machinery for the multi-JVM probes
-  * ([[ClusterProbe]], [[StreamClusterProbe]]) — NOT part of the library
-  * surface.
+/** Kill/evidence machinery for the multi-JVM kill probe ([[KillProbe]]) —
+  * NOT part of the library surface.
   *
   * Round-15 ruling: both probes used a fixed-delay SIGKILL thread, so in
   * roughly half of runs the kill landed between micro-batches / after the
@@ -75,16 +74,62 @@ object ProbeKill {
   def executorPids(appId: String): Seq[Long] =
     executorPidsById(appId).values.toSeq
 
+  /** Polls `done` once a second for up to `seconds`, then requires it:
+    * every wait of the probe is bounded and names what did not arrive.
+    */
+  private def waitFor(seconds: Int, failure: => String)(done: => Boolean): Unit = {
+    var w = 0
+    while (!done && w < seconds) {
+      Thread.sleep(1000); w += 1
+    }
+    require(done, failure)
+  }
+
   /** Block until the standalone Worker has relaunched enough executor JVMs
     * (it respawns a killed one within seconds; 120 s is a generous bound).
     */
-  def awaitExecutors(appId: String, atLeast: Int = 2): Unit = {
-    var w = 0
-    while (executorPids(appId).size < atLeast && w < 120) {
-      Thread.sleep(1000); w += 1
-    }
-    require(executorPids(appId).size >= atLeast,
-      s"Worker did not (re)launch $atLeast executor JVMs within 120s")
+  def awaitExecutors(appId: String, atLeast: Int = 2): Unit =
+    waitFor(120, s"Worker did not (re)launch $atLeast executor JVMs within 120s")(
+      executorPids(appId).size >= atLeast)
+
+  /** Block until both executors of [[Sessions.localCluster]] have
+    * registered with the driver of `s` (its status tracker also lists the
+    * driver itself).
+    */
+  def awaitRegistered(s: SparkSession): Unit = {
+    def registered = s.sparkContext.statusTracker.getExecutorInfos.length - 1
+    waitFor(120, s"app ${s.sparkContext.applicationId}: only $registered of 2 " +
+      "local-cluster executors registered within 120s")(registered >= 2)
+  }
+
+  /** SIGKILL one executor JVM of `appId` and wait until pgrep no longer
+    * lists it (a killed JVM's cmdline is gone even while it is still a
+    * zombie). Returns its pid.
+    */
+  def killExecutor(appId: String): Long = {
+    val pids = executorPids(appId)
+    require(pids.nonEmpty, "no executor JVM visible to pgrep")
+    val victim = pids.head
+    ProcessHandle.of(victim).ifPresent(h => h.destroyForcibly())
+    waitFor(30, s"kill did not take: executor pid=$victim still listed 30 s after SIGKILL")(
+      !executorPids(appId).contains(victim))
+    victim
+  }
+
+  /** Every file under `dir`, keyed by its path relative to `dir`, with its
+    * (length, mtime): a rewritten file changes its value and an added file
+    * is a new key. `.tmp-*` entries and everything under them are skipped:
+    * they are writes in flight or abandoned, never committed content. A
+    * directory or file deleted during the walk is left out, not an error,
+    * since the checkpoint cleaner deletes while the probe counts.
+    */
+  def dirSignature(dir: String): Map[String, (Long, Long)] = {
+    def walk(d: java.io.File, rel: String): Seq[(String, (Long, Long))] =
+      Option(d.listFiles()).toSeq.flatten.filterNot(_.getName.startsWith(".tmp-")).flatMap { f =>
+        if (f.isDirectory) walk(f, s"$rel${f.getName}/")
+        else Seq(s"$rel${f.getName}" -> ((f.length, f.lastModified)))
+      }
+    walk(new java.io.File(dir), "").toMap
   }
 
   /** Task-start-triggered executor killer. `lifetimeStarts` always counts
@@ -101,7 +146,6 @@ object ProbeKill {
     private val firedFlag = new AtomicBoolean(false)
     private val killToken = new AtomicBoolean(false)
     @volatile private var killerThread: Thread = null
-    @volatile var killedExecutor: String = ""
 
     def arm(afterTaskStarts: Int): Unit = {
       require(afterTaskStarts >= 1, s"arm($afterTaskStarts): need >= 1")
@@ -164,7 +208,6 @@ object ProbeKill {
         val n = sinceArm.incrementAndGet()
         if (n >= threshold && firedFlag.compareAndSet(false, true)) {
           val exec = ts.taskInfo.executorId
-          killedExecutor = exec
           // The kill runs off the listener thread (pgrep forks a process);
           // the bus must keep draining while the killer works.
           val t = new Thread(() => {
@@ -230,10 +273,7 @@ object ProbeKill {
       * `baseline`. Polls (listener delivery is async) rather than reading
       * once — a queued TaskEnd must not flunk a genuine interrupt.
       */
-    def requireInterrupted(baseline: Int, what: String): Unit = {
-      var w = 0
-      while (failed.get <= baseline && w < 100) { Thread.sleep(100); w += 1 }
-      require(failed.get > baseline, s"$what — rerun the probe")
-    }
+    def requireInterrupted(baseline: Int, what: String): Unit =
+      waitFor(10, s"$what — rerun the probe")(failed.get > baseline)
   }
 }

@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * AQE left on for runtime re-planning / skew handling.
   */
 object Sessions {
-  /** The settings every graft session shares, whatever its master. */
-  private def shared(master: String, shufflePartitions: String): SparkSession.Builder =
+  /** The settings every graft session shares, whatever its master; a caller
+    * that needs one more static setting (the kill probe's own warehouse)
+    * adds it to this builder.
+    */
+  private[graft] def shared(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions())
@@ -31,7 +34,7 @@ object Sessions {
   def tuned(master: String, cpus: String): SparkSession =
     shared(master, cpus).getOrCreate()
 
-  /** The multi-JVM probe session ([[ClusterProbe]], [[StreamClusterProbe]]):
+  /** The multi-JVM probe session ([[KillProbe]]):
     * `local-cluster[2,2,1024]` — a REAL standalone scheduler with two
     * separate executor JVM processes, the only in-sandbox posture where an
     * executor can actually die. Executors are spawned by the Worker, so they

@@ -9,7 +9,7 @@ import graft.streaming.StreamingDaemon
 /** Dev ROW-SCALE soak for the streaming pipelines (not part of the library
   * surface) — the streaming sibling of [[ScaleProbe]]: correctness and
   * fault tolerance of the daemon are proven elsewhere (StreamingSpec,
-  * [[StreamClusterProbe]]); what was never measured is how wall time and —
+  * [[KillProbe]]); what was never measured is how wall time and —
   * the real 100 TB claim — STATE-STORE SIZE behave as the stream grows K×.
   * Three pipelines, three different state postures, each soaked at staged
   * K with per-K wall time and the state metric that must stay flat:
@@ -28,9 +28,9 @@ import graft.streaming.StreamingDaemon
   *    (same density) and the 1-hour watermark ages each batch's keys out
   *    before the next: max `numRowsTotal` across the run must stay ≈ one
   *    batch's keys (flat in K) while total input grows K× — the posture
-  *    claim `StreamClusterProbe` cites, measured. Dedup key is `event_id`
-  *    (unique per event): if eviction did NOT happen, state would grow to
-  *    the whole stream and the flatness assert fails loudly.
+  *    claim `KillProbe`'s streaming phases cite, measured. Dedup key is
+  *    `event_id` (unique per event): if eviction did NOT happen, state
+  *    would grow to the whole stream and the flatness assert fails loudly.
   *
   *  - `ingestDedupLoop` (crawl-ingest gate, persisted signature store):
   *    state is the parquet signature store — O(ACCEPTED docs), not

@@ -68,4 +68,43 @@ class ProbeKillSpec extends AnyFunSuite {
     k.arm(1)
     assert(k.consumeKillToken(), "each armed window carries its own permit")
   }
+
+  // --- dirSignature: the probe's "committed content unchanged" evidence ---
+
+  test("dirSignature: a rewrite changes the signature, an added file is a new key, .tmp-* is ignored") {
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory("probe_sig")
+    try {
+      def write(p: Path, bytes: String): Unit = {
+        Files.createDirectories(p.getParent)
+        Files.write(p, bytes.getBytes("UTF-8"))
+      }
+      write(dir.resolve("snap-0/part-0.parquet"), "abc")
+      write(dir.resolve("LATEST"), "snap-0")
+      val before = ProbeKill.dirSignature(dir.toString)
+      assert(before.keySet == Set("snap-0/part-0.parquet", "LATEST"))
+      assert(before("snap-0/part-0.parquet")._1 == 3L)
+
+      // a sibling in-flight commit, and a tmp file inside a committed dir
+      write(dir.resolve(".tmp-snap-1-uuid/part-0.parquet"), "in flight")
+      write(dir.resolve("snap-0/.tmp-x"), "abandoned")
+      assert(ProbeKill.dirSignature(dir.toString) == before, ".tmp-* entries must not enter the signature")
+
+      write(dir.resolve("snap-1/part-0.parquet"), "defg")
+      val added = ProbeKill.dirSignature(dir.toString)
+      assert(added.keySet == before.keySet + "snap-1/part-0.parquet")
+      assert(added.view.filterKeys(before.contains).toMap == before)
+
+      // same length, new mtime
+      val f = dir.resolve("snap-0/part-0.parquet").toFile
+      assert(f.setLastModified(f.lastModified - 10000L))
+      assert(ProbeKill.dirSignature(dir.toString)("snap-0/part-0.parquet") != before("snap-0/part-0.parquet"))
+      // new length, mtime restored
+      val mtime = before("snap-0/part-0.parquet")._2
+      write(dir.resolve("snap-0/part-0.parquet"), "abcd")
+      assert(f.setLastModified(mtime))
+      assert(ProbeKill.dirSignature(dir.toString)("snap-0/part-0.parquet") == ((4L, mtime)))
+      assert(ProbeKill.dirSignature(dir.resolve("missing").toString).isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }
