@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Compaction, Compactor, TextQueries}
@@ -36,7 +37,8 @@ import graft.streaming.StreamingDaemon
   *  8. `Compactor.compact(outDir)` killed mid-run commits exactly the LWW
   *     truth in key-sorted, range-disjoint files, with no duplicate rows
   *     from the killed task attempt and no `.tmp-*` left;
-  *  9. `mergeSink` killed mid-batch leaves `LATEST` on the LWW truth, one
+  *  9. `mergeSink` killed mid-batch leaves `LATEST` on the LWW truth in
+  *     key-sorted, range-disjoint shard files, one
   *     `_applied` marker per batch and no `.tmp-*`; a restart with one
   *     more update file rewrites no committed `snap-N` and reaches the
   *     truth over every file.
@@ -47,7 +49,8 @@ import graft.streaming.StreamingDaemon
   * work in flight. Its evidence is listener-based
   * ([[ProbeKill.FailedTaskCounter]]): the pass only counts if a task of the
   * killed run ended non-Success, else the probe says "rerun the probe"
-  * instead of recording a vacuous pass.
+  * instead of recording a vacuous pass. The PASS line names the stages of
+  * the interrupted tasks and the graft frames of their call sites.
   *
   * The pin phases run in `spark.graft.checkpoint.mode=reliable`, the mode
   * they exist to check; the others in the default mode, so the runner
@@ -157,7 +160,7 @@ object KillProbe {
   private def runLww(s: SparkSession, evDir: String, outDir: String, ckpDir: String): Unit = {
     import s.implicits._
     val ds = StreamingDaemon.source(s, evDir,
-      s.read.schema("event_id BIGINT, ts_us BIGINT, user_id BIGINT, event_type STRING, value DOUBLE").parquet(evDir))
+      StructType.fromDDL("event_id BIGINT, ts_us BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"))
       .as[StreamingDaemon.EventIn]
     StreamingDaemon.statefulLww(ds)
       .writeStream
@@ -361,11 +364,12 @@ object KillProbe {
       val (storeA, storeB, mergeCkpB) = (tmp("kp_store_a"), tmp("kp_store_b"), tmp("kp_merge_ckp_b"))
       def merge(store: String, ckp: String): Unit =
         StreamingDaemon.mergeSink(s, mergeIn, store, ckp, Keys, Order).awaitTermination()
-      def latest(store: String): Seq[String] = {
+      def latestDir(store: String): String = {
         val snap = SnapshotStore.pointed(Paths.get(store, "LATEST"))
         require(snap.isDefined, s"$store has no LATEST")
-        rows(s.read.parquet(s"$store/${snap.get}"))
+        s"$store/${snap.get}"
       }
+      def latest(store: String): Seq[String] = rows(s.read.parquet(latestDir(store)))
       def committed(store: String, batches: Int): String = {
         val markers = Option(new File(store, "_applied").list()).toSeq.flatten.toSet
         require(markers == (0 until batches).map(b => s"batch-$b").toSet,
@@ -464,7 +468,8 @@ object KillProbe {
           check = () => {
             require(latest(storeA) == truthMerged, "clean cluster merge diverges from the LWW truth")
             require(latest(storeB) == truthMerged, "killed merge: LATEST diverges from the LWW truth over every staged file")
-            s"LATEST equals truth, ${committed(storeB, 4)}"
+            val files = requireSortedDisjoint(s, latestDir(storeB))
+            s"LATEST equals truth in $files key-sorted, range-disjoint file(s), ${committed(storeB, 4)}"
           },
           restart = Some(() => {
             val snaps = ProbeKill.dirSignature(storeB).filter(_._1.startsWith("snap-"))
@@ -515,7 +520,8 @@ object KillProbe {
           killer.disarm()
           failedTasks.requireInterrupted(failedBefore,
             f"${p.name}: kill interrupted no task (dry $drySec%.1f s / $dryStarts starts, fired=${killer.fired})")
-          f"${failedTasks.get - failedBefore} task(s) interrupted, dry run $dryStarts starts ($drySec%.1f s); "
+          val stages = failedTasks.interruptedStages(failedBefore).mkString("; ")
+          f"${failedTasks.get - failedBefore} task(s) interrupted in $stages, dry run $dryStarts starts ($drySec%.1f s); "
       }
       val evidence = killed + p.check()
       if (p.kill != NoKill) ProbeKill.awaitExecutors(appId)

@@ -1,8 +1,10 @@
 package graft
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
 /** Kill/evidence machinery for the multi-JVM kill probe ([[KillProbe]]) —
@@ -237,12 +239,32 @@ object ProbeKill {
 
   /** Session-wide non-Success task counter with a quiescent baseline
     * snapshot (see object scaladoc for why a bare read is not a baseline).
+    * It keeps the stage of every failed task, so a phase can name the work
+    * its kill interrupted.
     */
   final class FailedTaskCounter extends SparkListener {
-    private val failed = new AtomicInteger(0)
+    // the stage id of each non-Success task end, in delivery order
+    private val failedStages = new java.util.concurrent.CopyOnWriteArrayList[Integer]()
+    private val stageSites = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val info = e.stageInfo
+      // A stream's jobs carry the call site of its start, so the RDDs
+      // (newest first) say which of a batch's stages it is.
+      val rdds = info.rddInfos.sortBy(-_.id).map(_.name.linesIterator.take(1).mkString.take(40)).distinct.take(4)
+      val graftFrames = info.details.linesIterator.map(_.trim).filter(_.startsWith("graft.")).take(3)
+      stageSites.put(info.stageId, s"stage ${info.stageId} '${info.name}' " +
+        s"[${rdds.mkString(", ")}] (${graftFrames.mkString(" < ")})")
+    }
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (te.reason != org.apache.spark.Success) failed.incrementAndGet()
-    def get: Int = failed.get
+      if (te.reason != org.apache.spark.Success) failedStages.add(te.stageId)
+    def get: Int = failedStages.size
+
+    /** The stages of the tasks that failed after `baseline` failures, each
+      * with its name, RDDs and the graft frames of its call site.
+      */
+    def interruptedStages(baseline: Int): Seq[String] =
+      failedStages.asScala.toSeq.drop(baseline).distinct
+        .map(id => Option(stageSites.get(id)).getOrElse(s"stage $id"))
 
     /** Baseline for a kill-evidence check: run a marker job so every event
       * already posted to the FIFO listener bus is processed before it, then
@@ -252,7 +274,7 @@ object ProbeKill {
       */
     def quiescentSnapshot(s: SparkSession, stableMs: Long = 1500): Int = {
       s.sparkContext.parallelize(1 to 8, 8).count()
-      var last = failed.get
+      var last = get
       var stableFor = 0L
       var totalMs = 0L
       // Bounded like every other probe wait: failures that keep trickling
@@ -261,7 +283,7 @@ object ProbeKill {
       while (stableFor < stableMs && totalMs < 60000L) {
         Thread.sleep(100)
         totalMs += 100
-        val cur = failed.get
+        val cur = get
         if (cur == last) stableFor += 100 else { last = cur; stableFor = 0 }
       }
       require(stableFor >= stableMs,
@@ -274,6 +296,6 @@ object ProbeKill {
       * once — a queued TaskEnd must not flunk a genuine interrupt.
       */
     def requireInterrupted(baseline: Int, what: String): Unit =
-      waitFor(10, s"$what — rerun the probe")(failed.get > baseline)
+      waitFor(10, s"$what — rerun the probe")(get > baseline)
   }
 }

@@ -1,10 +1,16 @@
 package graft.streaming
 
 import java.nio.file.Files
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftRows
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.operators.Compaction
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.sources.SnapshotStore
 
 /** Structured-Streaming re-expression of the reference daemon loop
@@ -36,11 +42,35 @@ object StreamingDaemon {
   /** The streaming source: schema-pinned parquet file stream, one file per
     * trigger (the reference's one-region-per-round invariant).
     */
-  def source(spark: SparkSession, dir: String, schemaFrom: DataFrame): DataFrame =
+  def source(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream
-      .schema(schemaFrom.schema)
+      .schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
+
+  /** The schema `spark.read.parquet(dir)` infers. For a flat `dir` it is
+    * read on the driver from the footer of one data file with Spark's own
+    * conversion (the row metadata Spark writes, else the parquet types),
+    * all fields nullable as a file source reads them: inference by a read
+    * runs a Spark job over the footers; this runs none. A `dir` with
+    * subdirectories (a partitioned layout, `k=v/…`) is inferred by that
+    * read, partition columns included. A flat `dir` without a data file
+    * throws, naming it.
+    */
+  private[graft] def inputSchema(spark: SparkSession, dir: String): StructType = {
+    val entries = Option(SnapshotStore.local(dir).toFile.listFiles()).toSeq.flatten
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    if (entries.exists(_.isDirectory)) spark.read.parquet(dir).schema
+    else {
+      val file = entries.sortBy(_.getName).headOption.getOrElse(
+        throw new IllegalArgumentException(s"$dir holds no parquet file to take the stream's schema from"))
+      val path = new org.apache.hadoop.fs.Path(file.toURI)
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(path, GraftRows.hadoopConf(spark)), ParquetMetadataConverter.NO_FILTER)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+        new ParquetToSparkSchemaConverter(GraftRows.sqlConf(spark))).toNullable
+    }
+  }
 
   /** Admission gate — the reference's HH:mm:ss *string-compare* window
     * (QHBaseCompact.java:48-60) applied to event time. Processing-time
@@ -79,22 +109,26 @@ object StreamingDaemon {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
 
-  /** Current snapshot of the [[mergeSink]] store: the directory named by the
-    * atomic LATEST pointer, or an empty frame before the first commit. Both
-    * carry `schemaFrom`'s columns with `keys` first, the order
-    * [[applyMergeBatch]] writes; the snapshot is read with that schema, so
-    * no Spark job infers it from the parquet footers.
-    */
-  private[graft] def readMergeStore(
-      spark: SparkSession, storeDir: String, schemaFrom: DataFrame, keys: Seq[String]): DataFrame = {
-    val ordered = schemaFrom.select(
-      (keys ++ schemaFrom.columns.filterNot(keys.contains)).map(col): _*)
-    SnapshotStore.pointed(SnapshotStore.local(storeDir).resolve("LATEST"))
-      .fold(ordered.limit(0))(snap => spark.read.schema(ordered.schema).parquet(s"$storeDir/$snap"))
-  }
-
-  /** One exactly-once MERGE application of micro-batch `batchId`. Returns
-    * false when the batch was already applied (the replay fast-path).
+  /** One exactly-once MERGE application of micro-batch `batchId`: one Spark
+    * job that merges the batch into the snapshot LATEST names and writes
+    * the next, `snap-<batchId>`. Returns false when the batch was already
+    * applied (the replay fast-path).
+    *
+    * The merge ([[MergeStore.merge]]): every snapshot is P key-sorted,
+    * range-disjoint shard files plus a `_bounds` manifest of each shard's
+    * sampled keys (the first of them its bound), written into the tmp
+    * directory before the commit moves it. Only the batch is partitioned
+    * by the bounds and sorted by key; shard i of the prior is read as one
+    * partition, zipped with batch slice i, and the two sorted streams
+    * merge with last write wins by `orderCols` (a batch's older version
+    * loses to the stored one, and duplicates inside the batch resolve the
+    * same way) into one file per shard. The prior is never shuffled. The
+    * first batch chooses P (from its plan's size estimate) and, when
+    * P > 1, the bounds, sampled from its keys; after that, a shard whose
+    * file has outgrown `spark.sql.files.maxPartitionBytes` splits at its
+    * sampled keys in the same job, its file read once per piece. A LATEST
+    * snapshot without `_bounds` throws, naming the store, and is never
+    * merged as if sorted.
     *
     * Exactly-once from an at-least-once engine, two layers:
     *  1. an applied-batch LEDGER — marker file per batchId, committed AFTER
@@ -122,19 +156,10 @@ object StreamingDaemon {
     val store = SnapshotStore.local(storeDir)
     val marker = store.resolve(s"_applied/batch-$batchId")
     if (Files.exists(marker)) return false
-    val prior = readMergeStore(spark, storeDir, batch, keys)
-    // Last write wins by `orderCols` across batches, not by arrival: a late
-    // batch's older version loses to the stored one. Only prior rows of
-    // the keys the batch touches enter the LWW; the rest pass through.
-    // The touched keys stay undeduplicated: the semi and anti joins need no
-    // unique keys, and a distinct would add an exchange before the merge.
-    val touched = batch.select(keys.map(col): _*)
-    val merged = prior
-      .join(touched, keys, "left_anti")
-      .unionByName(Compaction.lastWriteWins(
-        prior.join(touched, keys, "left_semi").unionByName(batch), keys, orderCols))
+    val prior = SnapshotStore.pointed(store.resolve("LATEST")).map(store.resolve)
     val snap = s"snap-$batchId"
-    SnapshotStore.commit(store.resolve(snap))(merged.write.parquet(_))
+    SnapshotStore.commit(store.resolve(snap))(
+      MergeStore.merge(spark, storeDir, prior, keys, orderCols, batch, _))
     SnapshotStore.point(store.resolve("LATEST"), snap)
     Files.createDirectories(marker.getParent)
     Files.write(marker, batchId.toString.getBytes("UTF-8"))
@@ -145,7 +170,12 @@ object StreamingDaemon {
     * a single keyed store (last write wins by `orderCols`), and replays
     * are no-ops via [[applyMergeBatch]]'s ledger and snapshot commit. This
     * is the stream → serving-table bridge: the store is always one
-    * consistent LWW snapshot of everything ingested so far.
+    * consistent LWW snapshot of everything ingested so far, held as
+    * key-sorted range shards of about `spark.sql.files.maxPartitionBytes`
+    * each (a shard that outgrows it splits), and each micro-batch is one
+    * Spark job. The stream's schema comes from one input file's footer
+    * ([[inputSchema]]), so starting the stream over a flat input
+    * directory runs no Spark job.
     */
   def mergeSink(
       spark: SparkSession,
@@ -156,8 +186,7 @@ object StreamingDaemon {
       orderCols: Seq[String],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     Files.createDirectories(SnapshotStore.local(storeDir))
-    val static = spark.read.parquet(inDir)
-    source(spark, inDir, static)
+    source(spark, inDir, inputSchema(spark, inDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -181,26 +210,28 @@ object StreamingDaemon {
       .dropDuplicatesWithinWatermark(keys)
 
   /** One side of the dynamic signature store: `dir/batch=N` parquet
-    * committed per micro-batch. Reading the root infers the `batch`
-    * partition column; `excludeBatch` drops the CURRENT batch's own
+    * committed per micro-batch, each holding the columns of `like`, the
+    * frame a batch writes there. The root is read with that schema plus
+    * the `batch` partition column, so no Spark job infers it from the
+    * footers; before the first commit the result is `like` with no rows.
+    * `excludeBatch` drops the CURRENT batch's own
     * directory so an at-least-once replay of batch N is gated exactly as its
     * first attempt was — never against its own earlier output. Partition
     * pruning keeps the exclusion a metadata operation, not a scan. A
     * `batch=` directory exists only once committed, and an in-flight or
     * killed `.tmp-*` one is hidden from Spark's file index.
     */
-  private def readSigStore(
-      spark: SparkSession, dir: String, empty: DataFrame,
-      cols: Seq[String], excludeBatch: Long): DataFrame = {
+  private[graft] def readSigStore(
+      spark: SparkSession, dir: String, like: DataFrame, excludeBatch: Long): DataFrame = {
     val root = SnapshotStore.local(dir)
     val hasBatch = Files.isDirectory(root) && {
       val it = Files.list(root)
       try it.anyMatch(_.getFileName.toString.startsWith("batch=")) finally it.close()
     }
-    if (!hasBatch) empty.select(cols.map(col): _*)
-    else spark.read.parquet(dir)
+    if (!hasBatch) like.limit(0)
+    else spark.read.schema(like.schema.add("batch", LongType)).parquet(dir)
       .filter(col("batch") =!= excludeBatch)
-      .select(cols.map(col): _*)
+      .select(like.columns.toSeq.map(col): _*)
   }
 
   /** Sign-LSH band keys over an embedding column — the batch q_dedup_embed
@@ -262,8 +293,7 @@ object StreamingDaemon {
       corpusEmbSigs: Option[DataFrame] = None,
       semanticCos: Double = 0.95,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val static = spark.read.parquet(inDir)
-    source(spark, inDir, static)
+    source(spark, inDir, inputSchema(spark, inDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -279,11 +309,9 @@ object StreamingDaemon {
         val sigs = graft.operators.TextQueries.bandKeysOf(exact).persist()
         val bsigs = corpusEmbSigs.map(_ => embedBandKeys(exact).persist())
         try {
-          val priorSkeys = readSigStore(spark, s"$sigStoreDir/skeys",
-            spark.range(0).select(col("id").cast("string").as("skey")), Seq("skey"), batchId)
+          val priorSkeys = readSigStore(spark, s"$sigStoreDir/skeys", sigs.select(col("skey")), batchId)
           val priorHashes = readSigStore(spark, s"$sigStoreDir/hashes",
-            spark.range(0).select(col("id").cast("string").as("content_hash")),
-            Seq("content_hash"), batchId)
+            exact.select(col("content_hash")), batchId)
           val nearDup = sigs
             .join(corpusSigs.select(col("skey")).union(priorSkeys), "skey")
             .select(col("doc_id"))
@@ -295,7 +323,7 @@ object StreamingDaemon {
               import org.apache.spark.sql.expressions.Window
               val stored = corpusEmb.select(col("ekey"), col("embedding"))
                 .union(readSigStore(spark, s"$sigStoreDir/ekeys",
-                  corpusEmb.limit(0), Seq("ekey", "embedding"), batchId))
+                  bs.select(col("ekey"), col("embedding")), batchId))
                 .withColumnRenamed("embedding", "stored_emb")
               // Hot store-side band values (> 100 entries) are boilerplate
               // buckets and are excluded — the incNewEdges guard: without

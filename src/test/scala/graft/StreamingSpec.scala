@@ -1,14 +1,27 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Compaction
+import graft.sources.SnapshotStore
 import graft.streaming.StreamingDaemon
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(tag: String) = tempDir(tag).toString
+
+  /** `n` versioned events over 40 users and 3 event types, one a minute. */
+  private def syntheticEvents(n: Int): org.apache.spark.sql.DataFrame = spark.range(n).select(
+    (col("id") % 40).as("user_id"),
+    element_at(array(lit("click"), lit("view"), lit("buy")), (col("id") % 3 + 1).cast("int")).as("event_type"),
+    timestamp_seconds(col("id") * 60).as("ts"), col("id").as("event_id"), (col("id") / 2.0).as("value"))
+
+  /** Documents `ids` of 30 words each, no word shared between two of them. */
+  private def syntheticDocs(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(ids.map(id => (id, (0 until 30).map(i => s"d${id}w$i").mkString(" "))))
+      .toDF("doc_id", "text")
 
   test("mergeSink is exactly-once: upserts converge, batch replay is a no-op, torn replay converges") {
     val in    = tmp("merge-in")
@@ -23,7 +36,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // the store is ONE consistent LWW snapshot of everything ingested
     val want = Compaction.lastWriteWins(ev, keys, ord)
       .orderBy("user_id", "event_type").collect().toSeq
-    def snapshot() = StreamingDaemon.readMergeStore(spark, store, ev, keys)
+    def snapshot() = StreamingSpec.readMergeStore(spark, store, ev, keys)
       .orderBy("user_id", "event_type").collect().toSeq
     assert(snapshot() == want)
     val ptr = java.nio.file.Paths.get(s"$store/LATEST")
@@ -73,7 +86,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, ev, batchId = 0L))
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, newer, batchId = 1L))
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, older, batchId = 2L))
-    val got = StreamingDaemon.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq
+    val got = StreamingSpec.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq
     val want = Compaction.lastWriteWins(ev.unionByName(newer).unionByName(older), keys, ord)
       .orderBy("user_id", "event_type").collect().toSeq
     assert(got.size == want.size)
@@ -106,7 +119,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, delta, batchId = 1L))
     assert(state() == ((Set("LATEST", "_applied", "snap-0", "snap-1"), "snap-1", Set("batch-0", "batch-1"))))
-    assert(StreamingDaemon.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq ==
+    assert(StreamingSpec.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq ==
       Compaction.lastWriteWins(ev.unionByName(delta), keys, ord).orderBy("user_id", "event_type").collect().toSeq)
   }
 
@@ -130,7 +143,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .withColumn("ts", col("ts") + expr("INTERVAL 3650 DAYS"))
     def lww(df: org.apache.spark.sql.DataFrame) =
       Compaction.lastWriteWins(df, keys, ord).orderBy("user_id", "event_type").collect().toSeq
-    def latest() = StreamingDaemon.readMergeStore(spark, store, ev, keys)
+    def latest() = StreamingSpec.readMergeStore(spark, store, ev, keys)
       .orderBy("user_id", "event_type").collect().toSeq
     def snaps() = new java.io.File(store).list().filter(_.startsWith("snap-")).toSet
     def fileSig(dir: String): Map[String, (Long, Long)] =
@@ -175,6 +188,115 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(fileSig(s"$store/snap-1") == s1)
     assert(Files.readString(java.nio.file.Paths.get(s"$store/LATEST")) == "snap-1")
     assert(latest() == lww(half1.unionByName(half2)))
+  }
+
+  test("an upsert runs one Spark job, and so does the batch that creates the store") {
+    val store = tmp("mergejobs-store")
+    val keys = Seq("user_id", "event_type"); val ord = Seq("ts", "event_id")
+    val ev = syntheticEvents(2000)
+    val delta = ev.filter(col("user_id") % 5 === 0)
+      .withColumn("ts", col("ts") + expr("INTERVAL 10 DAYS"))
+      .withColumn("value", col("value") + 1000.0)
+    val (_, first) = jobsRunBy(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, ev, batchId = 0L))
+    val (_, upsert) = jobsRunBy(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, delta, batchId = 1L))
+    assert((first, upsert) == ((1, 1)), "jobs of the first batch and of the upsert")
+    assert(StreamingSpec.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq ==
+      Compaction.lastWriteWins(ev.unionByName(delta), keys, ord).orderBy("user_id", "event_type").collect().toSeq)
+  }
+
+  test("mergeSink runs one Spark job per micro-batch and none to start the stream") {
+    val (in, store, ckp) = (tmp("mergesinkjobs-in"), tmp("mergesinkjobs-store"), tmp("mergesinkjobs-ckp"))
+    val keys = Seq("user_id", "event_type"); val ord = Seq("ts", "event_id")
+    val ev = syntheticEvents(2000)
+    ev.coalesce(1).write.mode("append").parquet(in)
+    for (days <- Seq(1, 2)) {
+      Thread.sleep(1100) // distinct mtimes: one file per trigger, in order
+      ev.filter(col("user_id") % 3 === days).withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    val (_, jobs) = jobsRunBy(StreamingDaemon.mergeSink(spark, in, store, ckp, keys, ord).awaitTermination())
+    assert(jobs == 3, "three input files, three micro-batches")
+    assert(StreamingSpec.readMergeStore(spark, store, ev, keys).orderBy("user_id", "event_type").collect().toSeq ==
+      Compaction.lastWriteWins(spark.read.parquet(in), keys, ord).orderBy("user_id", "event_type").collect().toSeq)
+  }
+
+  test("a LATEST snapshot without _bounds is never merged: the upsert throws, naming the store") {
+    val store = tmp("mergenobounds-store")
+    val keys = Seq("user_id", "event_type"); val ord = Seq("ts", "event_id")
+    val ev = syntheticEvents(2000)
+    assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, ev, batchId = 0L))
+    Files.delete(java.nio.file.Paths.get(store, "snap-0", "_bounds"))
+    val delta = ev.filter(col("user_id") % 5 === 0).withColumn("ts", col("ts") + expr("INTERVAL 10 DAYS"))
+    val e = intercept[IllegalStateException](
+      StreamingDaemon.applyMergeBatch(spark, store, keys, ord, delta, batchId = 1L))
+    assert(e.getMessage.contains(store) && e.getMessage.contains("_bounds"), e.getMessage)
+    assert(new java.io.File(store).list().toSet == Set("LATEST", "_applied", "snap-0"))
+    assert(Files.readString(java.nio.file.Paths.get(store, "LATEST")) == "snap-0")
+  }
+
+  test("inputSchema is the schema spark.read.parquet infers, read from one footer with no Spark job") {
+    val sparkDir = tmp("footer-spark")
+    spark.sql("""SELECT 1L AS id, 'x' AS s, array(1.0f, 2.0f) AS emb, named_struct('a', 1, 'b', 'y') AS st,
+        CAST(1.5 AS DECIMAL(10, 2)) AS d, DATE'2024-01-01' AS day, TIMESTAMP'2024-01-01 00:00:00' AS ts,
+        map('k', 1.0D) AS m, CAST(NULL AS STRING) AS n""")
+      .coalesce(1).write.mode("append").parquet(sparkDir)
+    // written by parquet-mr, as the benchmark's generator writes its store
+    val mrDir = tmp("footer-mr")
+    val mrSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(MICROS,true));
+        |  optional int32 day (DATE);
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  optional binary raw;
+        |}""".stripMargin)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(java.nio.file.Paths.get(mrDir, "part-00000.parquet")))
+      .withType(mrSchema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(mrSchema).newGroup()
+      .append("event_id", 1L).append("ts", 1704067200000000L).append("day", 19723)
+      .append("event_type", "click").append("value", 2.5))
+    finally w.close()
+    for (dir <- Seq(sparkDir, mrDir)) {
+      val (schema, jobs) = jobsRunBy(StreamingDaemon.inputSchema(spark, dir))
+      assert(jobs == 0, dir)
+      assert(schema == spark.read.parquet(dir).schema, dir)
+    }
+  }
+
+  test("inputSchema of a partitioned input directory is the inferred one, partition columns included") {
+    val dir = tmp("footer-partitioned")
+    syntheticEvents(100).withColumn("day", col("user_id") % 2)
+      .write.mode("append").partitionBy("day").parquet(dir)
+    val schema = StreamingDaemon.inputSchema(spark, dir)
+    assert(schema == spark.read.parquet(dir).schema && schema.fieldNames.contains("day"), schema)
+    val empty = tmp("footer-empty")
+    val e = intercept[IllegalArgumentException](StreamingDaemon.inputSchema(spark, empty))
+    assert(e.getMessage.contains(empty), e.getMessage)
+  }
+
+  test("ingestDedupLoop infers no schema with a Spark job: not to start the stream, not to read its signature store") {
+    val (in, out, ckp, sig) = (tmp("ijobs-in"), tmp("ijobs-out"), tmp("ijobs-ckp"), tmp("ijobs-sig"))
+    val corpusSigs = graft.operators.TextQueries.bandKeysOf(syntheticDocs(1000L until 1040L))
+      .withColumnRenamed("doc_id", "corpus_doc").localCheckpoint()
+    for (i <- 0 until 3) {
+      syntheticDocs(i * 20L until i * 20L + 20L).coalesce(1).write.mode("append").parquet(in)
+      Thread.sleep(1100)
+    }
+    // Jobs of the stream's own thread carry the call site of its start, so
+    // only the start's inference shows up as a DataFrameReader job here.
+    val (_, sites) = jobSitesRunBy(
+      StreamingDaemon.ingestDedupLoop(spark, in, corpusSigs, out, ckp, sig).awaitTermination())
+    info(s"${sites.size} Spark jobs over 3 micro-batches")
+    assert(new java.io.File(out).list().count(_.startsWith("batch=")) == 3)
+    assert(sites.nonEmpty && !sites.exists(_.contains("DataFrameReader")),
+      sites.filter(_.contains("DataFrameReader")).mkString("\n---\n"))
+    // what each batch reads: the committed `batch=N` directories of a store
+    val like = spark.range(0).select(col("id").cast("string").as("skey"))
+    val (prior, readJobs) = jobsRunBy(StreamingDaemon.readSigStore(spark, s"$sig/skeys", like, excludeBatch = 2L))
+    assert(readJobs == 0)
+    assert(prior.columns.toSeq == Seq("skey") && prior.count() > 0)
   }
 
   test("ingestDedupLoop restart-from-checkpoint: dedup state persists across the process death") {
@@ -235,7 +357,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     val q = StreamingDaemon
       .streamingDedupKeysOnly(
-        StreamingDaemon.source(spark, in, spark.read.parquet(in)),
+        StreamingDaemon.source(spark, in, spark.read.parquet(in).schema),
         Seq("user_id", "event_type"))
       .writeStream.format("memory").queryName("dwk_out")
       .outputMode("append")
@@ -264,7 +386,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     ev.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(in)
     ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(in)
 
-    val stream = StreamingDaemon.source(spark, in, ev)
+    val stream = StreamingDaemon.source(spark, in, ev.schema)
     val joined = StreamingDaemon.attributionJoin(
       stream.filter(col("event_type") === "click"),
       stream.filter(col("event_type") === "purchase"))
@@ -663,7 +785,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     docs.filter(col("doc_id") % 3 === 0).coalesce(1).write.mode("append").parquet(in)
 
     val q = StreamingDaemon
-      .driftHistogram(StreamingDaemon.source(spark, in, spark.read.parquet(in)))
+      .driftHistogram(StreamingDaemon.source(spark, in, spark.read.parquet(in).schema))
       .writeStream.format("memory").queryName("drift_out")
       .outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -679,5 +801,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val total = spark.table("drift_out")
       .agg(sum(col("ca") + col("cb"))).head.getLong(0)
     assert(total == docs.count())
+  }
+}
+
+object StreamingSpec {
+
+  /** Current snapshot of a [[StreamingDaemon.mergeSink]] store: the
+    * directory named by the LATEST pointer, or an empty frame before the
+    * first commit. Both carry `schemaFrom`'s columns with `keys` first, the
+    * order the merge writes; the snapshot is read with that schema, so no
+    * Spark job infers it from the parquet footers.
+    */
+  def readMergeStore(spark: SparkSession, storeDir: String, schemaFrom: DataFrame, keys: Seq[String]): DataFrame = {
+    val ordered = schemaFrom.select((keys ++ schemaFrom.columns.filterNot(keys.contains)).map(col): _*)
+    SnapshotStore.pointed(SnapshotStore.local(storeDir).resolve("LATEST"))
+      .fold(ordered.limit(0))(snap => spark.read.schema(ordered.schema).parquet(s"$storeDir/$snap"))
   }
 }
