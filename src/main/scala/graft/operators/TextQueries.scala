@@ -24,12 +24,14 @@ object TextQueries extends QueryPack {
 
   /** The LSH over-cap bucket boundary (standard practice: a bucket shared
     * by more members is boilerplate; enumerating its pairs is the n²
-    * blowup banding exists to avoid). ONE Scala-side landing for every
-    * expansion gate — [[cappedPairs]]' all-pairs/star switchover, the cap
-    * audit and the ingest-join hot-bucket guard. The DuckDB oracles and
-    * the plan-pinning specs mirror the literals 100/101; the correctness
-    * gate fails loudly if the sides ever drift, so changing this constant
-    * forces the oracle edit rather than silently diverging.
+    * blowup banding exists to avoid). Read in exactly three places: the
+    * all-pairs/star switchover of [[cappedPairs]], the probe side of
+    * [[cappedStore]], and the cap audit that prices the stars. Every LSH
+    * candidate path goes through one of the two helpers, so an over-cap
+    * bucket is starred to its minimum member, never dropped. The DuckDB
+    * oracles and the plan-pinning specs mirror the literals 100/101; the
+    * correctness gate fails loudly if the sides ever drift, so changing
+    * this constant forces the oracle edit rather than silently diverging.
     */
   private[graft] val BucketCap = 100
 
@@ -225,7 +227,7 @@ object TextQueries extends QueryPack {
     */
   /** Mark every bucket row with its bucket's representative (`mn` =
     * min(mnExpr)) and size (`sz`) — the shared pre-pass of
-    * [[cappedPairs]] and [[starEdgesOf]]: min/count over
+    * [[cappedPairs]], [[cappedStore]] and [[starEdgesOf]]: min/count over
     * Window.partitionBy(part) — ONE exchange on the bucket key; a
     * degenerate bucket is one task's spillable sort. Unused marks are
     * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
@@ -245,7 +247,9 @@ object TextQueries extends QueryPack {
 
   /** The dedup family's bounded-state pair expansion — the ONE landing of
     * the cap policy for every pair-list consumer ([[bandPairsOf]],
-    * [[bandedHammingPairs]], q_dedup_prefix, q_dedup_lsh_sweep). Each
+    * [[bandedHammingPairs]], q_dedup_prefix, q_dedup_lsh_sweep, the
+    * embedding candidates and the ingest gate's intra-batch semantic arm;
+    * their corpus↔new probes read [[cappedStore]]). Each
     * bucket row (bucket key `carried ++ bucket`) is first marked with its
     * bucket's minimum `member` and size via ONE window pass
     * ([[markBuckets]]: a spillable sort, never a collect buffer); the
@@ -283,6 +287,19 @@ object TextQueries extends QueryPack {
         transform(slice(col("ds"), i + lit(2), size(col("ds")) - i - 1), b => pair(a, b))))))
       .unionAll(pairs(star, pair(col("mn"), member)))
   }
+
+  /** The stored side of a corpus↔new probe under the [[cappedPairs]]
+    * policy: every row of a bucket of at most [[BucketCap]] members, and
+    * only the rows whose `member` is the bucket minimum in a larger one. A
+    * probe that lands in a hot store bucket meets its representative, not
+    * the whole bucket, so the probe join stays linear in the probe and the
+    * probe stays a candidate of the representative instead of vanishing.
+    */
+  private[graft] def cappedStore(store: org.apache.spark.sql.DataFrame,
+      bucket: Seq[String], member: Column): org.apache.spark.sql.DataFrame =
+    markBuckets(store, bucket, member)
+      .filter(col("sz") <= BucketCap || member === col("mn"))
+      .drop("mn", "sz")
 
   /** An unordered id pair (doc_a < doc_b) — the pair shape of the minhash
     * candidate lists.
@@ -644,16 +661,16 @@ object TextQueries extends QueryPack {
       .select(col("v").as("doc_id"), col("lbl").as("cluster_id")))
 
   /** The new snapshot's candidate edges (u, v), u = any endpoint: corpus↔new
-    * via the persisted skey store (hot corpus buckets > 100 excluded — the
-    * standard LSH guard, mirrored by the oracle) plus new↔new from the
-    * snapshot's own capped buckets. Package-visible so the spec can assert
-    * fold-equals-full-recontraction over exactly this edge set.
+    * via the persisted skey store (a corpus bucket above [[BucketCap]] is
+    * probed at its minimum corpus doc only — [[cappedStore]], mirrored by
+    * the oracle) plus new↔new from the snapshot's own capped buckets.
+    * Package-visible so the spec can assert fold-equals-full-recontraction
+    * over exactly this edge set.
     */
   private[graft] def incNewEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
     val fresh = Tables.documents(s, d).filter(col("doc_id") % 10 === 7)
-    val store = s.table(corpusSigTable(s, d))
-    val hot = store.groupBy(col("skey")).agg(count(lit(1)).as("csz"))
-      .filter(col("csz") > BucketCap).select(col("skey"))
+    // the store is bucketed by skey, so the window adds no exchange
+    val store = cappedStore(s.table(corpusSigTable(s, d)), Seq("skey"), col("corpus_doc"))
     // Round 21: the corpus↔new leg (skey form) and the new↔new leg (pair
     // expansion) both start from the snapshot's band buckets — formerly
     // each leg re-shingled and re-hashed the snapshot from parquet. One
@@ -662,7 +679,6 @@ object TextQueries extends QueryPack {
     val freshKeys = freshBuckets
       .select(col("doc_id"), concat_ws(":", col("band"), col("bkey")).as("skey"))
     val newCorpus = freshKeys
-      .join(hot, Seq("skey"), "left_anti")
       .join(store, "skey")
       .select(col("doc_id").as("u"), col("corpus_doc").as("v"))
       .distinct()
@@ -2889,10 +2905,10 @@ object TextQueries extends QueryPack {
     // corpus star edges (min→member over EVERY corpus-only bucket of ≥2 —
     // connectivity-identical to bandPairsOf's round-11 clique+star output
     // at every bucket size, so the mirror is exact at any scale),
-    // new↔corpus via the skey store (corpus buckets > 100 excluded — the
-    // ingest-join guard), new↔new (fresh-only buckets: 2–100 pair
-    // expansion plus min→member stars for over-cap buckets, mirroring
-    // bandPairsOf). The recursive closure IS the "labels equal full
+    // new↔corpus via the skey store (a corpus bucket > 100 is probed at
+    // its minimum doc only, mirroring cappedStore), new↔new (fresh-only
+    // buckets: 2–100 pair expansion plus min→member stars for over-cap
+    // buckets, mirroring bandPairsOf). The recursive closure IS the "labels equal full
     // recontraction" criterion the fold is judged against.
     "q_dedup_cluster_incremental" ->
       s"""WITH RECURSIVE $shCte,
@@ -2909,7 +2925,8 @@ object TextQueries extends QueryPack {
          |        FROM cb),
          |ccand AS (SELECT DISTINCT mn AS a, doc_id AS b FROM cst WHERE doc_id <> mn),
          |cstore AS (SELECT * FROM cb
-         |           QUALIFY count(*) OVER (PARTITION BY band, bkey) <= 100),
+         |           QUALIFY count(*) OVER (PARTITION BY band, bkey) <= 100
+         |                OR doc_id = min(doc_id) OVER (PARTITION BY band, bkey)),
          |nc AS (SELECT DISTINCT f.doc_id AS a, c.doc_id AS b
          |       FROM fb f JOIN cstore c ON f.band = c.band AND f.bkey = c.bkey),
          |fst AS (SELECT doc_id, band, bkey,

@@ -110,53 +110,30 @@ object VectorQueries extends QueryPack {
     * sign bits each (64 dims); a pair is a candidate iff ANY band's bucket
     * matches (measured 128× pair pruning at sf0.1 with perfectly balanced
     * 256-way buckets); exact cosine on candidates only, deduped across
-    * bands. Same 2–100 bucket-size cap as the minhash pipeline so hot
-    * buckets can't reintroduce the quadratic join at 100 TB.
-    *
-    * Shape note (measured both ways at sf0.1/local[32]): the (band, bkt)
-    * SELF-JOIN builds the band pipeline twice (no cross-branch subplan
-    * reuse) but every operator stays codegen'd and 32-way parallel —
-    * 1.4 s. The "clever" single-pass alternative (collect each bucket's
-    * (vec_id, embedding) structs, nested-HOF the i<j pairs) runs the
-    * pipeline once but pays interpreted lambda evaluation + per-bucket
-    * serial expansion over 64-float arrays — 2.7 s. The join form wins and
-    * is what ships; consumers that only need the PAIRS (kNN) read the
-    * memoized materialization below instead of re-running either form.
-    * Returns (vec_a < vec_b, cos_r rounded to 6 dp).
+    * bands. The buckets expand through [[TextQueries.cappedPairs]], the
+    * minhash pipeline's cap policy: all pairs of a bucket of 2–100
+    * vectors, and a star to the minimum vec_id of a larger one, so a hot
+    * bucket can't reintroduce the quadratic join at 100 TB and its vectors
+    * stay candidates. The in-bucket expansion is cappedPairs' interpreted
+    * collect-and-transform, slower than the codegen'd (band, bkt)
+    * self-join it replaced: the 20× rows soak over sf0.01 (2.09 M in-bucket
+    * pair rows either way) ran q_dedup_embed in 8.0–10.1 s against
+    * 6.2–8.0 s, on 4 cores. Returns (vec_a < vec_b, cos_r rounded to 6 dp).
     */
-  private def embedCandidates(s: org.apache.spark.sql.SparkSession, d: String) = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def embedCandidates(s: org.apache.spark.sql.SparkSession, d: String) = {
     val e = Tables.embeddings(s, d)
     // Round 22 (guide §8 "decide with small rows, move big rows once"): the
-    // band rows are THIN — (vec_id, band, bkt), no embedding. The round-21
-    // shape carried the full 64-float vector on every one of the 8 band rows
-    // through the checkpoint, the bucket-size window AND both self-join
-    // sides, and computed the cosine once per band collision before a
-    // distinct on (pair, cos). Now the self-join decides candidate PAIRS on
-    // thin rows, dedupes the ids, and the embeddings attach once per
-    // endpoint to the (128×-pruned) pair set — the payload crosses one
-    // vec-keyed join per side instead of riding an 8×-amplified band
-    // exchange, and the cosine runs once per pair. Same pairs, same cos_r
-    // (dedup before vs after the deterministic cosine is equivalent).
+    // band rows are THIN — (vec_id, band, bkt), no embedding. Candidate
+    // PAIRS are decided on thin rows and deduped, then the embeddings
+    // attach once per endpoint to the (128×-pruned) pair set — the payload
+    // crosses one vec-keyed join per side instead of riding an
+    // 8×-amplified band exchange, and the cosine runs once per pair.
     val banded = e.select(
         col("vec_id"),
         posexplode(VectorFns.signBands(col("embedding"))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkt")
-    // Pinned (round 21): both self-join sides read this table; unpinned,
-    // the 8-band posexplode (sign-bucket projections) plus the bucket-size
-    // window ran once PER side — the plan audit showed the whole pipeline
-    // duplicated under the BroadcastHashJoin (no exchange reuse across a
-    // broadcast side).
-    val sized = banded
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("band"), col("bkt"))))
-      .filter(col("bsz").between(2, TextQueries.BucketCap))
-      .pin()
-    sized.select(col("band"), col("bkt"), col("vec_id").as("vec_a"))
-      .join(
-        sized.select(col("band"), col("bkt"), col("vec_id").as("vec_b")),
-        Seq("band", "bkt"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
+    TextQueries.cappedPairs(banded, Seq("band", "bkt"), col("vec_id"), Nil)((a, b) =>
+        struct(a.as("vec_a"), b.as("vec_b")))
       .distinct() // a pair colliding in k bands appears k times
       .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea")), "vec_a")
       .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb")), "vec_b")
@@ -520,11 +497,12 @@ object VectorQueries extends QueryPack {
     // computed on candidates only. The join key is (band, bucket) — never a
     // cross join — so candidate count scales with collision count, not n²
     // (measured: 15.6 k candidates of 2.0 M possible pairs at sf0.1, 128×
-    // pruning with perfectly balanced 256-way buckets). The same
-    // oversized-bucket guard as q_dedup_minhash (2..100) caps hot buckets so
-    // no single bucket can reintroduce the quadratic join at 100 TB.
-    // Recall trade-off is inherent to LSH and mirrored exactly by the
-    // oracle: both engines rank the same LSH candidate set.
+    // pruning with perfectly balanced 256-way buckets). The same cap
+    // policy as q_dedup_minhash (cappedPairs): a bucket above 100 vectors
+    // stars to its minimum vec_id, so no single bucket can reintroduce the
+    // quadratic join at 100 TB and none of its vectors is dropped. Recall
+    // trade-off is inherent to LSH and mirrored exactly by the oracle: both
+    // engines rank the same LSH candidate set.
     "q_dedup_embed" -> ((s, d) =>
       embedCandidates(s, d)
         .orderBy(col("cos_r").desc, col("vec_a"), col("vec_b"))
@@ -845,10 +823,11 @@ object VectorQueries extends QueryPack {
     // the hash (4 bands of 8 bits — pigeonhole: hamming ≤ 3 GUARANTEES a
     // shared band, so maxHamming = 3 makes banding exact, not best-effort),
     // and exact Hamming via bit_count(xor) runs on candidates only — the
-    // q_dedup_simhash_pairs shape verbatim, same 2–100 bucket cap so a hot
-    // band value is dropped, never expanded quadratically. The whole
-    // craft→decode→hash chain is one codegen'd projection; the DuckDB
-    // oracle reproduces the luminance math with integer `//` arithmetic.
+    // q_dedup_simhash_pairs shape verbatim, the same cappedPairs policy, so
+    // a hot band value stars to its minimum doc, never expanded
+    // quadratically. The whole craft→decode→hash chain is one codegen'd
+    // projection; the DuckDB oracle reproduces the luminance math with
+    // integer `//` arithmetic.
     "q_dedup_phash" -> ((s, d) => {
       val bin = encode(col("text"), "utf-8")
       val hRows = (length(bin) / lit(12)).cast("int") // image height; width = 4
@@ -1169,6 +1148,36 @@ object VectorQueries extends QueryPack {
        |${mean("t2", "c1", "c2")}""".stripMargin
   }
 
+  /** The DuckDB mirror of [[embedCandidates]], shared by q_dedup_embed,
+    * q_simsearch_knn and q_dedup_semantic as the text family shares
+    * `candCtes`: each sign-band bucket marked with its minimum vec_id and
+    * size, all pairs of a bucket of 2–100 vectors and a star to the
+    * minimum of a larger one, deduped across bands, then `cand` (vec_a,
+    * vec_b, cos_r) with the rounded cosine.
+    */
+  private lazy val embedCandCtes: String =
+    s"""banded AS (
+       |  SELECT vec_id, CAST(r.b AS INT) AS band,
+       |         CAST(list_sum(list_transform(range(0, 8),
+       |              j -> CASE WHEN embedding[8*r.b + j + 1] > 0
+       |                   THEN CAST(pow(2, j) AS INT) ELSE 0 END)) AS INT) AS bkt
+       |  FROM embeddings CROSS JOIN range(8) r(b)),
+       |st AS (SELECT vec_id, band, bkt,
+       |              min(vec_id) OVER (PARTITION BY band, bkt) AS mn,
+       |              count(*) OVER (PARTITION BY band, bkt) AS sz
+       |       FROM banded),
+       |ids AS (SELECT DISTINCT a, b FROM (
+       |          SELECT x.vec_id AS a, y.vec_id AS b
+       |          FROM st x JOIN st y
+       |            ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id
+       |          WHERE x.sz BETWEEN 2 AND 100
+       |          UNION ALL
+       |          SELECT mn, vec_id FROM st WHERE sz > 100 AND vec_id <> mn)),
+       |cand AS (SELECT i.a AS vec_a, i.b AS vec_b,
+       |                round(${cosSql("x.embedding", "y.embedding")}, 6) AS cos_r
+       |         FROM ids i JOIN embeddings x ON x.vec_id = i.a
+       |                    JOIN embeddings y ON y.vec_id = i.b)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q_simsearch_topk" ->
       s"""WITH probe AS (SELECT embedding AS pe FROM embeddings WHERE vec_id = 0)
@@ -1199,53 +1208,22 @@ object VectorQueries extends QueryPack {
          |FROM a, p, top2 WHERE a.cell = top2.pcell AND vec_id <> 0
          |ORDER BY cos_r DESC, vec_id LIMIT 5""".stripMargin,
     "q_simsearch_knn" ->
-      s"""WITH banded AS (
-         |  SELECT vec_id, embedding, CAST(r.b AS INT) AS band,
-         |         CAST(list_sum(list_transform(range(0, 8),
-         |              j -> CASE WHEN embedding[8*r.b + j + 1] > 0
-         |                   THEN CAST(pow(2, j) AS INT) ELSE 0 END)) AS INT) AS bkt
-         |  FROM embeddings CROSS JOIN range(8) r(b)),
-         |sized AS (SELECT * FROM banded
-         |          QUALIFY count(*) OVER (PARTITION BY band, bkt) BETWEEN 2 AND 100),
-         |cand AS (SELECT DISTINCT x.vec_id AS va, y.vec_id AS vb,
-         |                round(${cosSql("x.embedding", "y.embedding")}, 6) AS cos_r
-         |         FROM sized x JOIN sized y
-         |           ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id),
-         |bi AS (SELECT va, vb, cos_r FROM cand
-         |       UNION ALL SELECT vb, va, cos_r FROM cand)
+      s"""WITH $embedCandCtes,
+         |bi AS (SELECT vec_a AS va, vec_b AS vb, cos_r FROM cand
+         |       UNION ALL SELECT vec_b, vec_a, cos_r FROM cand)
          |SELECT va AS vec_id, vb AS nn_id, cos_r AS nn_cos
          |FROM (SELECT va, vb, cos_r,
          |             row_number() OVER (PARTITION BY va ORDER BY cos_r DESC, vb) AS rn
          |      FROM bi)
          |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     "q_dedup_embed" ->
-      s"""WITH banded AS (
-         |  SELECT vec_id, embedding, CAST(r.b AS INT) AS band,
-         |         CAST(list_sum(list_transform(range(0, 8),
-         |              j -> CASE WHEN embedding[8*r.b + j + 1] > 0
-         |                   THEN CAST(pow(2, j) AS INT) ELSE 0 END)) AS INT) AS bkt
-         |  FROM embeddings CROSS JOIN range(8) r(b)),
-         |sized AS (SELECT * FROM banded
-         |          QUALIFY count(*) OVER (PARTITION BY band, bkt) BETWEEN 2 AND 100)
-         |SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b,
-         |       round(${cosSql("x.embedding", "y.embedding")}, 6) AS cos_r
-         |FROM sized x JOIN sized y
-         |  ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id
+      s"""WITH $embedCandCtes
+         |SELECT vec_a, vec_b, cos_r FROM cand
          |ORDER BY cos_r DESC, vec_a, vec_b LIMIT 10""".stripMargin,
     "q_dedup_semantic" ->
-      s"""WITH RECURSIVE banded AS (
-         |  SELECT vec_id, embedding, CAST(r.b AS INT) AS band,
-         |         CAST(list_sum(list_transform(range(0, 8),
-         |              j -> CASE WHEN embedding[8*r.b + j + 1] > 0
-         |                   THEN CAST(pow(2, j) AS INT) ELSE 0 END)) AS INT) AS bkt
-         |  FROM embeddings CROSS JOIN range(8) r(b)),
-         |sized AS (SELECT * FROM banded
-         |          QUALIFY count(*) OVER (PARTITION BY band, bkt) BETWEEN 2 AND 100),
-         |cand AS (SELECT DISTINCT x.vec_id AS va, y.vec_id AS vb
-         |         FROM sized x JOIN sized y
-         |           ON x.band = y.band AND x.bkt = y.bkt AND x.vec_id < y.vec_id
-         |         WHERE round(${cosSql("x.embedding", "y.embedding")}, 6) >= 0.4),
-         |e AS (SELECT va AS x, vb AS y FROM cand UNION SELECT vb, va FROM cand),
+      s"""WITH RECURSIVE $embedCandCtes,
+         |sem AS (SELECT vec_a, vec_b FROM cand WHERE cos_r >= 0.4),
+         |e AS (SELECT vec_a AS x, vec_b AS y FROM sem UNION SELECT vec_b, vec_a FROM sem),
          |reach(v, u) AS (
          |  SELECT x, x FROM e
          |  UNION

@@ -280,8 +280,13 @@ object StreamingDaemon {
     * embeddings fold back into the store per batch like the text
     * signatures. (The TEXT near-dup arm stays store-only within a batch —
     * exact hash handles intra-batch text dups; the semantic arm covers the
-    * mirror-page case exact hashing misses.) In production the hot band
-    * values are capped (the 2–100 bucket rule) when the store is compacted.
+    * mirror-page case exact hashing misses.) Both semantic legs keep the
+    * cap policy of every LSH candidate path: a batch band value above
+    * [[graft.operators.TextQueries.BucketCap]] stars to its minimum
+    * doc_id ([[graft.operators.TextQueries.cappedPairs]]), and a stored
+    * one is probed at its minimum embedding only
+    * ([[graft.operators.TextQueries.cappedStore]]) — no hot bucket is
+    * dropped, and neither leg goes quadratic on it.
     */
   def ingestDedupLoop(
       spark: SparkSession,
@@ -313,31 +318,26 @@ object StreamingDaemon {
           val priorHashes = readSigStore(spark, s"$sigStoreDir/hashes",
             exact.select(col("content_hash")), batchId)
           val nearDup = sigs
-            .join(corpusSigs.select(col("skey")).union(priorSkeys), "skey")
+            .join(corpusSigs.select(col("skey")).union(priorSkeys), Seq("skey"), "left_semi")
             .select(col("doc_id"))
           val exactDup = exact
             .join(priorHashes, Seq("content_hash"), "left_semi")
             .select(col("doc_id"))
           val semDup = (corpusEmbSigs, bsigs) match {
             case (Some(corpusEmb), Some(bs)) =>
-              import org.apache.spark.sql.expressions.Window
-              val stored = corpusEmb.select(col("ekey"), col("embedding"))
-                .union(readSigStore(spark, s"$sigStoreDir/ekeys",
-                  bs.select(col("ekey"), col("embedding")), batchId))
+              import graft.operators.TextQueries.{cappedPairs, cappedStore}
+              // The ekeys store has no id column: a hot stored band value
+              // is represented by its minimum embedding.
+              val stored = cappedStore(corpusEmb.select(col("ekey"), col("embedding"))
+                  .union(readSigStore(spark, s"$sigStoreDir/ekeys",
+                    bs.select(col("ekey"), col("embedding")), batchId)),
+                  Seq("ekey"), col("embedding"))
                 .withColumnRenamed("embedding", "stored_emb")
-              // Hot store-side band values (> 100 entries) are boilerplate
-              // buckets and are excluded — the incNewEdges guard: without
-              // it one saturated band value makes the probe join quadratic
-              // in the store.
-              val hot = stored.groupBy(col("ekey"))
-                .agg(count(lit(1)).as("esz"))
-                .filter(col("esz") > graft.operators.TextQueries.BucketCap).select(col("ekey"))
               // Dedup (batch doc, stored embedding) candidates ACROSS bands
               // before the cosine — up to 8 band collisions per pair must
               // pay the exact-cosine confirm once, the same groupBy+first
               // discipline as the intra-batch arm below.
-              val vsStored = bs.join(hot, Seq("ekey"), "left_anti")
-                .join(stored, "ekey")
+              val vsStored = bs.join(stored, "ekey")
                 .groupBy(col("doc_id"), col("stored_emb"))
                 .agg(first(col("embedding")).as("embedding"))
                 .filter(graft.functions.VectorFns.cosine(
@@ -348,19 +348,15 @@ object StreamingDaemon {
               // and the HIGHER doc_id loses — the same deterministic
               // min-keeper rule as the exact-hash dedup above. Without
               // this, a crawl batch full of mirror pages would pass the
-              // gate untouched and pollute the ekeys store. Same 2–100
-              // bucket cap as every banded pipeline (a mirror-flood batch
-              // saturates all 8 bands — the motivating input must not go
-              // quadratic on itself), and each surviving pair pays the
-              // exact cosine ONCE (deduped across bands first).
-              val sized = bs.withColumn("bsz",
-                  count(lit(1)).over(Window.partitionBy(col("ekey"))))
-                .filter(col("bsz").between(2, graft.operators.TextQueries.BucketCap))
-              val vsBatch = sized.select(col("ekey"),
-                  col("doc_id").as("doc_a"), col("embedding").as("ea"))
-                .join(sized.select(col("ekey"),
-                  col("doc_id").as("doc_b"), col("embedding").as("eb")), "ekey")
-                .filter(col("doc_a") < col("doc_b"))
+              // gate untouched and pollute the ekeys store. A mirror-flood
+              // batch saturates all 8 bands: cappedPairs stars each
+              // over-cap band to its minimum doc_id, so the flood neither
+              // goes quadratic on itself nor passes, and each pair pays
+              // the exact cosine ONCE (deduped across bands first).
+              val vsBatch = cappedPairs(bs, Seq("ekey"),
+                  struct(col("doc_id"), col("embedding")), Nil)((a, b) =>
+                  struct(a.getField("doc_id").as("doc_a"), a.getField("embedding").as("ea"),
+                    b.getField("doc_id").as("doc_b"), b.getField("embedding").as("eb")))
                 .groupBy(col("doc_a"), col("doc_b"))
                 .agg(first(col("ea")).as("ea"), first(col("eb")).as("eb"))
                 .filter(graft.functions.VectorFns.cosine(

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.TextQueries
+import graft.operators.{TextQueries, VectorQueries}
 import graft.operators.TextQueries.BucketCap
 
 /** TextQueries.cappedPairs, the one bounded-state pair expansion of the
@@ -64,17 +64,40 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     assert(got == rows.collect { case (_, id, n) if id != rep => (rep, nOf(rep), id, n) }.toSet)
   }
 
+  test("an embedding band bucket of BucketCap + 1 near-identical vectors stars from its minimum vec_id") {
+    import spark.implicits._
+    val dir = tempDir("embedcap").toString
+    // BucketCap + 1 vectors of one sign pattern, apart only in the size of
+    // their first element, share the bucket of every band. Two vectors of
+    // another pattern share small buckets and pair as before.
+    def vec(positive: Int => Boolean, bump: Float) =
+      Array.tabulate(64)(i => (if (positive(i)) 0.5f else -0.5f) + (if (i == 0) bump else 0f))
+    val hot = (0 to BucketCap).map(k => (1000L + k, vec(_ % 3 == 0, k * 1e-3f)))
+    val small = Seq(5L, 6L).map(id => (id, vec(_ % 2 == 0, id * 1e-3f)))
+    (hot ++ small).map { case (id, e) => (id, e, 0) }.toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    val got = VectorQueries.embedCandidates(spark, dir)
+      .select("vec_a", "vec_b").as[(Long, Long)].collect()
+    assert(got.toSet == (1001L to 1000L + BucketCap).map(1000L -> _).toSet + (5L -> 6L))
+    assert(got.length == got.toSet.size, "a pair was emitted twice")
+  }
+
   test("the pair expansion and the sz-versus-BucketCap gate live only in cappedPairs") {
     // One spelling of the cap policy: a second in-bucket expansion (a
-    // slice from i + 2 inside transform) or a second `sz` gate against
-    // BucketCap would let the copies drift apart. The cap audit's size
-    // histogram prices cappedPairs' stars and is the one other `sz` gate.
+    // slice from i + 2 inside transform) or a second read of BucketCap,
+    // whatever the gate's column is called, would let the copies drift
+    // apart. BucketCap is declared once and read by cappedPairs, by
+    // cappedStore (the stored side of the corpus↔new probes) and by the
+    // cap audit, which prices cappedPairs' stars. Comments do not count.
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
     val expansion = """slice\([^\n]*\bi\s*\+\s*lit\(2\)""".r
-    val gate = """col\("sz"\)[^\n]*BucketCap""".r
-    // the source span of a definition: from its opening line to the first
-    // line closing it at the same indentation
+    val cap = """\bBucketCap\b""".r
+    // comments blanked to spaces, so offsets and line numbers still hold
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    def code(src: String) = comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+    // the source span of a definition: from its opening text to the first
+    // `close` after it
     def span(src: String, open: String, close: String): Option[(Int, Int)] = {
       val start = src.indexOf(open)
       if (start < 0) None else Some((start, src.indexOf(close, start)))
@@ -83,24 +106,28 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     val files =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    // (pattern, where it matched): "helper", "audit" or file:line
+    // (pattern, where it matched): the name of an allowed site or file:line
     val found = files.flatMap { f =>
-      val src = Files.readString(f)
-      val helper = span(src, "def cappedPairs(", "\n  }\n")
-      val audit = span(src, "\"q_dedup_cap_audit\" ->", "\n    }),\n")
-      def within(at: Int, s: Option[(Int, Int)]) = s.exists { case (a, b) => a <= at && at < b }
-      Seq("expansion" -> expansion, "gate" -> gate).flatMap { case (kind, re) =>
+      val raw = Files.readString(f)
+      val src = code(raw)
+      val sites = Seq(
+        "cappedPairs" -> span(src, "def cappedPairs(", "\n  }\n"),
+        "cappedStore" -> span(src, "def cappedStore(", "\n\n"),
+        "audit" -> span(src, "\"q_dedup_cap_audit\" ->", "\n    }),\n"),
+        "declaration" -> span(src, "val BucketCap = ", "\n"))
+      Seq("expansion" -> expansion, "cap" -> cap).flatMap { case (kind, re) =>
         re.findAllMatchIn(src).map(_.start).map { at =>
           val line = src.substring(0, at).count(_ == '\n')
-          kind -> (if (within(at, helper)) "helper"
-            else if (kind == "gate" && within(at, audit)) "audit"
-            else s"$f:${line + 1}: ${src.linesIterator.drop(line).next().trim}")
+          val site = sites.collectFirst { case (name, Some((a, b))) if a <= at && at < b => name }
+          kind -> site.filter(kind == "cap" || _ == "cappedPairs")
+            .getOrElse(s"$f:${line + 1}: ${raw.linesIterator.drop(line).next().trim}")
         }
       }
     }
-    val stray = found.map(_._2).filterNot(Set("helper", "audit"))
+    val stray = found.map(_._2).filterNot(Set("cappedPairs", "cappedStore", "audit", "declaration"))
     assert(stray.isEmpty, stray.mkString("\n"))
-    // the patterns still find the helper's own expansion and its two gates
-    assert(found.filter(_._2 == "helper").map(_._1).sorted == Seq("expansion", "gate", "gate"), found)
+    // the patterns still find each helper's own reads
+    assert(found.filter(_._2 == "cappedPairs").map(_._1).sorted == Seq("cap", "cap", "expansion"), found)
+    assert(found.count(_ == ("cap" -> "cappedStore")) == 1, found)
   }
 }

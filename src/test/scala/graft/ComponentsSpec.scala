@@ -93,11 +93,31 @@ class ComponentsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("incremental fold equals full recontraction over the same edge set") {
-    // The q_dedup_cluster_incremental claim, stated directly: folding the
-    // new snapshot's edges into the corpus label store (labelling only
-    // the quotient graph) must produce EXACTLY the labels a from-scratch
-    // labelling of corpus ∪ new edges produces.
     val d = "/root/testdata/sf0.001"
+    assertFoldEqualsRecontraction(d)
+  }
+
+  test("a fresh doc in a hot corpus skey bucket gets an edge to the bucket's minimum corpus doc") {
+    val d = tempDir("hotskey").toString
+    // 120 docs of one text: each band bucket of the 108 corpus docs
+    // (doc_id % 10 != 7) is over BucketCap, and the 12 fresh docs
+    // (doc_id % 10 = 7) fall into every one of them.
+    val text = "alpha beta gamma delta epsilon zeta eta theta"
+    (0L until 120L).map(i => (i, text, "en", "test", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$d/documents.parquet")
+    val edges = graft.operators.TextQueries.incNewEdges(spark, d).as[(Long, Long)].collect().toSet
+    val newCorpus = edges.filter { case (_, v) => v % 10 != 7 }
+    assert(newCorpus == (7L until 120L by 10L).map(_ -> 0L).toSet, newCorpus)
+    assertFoldEqualsRecontraction(d)
+  }
+
+  /** The q_dedup_cluster_incremental claim, stated directly: folding the
+    * new snapshot's edges into the corpus label store (labelling only the
+    * quotient graph) must produce EXACTLY the labels a from-scratch
+    * labelling of corpus ∪ new edges produces.
+    */
+  private def assertFoldEqualsRecontraction(d: String): Unit = {
     val fold = SparkEntry.queries("q_dedup_cluster_incremental")(spark, d)
       .as[(Long, Long)].collect().toMap
     // Branches share base-plan lineage, which trips Union constraint

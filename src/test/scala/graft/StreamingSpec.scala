@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Compaction
@@ -580,6 +580,53 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // and the plain fresh docs behave exactly like the batch text gate —
     // the semantic arm rejected nothing below the cosine threshold
     assert(kept.filter(_ < 5000000L) == expected1)
+  }
+
+  /** A 64-dim float embedding: ±0.01 by `positive`, plus `bump` on the
+    * first element.
+    */
+  private def embOf(positive: Int => Boolean, bump: Column = lit(0f)): Column =
+    array((0 until 64).map(i =>
+      (lit(if (positive(i)) 0.01f else -0.01f) + (if (i == 0) bump else lit(0f))).cast("float")): _*)
+
+  /** Run the ingest gate, with a semantic arm over `corpusEmb`, on `batch`
+    * as one micro-batch against the text corpus `corpus`; the doc_ids it
+    * accepts.
+    */
+  private def ingestOnce(tag: String, corpus: DataFrame, corpusEmb: DataFrame, batch: DataFrame): Set[Long] = {
+    val (in, out) = (tmp(s"$tag-in"), tmp(s"$tag-out"))
+    batch.coalesce(1).write.mode("append").parquet(in)
+    val corpusSigs = graft.operators.TextQueries.bandKeysOf(corpus)
+      .withColumnRenamed("doc_id", "corpus_doc").localCheckpoint()
+    val emb = StreamingDaemon.embedBandKeys(corpusEmb).select(col("ekey"), col("embedding")).localCheckpoint()
+    StreamingDaemon.ingestDedupLoop(spark, in, corpusSigs, out, tmp(s"$tag-ckp"), tmp(s"$tag-sig"),
+      corpusEmbSigs = Some(emb)).awaitTermination()
+    spark.read.parquet(s"$out/batch=*").select("doc_id")
+      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
+  }
+
+  test("ingestDedupLoop accepts exactly one of a batch of BucketCap + 1 mirror docs") {
+    // Distinct novel texts, one embedding: the batch's own band buckets
+    // each hold BucketCap + 1 docs, and the corpus index shares none of them.
+    val corpus = syntheticDocs(1000L until 1040L)
+    val flood = syntheticDocs(0L to graft.operators.TextQueries.BucketCap.toLong)
+      .withColumn("embedding", embOf(_ % 3 == 0))
+    val kept = ingestOnce("flood", corpus, corpus.withColumn("embedding", embOf(_ % 2 == 0)), flood)
+    assert(kept == Set(0L), s"${kept.size} mirrors accepted")
+  }
+
+  test("ingestDedupLoop rejects a doc equal to the representative of a stored band bucket of BucketCap + 1 entries") {
+    // BucketCap + 1 corpus embeddings of one sign pattern fill every band
+    // bucket of that pattern; they differ in the first element only, and
+    // doc 1000's is the smallest, so its embedding represents the buckets.
+    val corpus = syntheticDocs(1000L to 1000L + graft.operators.TextQueries.BucketCap)
+    val stored = corpus.withColumn("embedding",
+      embOf(_ % 3 == 0, ((col("doc_id") - 1000L) * 1e-4).cast("float")))
+    val rep = embOf(_ % 3 == 0)
+    // doc 0 carries the representative; doc 1 a pattern the store lacks
+    val batch = syntheticDocs(Seq(0L, 1L))
+      .withColumn("embedding", when(col("doc_id") === 0L, rep).otherwise(embOf(_ % 2 == 0)))
+    assert(ingestOnce("hotstore", corpus, stored, batch) == Set(1L))
   }
 
   test("statefulLww folds new versions into O(keys) state across micro-batches") {
