@@ -25,10 +25,11 @@ object TextQueries extends QueryPack {
   /** The LSH over-cap bucket boundary (standard practice: a bucket shared
     * by more members is boilerplate; enumerating its pairs is the n²
     * blowup banding exists to avoid). Read in exactly three places: the
-    * all-pairs/star switchover of [[cappedPairs]], the probe side of
-    * [[cappedStore]], and the cap audit that prices the stars. Every LSH
-    * candidate path goes through one of the two helpers, so an over-cap
-    * bucket is starred to its minimum member, never dropped. The DuckDB
+    * all-pairs/star switchover of [[cappedPairsMarked]] (the expansion
+    * half of [[cappedPairs]]), the hot-bucket test of [[cappedStore]], and
+    * the cap audit that prices the stars. Every LSH candidate path goes
+    * through these helpers, so an over-cap bucket is starred to its
+    * minimum member, never dropped. The DuckDB
     * oracles and the plan-pinning specs mirror the literals 100/101; the
     * correctness gate fails loudly if the sides ever drift, so changing
     * this constant forces the oracle edit rather than silently diverging.
@@ -227,7 +228,7 @@ object TextQueries extends QueryPack {
     */
   /** Mark every bucket row with its bucket's representative (`mn` =
     * min(mnExpr)) and size (`sz`) — the shared pre-pass of
-    * [[cappedPairs]], [[cappedStore]] and [[starEdgesOf]]: min/count over
+    * [[cappedPairs]] and [[starEdgesOf]]: min/count over
     * Window.partitionBy(part) — ONE exchange on the bucket key; a
     * degenerate bucket is one task's spillable sort. Unused marks are
     * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
@@ -253,7 +254,19 @@ object TextQueries extends QueryPack {
     * bucket row (bucket key `carried ++ bucket`) is first marked with its
     * bucket's minimum `member` and size via ONE window pass
     * ([[markBuckets]]: a spillable sort, never a collect buffer); the
-    * marked table is pinned because both phases read it. Then
+    * marked table is pinned because both phases of [[cappedPairsMarked]]
+    * read it.
+    */
+  private[graft] def cappedPairs(buckets: org.apache.spark.sql.DataFrame,
+      bucket: Seq[String], member: Column, carried: Seq[String])(
+      pair: (Column, Column) => Column): org.apache.spark.sql.DataFrame =
+    cappedPairsMarked(markBuckets(buckets, carried ++ bucket, member).pin(), bucket, member, carried)(pair)
+
+  /** [[cappedPairs]] over buckets the caller has already marked
+    * ([[markBuckets]] on `carried ++ bucket` and `member`) and whose
+    * materialization it owns — a streaming micro-batch persists the marked
+    * frame and releases it when the batch ends, where a pin would outlive
+    * the batch. Then
     *   · buckets of 2..[[BucketCap]] members take the all-pairs collect
     *     path — the sorted member list is bounded at BucketCap entries by
     *     the sz filter BEFORE the aggregation, not after it — and emit
@@ -270,10 +283,9 @@ object TextQueries extends QueryPack {
     * are the output columns. `carried` columns are part of the bucket key,
     * so buckets of different carried values never mix.
     */
-  private[graft] def cappedPairs(buckets: org.apache.spark.sql.DataFrame,
+  private[graft] def cappedPairsMarked(marked: org.apache.spark.sql.DataFrame,
       bucket: Seq[String], member: Column, carried: Seq[String])(
       pair: (Column, Column) => Column): org.apache.spark.sql.DataFrame = {
-    val marked = markBuckets(buckets, carried ++ bucket, member).pin()
     // each side unnests its own pair struct: a union of the two structs
     // would widen the small side's non-null ids to the star's nullable `mn`
     def pairs(df: org.apache.spark.sql.DataFrame, p: Column) =
@@ -289,17 +301,24 @@ object TextQueries extends QueryPack {
   }
 
   /** The stored side of a corpus↔new probe under the [[cappedPairs]]
-    * policy: every row of a bucket of at most [[BucketCap]] members, and
-    * only the rows whose `member` is the bucket minimum in a larger one. A
-    * probe that lands in a hot store bucket meets its representative, not
-    * the whole bucket, so the probe join stays linear in the probe and the
-    * probe stays a candidate of the representative instead of vanishing.
+    * policy. `store` holds exactly the `bucket` columns and `member`: every
+    * row of a bucket of at most [[BucketCap]] rows is kept, and a larger
+    * bucket becomes ONE row, its minimum `member`, so a probe that lands
+    * in a hot bucket meets one stored row, and stays a candidate of that
+    * representative instead of vanishing. Deciding which buckets are hot
+    * takes a thin, partially aggregated count per bucket. The hot set is
+    * broadcast (each hot key stands for more than BucketCap store rows),
+    * so the store itself crosses no exchange, and only the rows of hot
+    * buckets reach the min.
     */
   private[graft] def cappedStore(store: org.apache.spark.sql.DataFrame,
-      bucket: Seq[String], member: Column): org.apache.spark.sql.DataFrame =
-    markBuckets(store, bucket, member)
-      .filter(col("sz") <= BucketCap || member === col("mn"))
-      .drop("mn", "sz")
+      bucket: Seq[String], member: String): org.apache.spark.sql.DataFrame = {
+    val hot = store.groupBy(bucket.map(col): _*).count()
+      .filter(col("count") > BucketCap).drop("count")
+    store.join(broadcast(hot), bucket, "left_anti")
+      .unionByName(store.join(broadcast(hot), bucket, "left_semi")
+        .groupBy(bucket.map(col): _*).agg(min(col(member)).as(member)))
+  }
 
   /** An unordered id pair (doc_a < doc_b) — the pair shape of the minhash
     * candidate lists.
@@ -669,8 +688,9 @@ object TextQueries extends QueryPack {
     */
   private[graft] def incNewEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
     val fresh = Tables.documents(s, d).filter(col("doc_id") % 10 === 7)
-    // the store is bucketed by skey, so the window adds no exchange
-    val store = cappedStore(s.table(corpusSigTable(s, d)), Seq("skey"), col("corpus_doc"))
+    // the store is bucketed by skey, so its hot-bucket count adds no exchange
+    val store = cappedStore(s.table(corpusSigTable(s, d)).select(col("skey"), col("corpus_doc")),
+      Seq("skey"), "corpus_doc")
     // Round 21: the corpus↔new leg (skey form) and the new↔new leg (pair
     // expansion) both start from the snapshot's band buckets — formerly
     // each leg re-shingled and re-hashed the snapshot from parquet. One

@@ -283,10 +283,12 @@ object StreamingDaemon {
     * mirror-page case exact hashing misses.) Both semantic legs keep the
     * cap policy of every LSH candidate path: a batch band value above
     * [[graft.operators.TextQueries.BucketCap]] stars to its minimum
-    * doc_id ([[graft.operators.TextQueries.cappedPairs]]), and a stored
+    * doc_id ([[graft.operators.TextQueries.cappedPairsMarked]]), and a stored
     * one is probed at its minimum embedding only
     * ([[graft.operators.TextQueries.cappedStore]]) — no hot bucket is
-    * dropped, and neither leg goes quadratic on it.
+    * dropped, and neither leg goes quadratic on it. Everything the batch
+    * materializes is released when it ends, so nothing accumulates over
+    * a long-running stream.
     */
   def ingestDedupLoop(
       spark: SparkSession,
@@ -313,6 +315,10 @@ object StreamingDaemon {
           .persist()
         val sigs = graft.operators.TextQueries.bandKeysOf(exact).persist()
         val bsigs = corpusEmbSigs.map(_ => embedBandKeys(exact).persist())
+        // the intra-batch semantic arm's marked band buckets, held for this
+        // batch only
+        val bmarked = bsigs.map(bs => graft.operators.TextQueries.markBuckets(
+          bs.select(col("ekey"), col("doc_id")), Seq("ekey"), col("doc_id")).persist())
         try {
           val priorSkeys = readSigStore(spark, s"$sigStoreDir/skeys", sigs.select(col("skey")), batchId)
           val priorHashes = readSigStore(spark, s"$sigStoreDir/hashes",
@@ -323,20 +329,19 @@ object StreamingDaemon {
           val exactDup = exact
             .join(priorHashes, Seq("content_hash"), "left_semi")
             .select(col("doc_id"))
-          val semDup = (corpusEmbSigs, bsigs) match {
-            case (Some(corpusEmb), Some(bs)) =>
-              import graft.operators.TextQueries.{cappedPairs, cappedStore}
+          val semDup = (corpusEmbSigs, bsigs, bmarked) match {
+            case (Some(corpusEmb), Some(bs), Some(marked)) =>
+              import graft.operators.TextQueries.{cappedPairsMarked, cappedStore}
               // The ekeys store has no id column: a hot stored band value
               // is represented by its minimum embedding.
               val stored = cappedStore(corpusEmb.select(col("ekey"), col("embedding"))
                   .union(readSigStore(spark, s"$sigStoreDir/ekeys",
                     bs.select(col("ekey"), col("embedding")), batchId)),
-                  Seq("ekey"), col("embedding"))
+                  Seq("ekey"), "embedding")
                 .withColumnRenamed("embedding", "stored_emb")
               // Dedup (batch doc, stored embedding) candidates ACROSS bands
               // before the cosine — up to 8 band collisions per pair must
-              // pay the exact-cosine confirm once, the same groupBy+first
-              // discipline as the intra-batch arm below.
+              // pay the exact-cosine confirm once.
               val vsStored = bs.join(stored, "ekey")
                 .groupBy(col("doc_id"), col("stored_emb"))
                 .agg(first(col("embedding")).as("embedding"))
@@ -349,16 +354,18 @@ object StreamingDaemon {
               // min-keeper rule as the exact-hash dedup above. Without
               // this, a crawl batch full of mirror pages would pass the
               // gate untouched and pollute the ekeys store. A mirror-flood
-              // batch saturates all 8 bands: cappedPairs stars each
+              // batch saturates all 8 bands: cappedPairsMarked stars each
               // over-cap band to its minimum doc_id, so the flood neither
-              // goes quadratic on itself nor passes, and each pair pays
-              // the exact cosine ONCE (deduped across bands first).
-              val vsBatch = cappedPairs(bs, Seq("ekey"),
-                  struct(col("doc_id"), col("embedding")), Nil)((a, b) =>
-                  struct(a.getField("doc_id").as("doc_a"), a.getField("embedding").as("ea"),
-                    b.getField("doc_id").as("doc_b"), b.getField("embedding").as("eb")))
-                .groupBy(col("doc_a"), col("doc_b"))
-                .agg(first(col("ea")).as("ea"), first(col("eb")).as("eb"))
+              // goes quadratic on itself nor passes. Pairs are decided on
+              // thin (ekey, doc_id) rows and deduped across bands; the
+              // embeddings attach once per endpoint, so each pair pays the
+              // exact cosine ONCE.
+              val emb = exact.select(col("doc_id"), col("embedding"))
+              val vsBatch = cappedPairsMarked(marked, Seq("ekey"), col("doc_id"), Nil)((a, b) =>
+                  struct(a.as("doc_a"), b.as("doc_b")))
+                .distinct()
+                .join(emb.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("embedding", "ea"), "doc_a")
+                .join(emb.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("embedding", "eb"), "doc_b")
                 .filter(graft.functions.VectorFns.cosine(
                   col("ea"), col("eb")) >= semanticCos)
                 .select(col("doc_b").as("doc_id"))
@@ -382,6 +389,7 @@ object StreamingDaemon {
             }
           } finally accepted.unpersist() // a failed write must not pin the cache across retries
         } finally {
+          bmarked.foreach(_.unpersist())
           bsigs.foreach(_.unpersist())
           sigs.unpersist()
           exact.unpersist()

@@ -86,9 +86,10 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     // One spelling of the cap policy: a second in-bucket expansion (a
     // slice from i + 2 inside transform) or a second read of BucketCap,
     // whatever the gate's column is called, would let the copies drift
-    // apart. BucketCap is declared once and read by cappedPairs, by
-    // cappedStore (the stored side of the corpus↔new probes) and by the
-    // cap audit, which prices cappedPairs' stars. Comments do not count.
+    // apart. BucketCap is declared once and read by cappedPairsMarked (the
+    // expansion cappedPairs runs on its marked buckets), by cappedStore
+    // (the stored side of the corpus↔new probes) and by the cap audit,
+    // which prices cappedPairs' stars. Comments do not count.
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
     val expansion = """slice\([^\n]*\bi\s*\+\s*lit\(2\)""".r
@@ -111,7 +112,7 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
       val raw = Files.readString(f)
       val src = code(raw)
       val sites = Seq(
-        "cappedPairs" -> span(src, "def cappedPairs(", "\n  }\n"),
+        "cappedPairs" -> span(src, "def cappedPairsMarked(", "\n  }\n"),
         "cappedStore" -> span(src, "def cappedStore(", "\n\n"),
         "audit" -> span(src, "\"q_dedup_cap_audit\" ->", "\n    }),\n"),
         "declaration" -> span(src, "val BucketCap = ", "\n"))

@@ -591,7 +591,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   /** Run the ingest gate, with a semantic arm over `corpusEmb`, on `batch`
     * as one micro-batch against the text corpus `corpus`; the doc_ids it
-    * accepts.
+    * accepts. The gate must leave no RDD persisted behind it: whatever a
+    * micro-batch materializes is released when the batch ends.
     */
   private def ingestOnce(tag: String, corpus: DataFrame, corpusEmb: DataFrame, batch: DataFrame): Set[Long] = {
     val (in, out) = (tmp(s"$tag-in"), tmp(s"$tag-out"))
@@ -599,8 +600,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val corpusSigs = graft.operators.TextQueries.bandKeysOf(corpus)
       .withColumnRenamed("doc_id", "corpus_doc").localCheckpoint()
     val emb = StreamingDaemon.embedBandKeys(corpusEmb).select(col("ekey"), col("embedding")).localCheckpoint()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     StreamingDaemon.ingestDedupLoop(spark, in, corpusSigs, out, tmp(s"$tag-ckp"), tmp(s"$tag-sig"),
       corpusEmbSigs = Some(emb)).awaitTermination()
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !persisted(id) }
+    assert(left.isEmpty, s"the gate left persisted RDDs behind: ${left.values.mkString(", ")}")
     spark.read.parquet(s"$out/batch=*").select("doc_id")
       .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
   }
@@ -627,6 +631,20 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val batch = syntheticDocs(Seq(0L, 1L))
       .withColumn("embedding", when(col("doc_id") === 0L, rep).otherwise(embOf(_ % 2 == 0)))
     assert(ingestOnce("hotstore", corpus, stored, batch) == Set(1L))
+  }
+
+  test("the semantic probe meets one stored row per hot ekey, even when its embeddings are identical") {
+    // BucketCap + 1 corpus docs share one embedding (a mirror family) and
+    // so fill every band bucket of its pattern; three docs of another
+    // pattern fill small buckets that stay whole.
+    val hot = syntheticDocs(1000L to 1000L + graft.operators.TextQueries.BucketCap)
+      .withColumn("embedding", embOf(_ % 3 == 0))
+    val few = syntheticDocs(2000L until 2003L).withColumn("embedding", embOf(_ % 2 == 0))
+    val store = StreamingDaemon.embedBandKeys(hot.unionByName(few)).select(col("ekey"), col("embedding"))
+    val perKey = graft.operators.TextQueries.cappedStore(store, Seq("ekey"), "embedding")
+      .groupBy(col("ekey")).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perKey.size == 16, perKey)
+    assert(perKey.values.toSeq.sorted == Seq.fill(8)(1L) ++ Seq.fill(8)(3L), perKey)
   }
 
   test("statefulLww folds new versions into O(keys) state across micro-batches") {
