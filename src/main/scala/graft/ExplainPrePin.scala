@@ -3,8 +3,8 @@ package graft
 /** Dev tool (VERDICT r21 item 9): print the formatted physical plans of the
   * checkpoint-PRODUCING builder pipelines that `pin()` hides from the final
   * query plans [[Explain]] dumps — so exchange-count claims about builders
-  * (gram-table grain, one-tokenization prefix build, consolidated LSH-sweep
-  * bucket marking) are verifiable end-to-end from committed plan files.
+  * (gram-table grain, one-tokenization prefix build) are verifiable
+  * end-to-end from committed plan files.
   *
   * Usage: runMain graft.ExplainPrePin [sfDir]
   */
@@ -21,14 +21,7 @@ object ExplainPrePin {
       // the per-doc prefix table CONSUMING the pinned arrays (0 parquet
       // scans expected: both the df aggregate and the join-back read the
       // checkpoint)
-      "prefix_docs_build" -> operators.TextQueries.prefixDocsOf(spark, sfDir),
-      // the consolidated one-window bucket marking of q_dedup_lsh_sweep:
-      // what TextQueries.cappedPairs pins for the sweep's (r, band, bkey)
-      // buckets
-      "lsh_sweep_marked_build" -> operators.TextQueries.markBuckets(
-        operators.TextQueries.lshSweepBandsBuild(
-          operators.TextQueries.lshSweepSigsBuild(spark, sfDir)),
-        Seq("r", "band", "bkey"), org.apache.spark.sql.functions.col("doc_id")))
+      "prefix_docs_build" -> operators.TextQueries.prefixDocsOf(spark, sfDir))
     targets.foreach { case (name, df) =>
       println(s"\n========== $name ==========")
       df.explain("formatted")

@@ -25,11 +25,10 @@ object TextQueries extends QueryPack {
   /** The LSH over-cap bucket boundary (standard practice: a bucket shared
     * by more members is boilerplate; enumerating its pairs is the n²
     * blowup banding exists to avoid). Read in exactly three places: the
-    * all-pairs/star switchover of [[cappedPairsMarked]] (the expansion
-    * half of [[cappedPairs]]), the hot-bucket test of [[cappedStore]], and
-    * the cap audit that prices the stars. Every LSH candidate path goes
-    * through these helpers, so an over-cap bucket is starred to its
-    * minimum member, never dropped. The DuckDB
+    * all-pairs/star switchover of [[cappedPairs]], the hot-bucket test of
+    * [[cappedStore]], and the cap audit that prices the stars. Every LSH
+    * candidate path goes through these helpers, so an over-cap bucket is
+    * starred to its minimum member, never dropped. The DuckDB
     * oracles and the plan-pinning specs mirror the literals 100/101; the
     * correctness gate fails loudly if the sides ever drift, so changing
     * this constant forces the oracle edit rather than silently diverging.
@@ -192,10 +191,11 @@ object TextQueries extends QueryPack {
 
   /** Candidate pairs from the band buckets, WITHOUT a self-join: collect the
     * sorted doc list per (band, bkey) and expand in-bucket pairs with a
-    * nested HOF. A self-join on (band, bkey) would force Spark to build the
-    * whole minhash pipeline twice (no common-subplan reuse across a join's
-    * two sides — measured as two full Exchange/Window chains in the round-2
-    * plan audit); the collect form runs the pipeline once and one groupBy.
+    * nested HOF. Spark reuses an exchange whose subtree is identical, and
+    * never shares work below exchanges that differ; the two sides of a
+    * self-join on (band, bkey) differed, so it built the whole minhash
+    * pipeline twice (two full Exchange/Window chains in the round-2 plan
+    * audit). The collect form runs the pipeline once and one groupBy.
     *
     * Oversized-bucket guard (standard LSH practice): a bucket shared by
     * >100 docs is boilerplate, and expanding it would reintroduce the n²
@@ -208,6 +208,21 @@ object TextQueries extends QueryPack {
     */
   private def bandPairs(s: org.apache.spark.sql.SparkSession, d: String) =
     bandPairsOf(bandBuckets(s, d))
+
+  /** Mark every bucket row with its bucket's representative (`mn` =
+    * min(mnExpr)) and size (`sz`) — the shared pre-pass of
+    * [[cappedPairs]] and [[starEdgesOf]]: min/count over
+    * Window.partitionBy(part) — ONE exchange on the bucket key; a
+    * degenerate bucket is one task's spillable sort. Unused marks are
+    * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
+    * the uniform helper.
+    */
+  private def markBuckets(df: org.apache.spark.sql.DataFrame,
+      part: Seq[String], mnExpr: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(part.map(col): _*)
+    df.withColumn("mn", min(mnExpr).over(w))
+      .withColumn("sz", count(lit(1)).over(w))
+  }
 
   /** Star edges from the band buckets: per (band, bkey) bucket of ANY size
     * ≥ 2 emit (min_doc → member) instead of all C(sz,2) pairs. Within a
@@ -226,21 +241,6 @@ object TextQueries extends QueryPack {
     * membership list (the round-9 pre-count hygiene; q_dedup_cap_audit
     * prices what the star still leaves non-enumerated).
     */
-  /** Mark every bucket row with its bucket's representative (`mn` =
-    * min(mnExpr)) and size (`sz`) — the shared pre-pass of
-    * [[cappedPairs]] and [[starEdgesOf]]: min/count over
-    * Window.partitionBy(part) — ONE exchange on the bucket key; a
-    * degenerate bucket is one task's spillable sort. Unused marks are
-    * column-pruned, so min-only consumers (starEdgesOf) pay nothing for
-    * the uniform helper.
-    */
-  private[graft] def markBuckets(df: org.apache.spark.sql.DataFrame,
-      part: Seq[String], mnExpr: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy(part.map(col): _*)
-    df.withColumn("mn", min(mnExpr).over(w))
-      .withColumn("sz", count(lit(1)).over(w))
-  }
-
   private def starEdgesOf(buckets: org.apache.spark.sql.DataFrame) =
     markBuckets(buckets, Seq("band", "bkey"), col("doc_id"))
       .filter(col("doc_id") =!= col("mn")) // singleton buckets emit nothing
@@ -250,23 +250,10 @@ object TextQueries extends QueryPack {
     * the cap policy for every pair-list consumer ([[bandPairsOf]],
     * [[bandedHammingPairs]], q_dedup_prefix, q_dedup_lsh_sweep, the
     * embedding candidates and the ingest gate's intra-batch semantic arm;
-    * their corpus↔new probes read [[cappedStore]]). Each
-    * bucket row (bucket key `carried ++ bucket`) is first marked with its
-    * bucket's minimum `member` and size via ONE window pass
-    * ([[markBuckets]]: a spillable sort, never a collect buffer); the
-    * marked table is pinned because both phases of [[cappedPairsMarked]]
-    * read it.
-    */
-  private[graft] def cappedPairs(buckets: org.apache.spark.sql.DataFrame,
-      bucket: Seq[String], member: Column, carried: Seq[String])(
-      pair: (Column, Column) => Column): org.apache.spark.sql.DataFrame =
-    cappedPairsMarked(markBuckets(buckets, carried ++ bucket, member).pin(), bucket, member, carried)(pair)
-
-  /** [[cappedPairs]] over buckets the caller has already marked
-    * ([[markBuckets]] on `carried ++ bucket` and `member`) and whose
-    * materialization it owns — a streaming micro-batch persists the marked
-    * frame and releases it when the batch ends, where a pin would outlive
-    * the batch. Then
+    * their corpus↔new probes read [[cappedStore]]). Each bucket row
+    * (bucket key `carried ++ bucket`) is first marked with its bucket's
+    * minimum `member` and size via ONE window pass ([[markBuckets]]: a
+    * spillable sort, never a collect buffer). Then
     *   · buckets of 2..[[BucketCap]] members take the all-pairs collect
     *     path — the sorted member list is bounded at BucketCap entries by
     *     the sz filter BEFORE the aggregation, not after it — and emit
@@ -279,19 +266,31 @@ object TextQueries extends QueryPack {
     *     Hamming), so a star pair is a genuine candidate; only the clique
     *     ENUMERATION stays capped, and q_dedup_cap_audit prices exactly
     *     that difference.
+    * Building the frame runs no job. Both phases read the same marked
+    * subtree, and Spark reuses an exchange whose subtree is identical: the
+    * bucket-key exchange under the window runs once, the second phase
+    * reads it as a ReusedExchange, and the collect aggregate needs no
+    * exchange of its own (the window already hash-partitions by the
+    * bucket key).
     * `pair` returns a struct; its fields, after the `carried` columns,
     * are the output columns. `carried` columns are part of the bucket key,
     * so buckets of different carried values never mix.
     */
-  private[graft] def cappedPairsMarked(marked: org.apache.spark.sql.DataFrame,
+  private[graft] def cappedPairs(buckets: org.apache.spark.sql.DataFrame,
       bucket: Seq[String], member: Column, carried: Seq[String])(
       pair: (Column, Column) => Column): org.apache.spark.sql.DataFrame = {
     // each side unnests its own pair struct: a union of the two structs
     // would widen the small side's non-null ids to the star's nullable `mn`
     def pairs(df: org.apache.spark.sql.DataFrame, p: Column) =
       df.select(carried.map(col) :+ p.as("p"): _*).select(carried.map(col) :+ col("p.*"): _*)
+    val marked = markBuckets(buckets, carried ++ bucket, member)
+    // The small phase reads `mn` too, so both phases need the same window
+    // input: a struct member's min is projected below the exchange, and
+    // were it in the star phase's input only, the two exchanges would
+    // differ and neither be reused. (`mn` is null only for a bucket with
+    // no non-null member, which collects no pairs either way.)
     val small = marked
-      .filter(col("sz").between(2, BucketCap))
+      .filter(col("sz").between(2, BucketCap) && col("mn").isNotNull)
       .groupBy((carried ++ bucket).map(col): _*)
       .agg(sort_array(collect_list(member)).as("ds"))
     val star = marked.filter(col("sz") > BucketCap && member =!= col("mn"))
@@ -717,17 +716,12 @@ object TextQueries extends QueryPack {
       .distinct()
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
 
-  /** Pre-pin builders of q_dedup_lsh_sweep — package-visible for
-    * [[graft.ExplainPrePin]] plan dumps (the in-query pins hide these
-    * pipelines from the final plan): the wide signature table, and the
-    * round-22 CONSOLIDATED band rows — the three banding configs' band rows
-    * union into one (r, band, bkey)-keyed table so [[cappedPairs]] marks
-    * them with ONE window exchange + ONE checkpoint instead of one per
-    * config.
+  /** q_dedup_lsh_sweep's band rows, CONSOLIDATED (round 22): the three
+    * banding configs' band rows over the wide signature table `sigs` union
+    * into one (r, band, bkey)-keyed table, so [[cappedPairs]] marks them
+    * with ONE window exchange instead of one per config.
     */
-  private[graft] def lshSweepSigsBuild(s: org.apache.spark.sql.SparkSession, d: String) =
-    minhashSigsOf(docShingles(s, d))
-  private[graft] def lshSweepBandsBuild(sigs: org.apache.spark.sql.DataFrame) = {
+  private def lshSweepBandsBuild(sigs: org.apache.spark.sql.DataFrame) = {
     def bandsFor(r: Int) = sigs.select(lit(r.toLong).as("r"), col("doc_id"),
       posexplode(array((0 until 8 / r).map(b =>
         concat_ws(",", (0 until r).map(j =>
@@ -1085,24 +1079,25 @@ object TextQueries extends QueryPack {
     // 1−(1−s^r)^b, so smaller r must produce more candidates at lower
     // precision — this query MEASURES that trade on the corpus, which is
     // how you pick (b, r) before a 100 TB run instead of guessing.
-    // Cost shape: signatures compute ONCE (materialized); each config is
-    // a metadata-cheap re-banding of the 8-row-per-doc sig table; the
-    // expensive exact verify runs ONCE on the distinct union of
-    // candidates, then every config joins the shared verdict table.
+    // Cost shape: signatures compute ONCE — the three configs' branches
+    // read the signature aggregate's exchange, the second and third as a
+    // ReusedExchange; each config is a metadata-cheap re-banding of the
+    // wide sig row; the expensive exact verify runs ONCE on the distinct
+    // union of candidates, then every config joins the shared verdict table.
     // Recall vs ground truth is NOT reported — that would need the
     // all-pairs join this family exists to avoid (documented omission).
     "q_dedup_lsh_sweep" -> ((s, d) => {
-      val sigs = lshSweepSigsBuild(s, d).pin()
+      val sigs = minhashSigsOf(docShingles(s, d))
       // wide signature (round 21): each config's band keys are pure
-      // projections over the one materialized 8-column row — the former
-      // per-config groupBy(doc_id, band) re-aggregation (one exchange per
-      // config) is gone; key strings are unchanged (concat order IS i order).
+      // projections over the one 8-column row — the former per-config
+      // groupBy(doc_id, band) re-aggregation (one exchange per config) is
+      // gone; key strings are unchanged (concat order IS i order).
       // Round 22 (guide §2.4): the three configs' band rows UNION into one
       // table keyed (r, band, bkey), so bucket marking is ONE window
-      // exchange + ONE checkpoint instead of one per config (the per-config
-      // bandPairsOf paid 3 window exchanges + 3 pin jobs); [[cappedPairs]]
-      // carries r, so its buckets are (r, band, bkey) and configs never mix
-      // — pairs per config identical.
+      // exchange instead of one per config (the per-config bandPairsOf
+      // paid 3 window exchanges); [[cappedPairs]] carries r, so its
+      // buckets are (r, band, bkey) and configs never mix — pairs per
+      // config identical.
       // pinned (round 21): both the exact-verify pass and the final
       // per-config rollup read the candidate union; unpinned, all three
       // re-banding/expansion chains ran twice (tiny table: one row per

@@ -283,7 +283,7 @@ object StreamingDaemon {
     * mirror-page case exact hashing misses.) Both semantic legs keep the
     * cap policy of every LSH candidate path: a batch band value above
     * [[graft.operators.TextQueries.BucketCap]] stars to its minimum
-    * doc_id ([[graft.operators.TextQueries.cappedPairsMarked]]), and a stored
+    * doc_id ([[graft.operators.TextQueries.cappedPairs]]), and a stored
     * one is probed at its minimum embedding only
     * ([[graft.operators.TextQueries.cappedStore]]) — no hot bucket is
     * dropped, and neither leg goes quadratic on it. Everything the batch
@@ -315,10 +315,6 @@ object StreamingDaemon {
           .persist()
         val sigs = graft.operators.TextQueries.bandKeysOf(exact).persist()
         val bsigs = corpusEmbSigs.map(_ => embedBandKeys(exact).persist())
-        // the intra-batch semantic arm's marked band buckets, held for this
-        // batch only
-        val bmarked = bsigs.map(bs => graft.operators.TextQueries.markBuckets(
-          bs.select(col("ekey"), col("doc_id")), Seq("ekey"), col("doc_id")).persist())
         try {
           val priorSkeys = readSigStore(spark, s"$sigStoreDir/skeys", sigs.select(col("skey")), batchId)
           val priorHashes = readSigStore(spark, s"$sigStoreDir/hashes",
@@ -329,9 +325,9 @@ object StreamingDaemon {
           val exactDup = exact
             .join(priorHashes, Seq("content_hash"), "left_semi")
             .select(col("doc_id"))
-          val semDup = (corpusEmbSigs, bsigs, bmarked) match {
-            case (Some(corpusEmb), Some(bs), Some(marked)) =>
-              import graft.operators.TextQueries.{cappedPairsMarked, cappedStore}
+          val semDup = (corpusEmbSigs, bsigs) match {
+            case (Some(corpusEmb), Some(bs)) =>
+              import graft.operators.TextQueries.{cappedPairs, cappedStore}
               // The ekeys store has no id column: a hot stored band value
               // is represented by its minimum embedding.
               val stored = cappedStore(corpusEmb.select(col("ekey"), col("embedding"))
@@ -354,15 +350,15 @@ object StreamingDaemon {
               // min-keeper rule as the exact-hash dedup above. Without
               // this, a crawl batch full of mirror pages would pass the
               // gate untouched and pollute the ekeys store. A mirror-flood
-              // batch saturates all 8 bands: cappedPairsMarked stars each
+              // batch saturates all 8 bands: cappedPairs stars each
               // over-cap band to its minimum doc_id, so the flood neither
               // goes quadratic on itself nor passes. Pairs are decided on
               // thin (ekey, doc_id) rows and deduped across bands; the
               // embeddings attach once per endpoint, so each pair pays the
               // exact cosine ONCE.
               val emb = exact.select(col("doc_id"), col("embedding"))
-              val vsBatch = cappedPairsMarked(marked, Seq("ekey"), col("doc_id"), Nil)((a, b) =>
-                  struct(a.as("doc_a"), b.as("doc_b")))
+              val vsBatch = cappedPairs(bs.select(col("ekey"), col("doc_id")), Seq("ekey"),
+                  col("doc_id"), Nil)((a, b) => struct(a.as("doc_a"), b.as("doc_b")))
                 .distinct()
                 .join(emb.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("embedding", "ea"), "doc_a")
                 .join(emb.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("embedding", "eb"), "doc_b")
@@ -389,7 +385,6 @@ object StreamingDaemon {
             }
           } finally accepted.unpersist() // a failed write must not pin the cache across retries
         } finally {
-          bmarked.foreach(_.unpersist())
           bsigs.foreach(_.unpersist())
           sigs.unpersist()
           exact.unpersist()

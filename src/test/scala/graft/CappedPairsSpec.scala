@@ -64,6 +64,16 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     assert(got == rows.collect { case (_, id, n) if id != rep => (rep, nOf(rep), id, n) }.toSet)
   }
 
+  test("building cappedPairs runs no Spark job: both phases wait for the query's own action") {
+    import spark.implicits._
+    // one over-cap bucket (BucketCap star pairs) and one pair bucket
+    val rows = (0L to BucketCap.toLong).map(("hot", _)) ++ Seq(("two", 7L), ("two", 8L))
+    val (out, jobs) = jobsRunBy(TextQueries.cappedPairs(rows.toDF("bkey", "doc_id"), Seq("bkey"),
+        col("doc_id"), Nil)(idPair))
+    assert(jobs == 0, s"building cappedPairs ran $jobs job(s)")
+    assert(out.count() == BucketCap + 1)
+  }
+
   test("an embedding band bucket of BucketCap + 1 near-identical vectors stars from its minimum vec_id") {
     import spark.implicits._
     val dir = tempDir("embedcap").toString
@@ -86,14 +96,16 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     // One spelling of the cap policy: a second in-bucket expansion (a
     // slice from i + 2 inside transform) or a second read of BucketCap,
     // whatever the gate's column is called, would let the copies drift
-    // apart. BucketCap is declared once and read by cappedPairsMarked (the
-    // expansion cappedPairs runs on its marked buckets), by cappedStore
-    // (the stored side of the corpus↔new probes) and by the cap audit,
-    // which prices cappedPairs' stars. Comments do not count.
+    // apart. BucketCap is declared once and read by cappedPairs, by
+    // cappedStore (the stored side of the corpus↔new probes) and by the cap
+    // audit, which prices cappedPairs' stars. cappedPairs materializes
+    // nothing: a pin or persist in it would run a job while its caller is
+    // still building a query. Comments do not count.
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${root.toAbsolutePath}")
     val expansion = """slice\([^\n]*\bi\s*\+\s*lit\(2\)""".r
     val cap = """\bBucketCap\b""".r
+    val materialize = """\.pin\(\)|\.persist\(""".r
     // comments blanked to spaces, so offsets and line numbers still hold
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
     def code(src: String) = comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
@@ -111,12 +123,17 @@ class CappedPairsSpec extends AnyFunSuite with SparkSpec {
     val found = files.flatMap { f =>
       val raw = Files.readString(f)
       val src = code(raw)
+      val capped = span(src, "def cappedPairs(", "\n  }\n")
       val sites = Seq(
-        "cappedPairs" -> span(src, "def cappedPairsMarked(", "\n  }\n"),
+        "cappedPairs" -> capped,
         "cappedStore" -> span(src, "def cappedStore(", "\n\n"),
         "audit" -> span(src, "\"q_dedup_cap_audit\" ->", "\n    }),\n"),
         "declaration" -> span(src, "val BucketCap = ", "\n"))
-      Seq("expansion" -> expansion, "cap" -> cap).flatMap { case (kind, re) =>
+      val pinned = for {
+        (a, b) <- capped.toSeq
+        m <- materialize.findAllMatchIn(src.substring(a, b))
+      } yield "materialize" -> s"$f: cappedPairs calls ${m.matched}"
+      pinned ++ Seq("expansion" -> expansion, "cap" -> cap).flatMap { case (kind, re) =>
         re.findAllMatchIn(src).map(_.start).map { at =>
           val line = src.substring(0, at).count(_ == '\n')
           val site = sites.collectFirst { case (name, Some((a, b))) if a <= at && at < b => name }

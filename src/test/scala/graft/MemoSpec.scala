@@ -195,7 +195,8 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
       run("one")
       val afterFirst = rddDirs()
       run("two"); run("three")
-      // intermediate pins inside each build (cappedPairs' marked buckets) ride the
+      // q_dedup_components' build pins only cached families (the memoized
+      // band buckets and starEdges); any per-run pin would ride the
       // GC + ContextCleaner backstop: nudge it and poll until the count
       // settles — the DETERMINISTIC claim is the cached families' dirs
       // (evicted synchronously per rotation), which without eviction

@@ -49,4 +49,8 @@ object PlanPins {
   val MembershipCollectIds = raw"partial_collect_list\(doc_id".r
   /** Exactly one pair-key exchange (the final (doc_a, doc_b) aggregation). */
   val PairExchange = raw"Exchange hashpartitioning\(doc_a".r
+  /** The (band, bkey) bucket-key exchange; a ReusedExchange line prints it too. */
+  val BucketExchange = raw"Exchange hashpartitioning\(band#".r
+  /** A reuse of the bucket-key exchange. */
+  val ReusedBucketExchange = raw"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(band#".r
 }

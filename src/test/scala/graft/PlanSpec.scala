@@ -68,20 +68,24 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(!joinConds.exists(_.matches(".*\\bsh#\\d+ = sh#\\d+.*")), joinConds.mkString("\n"))
   }
 
-  test("q_dedup_minhash: both pair phases read the ONE checkpointed marked table — no join, no re-scan") {
+  test("q_dedup_minhash: both pair phases read ONE bucket-key exchange — no join, no re-scan") {
     val df = SparkEntry.queries("q_dedup_minhash")(spark, d)
-    val plan = df.queryExecution.executedPlan
-    // Round 11: bandPairsOf marks each bucket row with (mn, sz) in one
-    // window pass and localCheckpoints the marked table; the small-bucket
-    // collect phase and the over-cap star phase each scan THAT, so the
-    // final plan's only leaves are the checkpoint RDD — the minhash
-    // pipeline (and the documents parquet) is never rebuilt per phase.
-    val p = plan.toString
-    // (string-counted: collectLeaves does not descend into the AQE wrapper)
-    assert(PlanPins.ExistingRDD.r.findAllIn(p).size == 2, p) // one per union branch
-    assert(!p.contains(PlanPins.FileScan), p) // parquet never re-read
+    df.collect()
+    // bandPairsOf marks each bucket row with (mn, sz) in one window pass;
+    // the small-bucket collect phase and the over-cap star phase both read
+    // it. The final adaptive plan (the initial one shows no reuse yet)
+    // computes the bucket-key exchange once and the second phase reads it
+    // as a ReusedExchange — the minhash pipeline (and the documents
+    // parquet) is never rebuilt per phase.
+    val p = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+      case other => other.toString
+    }
+    assert(PlanPins.FileScan.r.findAllIn(p).size == 1, p)
+    // the ReusedExchange line prints the exchange it reuses
+    assert(PlanPins.BucketExchange.findAllIn(p).size == 2, p)
+    assert(PlanPins.ReusedBucketExchange.findAllIn(p).size == 1, p)
     assert(!p.contains(PlanPins.AnyJoin), p)
-    assert(p.contains(PlanPins.Union), p)
     // pair rows from both phases collapse in ONE final (doc_a, doc_b) agg
     assert(PlanPins.PairExchange.findAllIn(p).size == 1, p)
   }
@@ -523,10 +527,11 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   test("q_dedup_lsh_sweep: configs re-band the materialized signature table — corpus tokenizes once, no cartesian") {
     val df = SparkEntry.queries("q_dedup_lsh_sweep")(spark, d)
     val plan0 = df.queryExecution.executedPlan
-    // ZERO FileScans (round 22): all three banding configs read the
-    // checkpointed signatures, and the exact verify reads the memoized
-    // shingle-set table (docShingleSets) instead of re-tokenizing the
-    // corpus once per endpoint join
+    // ZERO FileScans (round 22): the candidate union is checkpointed (its
+    // build computes the signatures once; the second and third banding
+    // configs read them through a ReusedExchange), and the exact verify
+    // reads the memoized shingle-set table (docShingleSets) instead of
+    // re-tokenizing the corpus once per endpoint join
     assert(plan0.collectLeaves().count(_.toString.contains(PlanPins.FileScan)) == 0, plan0.toString)
     val p = plan0.toString
     assert(!p.contains(PlanPins.CartesianProduct) && !p.contains(PlanPins.BroadcastNestedLoopJoin), p)
