@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.{Compaction, Compactor, TextQueries}
 import graft.sources.SnapshotStore
-import graft.streaming.StreamingDaemon
+import graft.streaming.{MergeStore, StreamingDaemon}
 
 /** Multi-JVM kill checks for every path where graft pins, streams or
   * commits a directory. Each phase runs on `local-cluster[2,2,1024]`
@@ -35,8 +35,9 @@ import graft.streaming.StreamingDaemon
   *  7. `statefulLww` keeps its keyed state through a kill mid-batch and a
   *     query restart (the per-key version counter keeps counting);
   *  8. `Compactor.compact(outDir)` killed mid-run commits exactly the LWW
-  *     truth in key-sorted, range-disjoint files, with no duplicate rows
-  *     from the killed task attempt and no `.tmp-*` left;
+  *     truth in key-sorted, range-disjoint files named by their `_bounds`,
+  *     with no duplicate rows from the killed task attempt and no `.tmp-*`
+  *     left;
   *  9. `mergeSink` killed mid-batch leaves `LATEST` on the LWW truth in
   *     key-sorted, range-disjoint shard files, one
   *     `_applied` marker per batch and no `.tmp-*`; a restart with one
@@ -202,6 +203,16 @@ object KillProbe {
     files.size
   }
 
+  /** The `_bounds` manifest of snapshot `dir` names its data files: one
+    * bound between each two shard files, the first key of the later one.
+    */
+  private def requireBounds(s: SparkSession, dir: String): Unit = {
+    val snap = Paths.get(dir)
+    val firsts = MergeStore.dataFiles(snap).drop(1).map(f => s.read.parquet(f.getPath).select(Keys.map(col): _*).head())
+    val bounds = MergeStore.bounds(snap, s.read.parquet(dir).select(Keys.map(col): _*).schema)
+    require(bounds == firsts, s"$dir: _bounds $bounds are not the first keys $firsts of its shard files")
+  }
+
   /** One probe run over `sfDir`. Constructing it stages every phase's
     * inputs and computes their truths on a `local[4]` session, stopped
     * before any cluster session starts; [[pinPhases]] and [[streamPhases]]
@@ -360,7 +371,7 @@ object KillProbe {
       val (lwwA, lwwB, lwwCkpB) = (tmp("scp_l1_out"), tmp("scp_l2_out"), tmp("scp_l2_ckp"))
       val (compactA, compactB) = (s"${tmp("kp_compact_a")}/out", s"${tmp("kp_compact_b")}/out")
       def compact(out: String): Unit =
-        Compactor.compact(s.read.parquet(compactIn), Keys, Order, 4, Some(out), maxRecordsPerFile = 8)
+        Compactor.compact(s.read.parquet(compactIn), Keys, Order, 4, Some(out))
       val (storeA, storeB, mergeCkpB) = (tmp("kp_store_a"), tmp("kp_store_b"), tmp("kp_merge_ckp_b"))
       def merge(store: String, ckp: String): Unit =
         StreamingDaemon.mergeSink(s, mergeIn, store, ckp, Keys, Order).awaitTermination()
@@ -459,8 +470,9 @@ object KillProbe {
             require(rows(s.read.parquet(compactB)) == truthCompacted,
               "killed compaction diverges from the LWW truth: a killed task attempt left rows behind or lost some")
             val files = requireSortedDisjoint(s, compactB)
+            requireBounds(s, compactB)
             requireNoTmp(new File(compactB).getParent)
-            s"${truthCompacted.size} rows in $files key-sorted, range-disjoint files"
+            s"${truthCompacted.size} rows in $files key-sorted, range-disjoint files named by their _bounds"
           }),
         Phase("merge killed mid-batch left LATEST on the truth; its restart rewrote no snapshot", MidRun(2),
           dry = Some(() => merge(storeA, tmp("kp_merge_ckp_a"))),

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *     (QHBaseCompact.java:151)
   *   - [[classifyBySize]]: the documented-but-dead size-threshold routing
   *     (QHBaseCompact.java:97-98, README.md:23-24)
-  *   - [[Compactor.compact]]: the full file-merge job (sorted-run invariant)
+  *   - [[Compactor.compact]]: the full file-merge job, committed as a merge
+  *     store's first snapshot (sorted runs plus their `_bounds` manifest)
   *
   * Scale posture: LWW is one `max_by(struct)` aggregate around a single
   * shuffle, not a window. Its struct buffers are not mutable in place, so

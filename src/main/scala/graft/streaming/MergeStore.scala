@@ -22,27 +22,28 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.CollectionAccumulator
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
-import graft.operators.Compactor
+import graft.operators.{Compaction, Compactor}
 import graft.sources.SnapshotStore
 
-/** The layout of a [[StreamingDaemon.mergeSink]] snapshot and the merge
-  * that writes the next one.
+/** The layout of a [[StreamingDaemon.mergeSink]] snapshot, the one writer
+  * of graft's LWW sorted runs, and the merge that writes the next snapshot.
   *
   * A snapshot is P key-sorted, range-disjoint parquet files, one per shard
-  * (the sorted runs [[Compactor.compact]] writes; SURVEY §1: a store's
-  * regions), plus the manifest `_bounds`: the store's keys and, per shard,
-  * up to 2 × [[KeptPerShard]] of its keys sampled at even positions while
-  * it was written, the first of them its first key. Shard i holds the keys
-  * k with first(i) ≤ k < first(i + 1), ordered ascending with nulls first,
-  * so the P − 1 first keys of shards 1 … P − 1 are the bounds. The shard
-  * files sort by name length, then name (Spark's `part-<task>` names). Spark
-  * skips `_` names, so every reader of the directory sees only the rows.
+  * (SURVEY §1: a store's regions), plus the manifest `_bounds`: the store's
+  * keys and, per shard, up to 2 × [[KeptPerShard]] of its keys sampled at
+  * even positions while it was written, the first of them its first key.
+  * Shard i holds the keys k with first(i) ≤ k < first(i + 1), ordered
+  * ascending with nulls first, so the P − 1 first keys of shards 1 … P − 1
+  * are the bounds. The shard files sort by name length, then name (Spark's
+  * `part-<task>` names). Spark skips `_` names, so every reader of the
+  * directory sees only the rows.
   *
-  * The first batch chooses P: [[Compactor.planFileCount]] of the batch
-  * plan's size estimate and `spark.sql.files.maxPartitionBytes`, and when
-  * P > 1 bounds sampled from the batch's keys. A merge then splits every
-  * shard whose file has grown past `maxPartitionBytes` at its sampled keys,
-  * HBase's region split: the store keeps about one shard per
+  * A store's first snapshot is either [[create]]d, a major compaction that
+  * lets Spark's range partitioner sample the bounds from the deduplicated
+  * keys ([[Compactor.compact]], or a first batch that plans P > 1 shards),
+  * or [[merge]]d into an empty store as one shard. A merge then splits
+  * every shard whose file has grown past `maxPartitionBytes` at its
+  * sampled keys, HBase's region split: the store keeps about one shard per
   * `maxPartitionBytes`, so an upsert's tasks grow with the store. A merge
   * never deletes a key, so a bound stays the first key of its shard, and no
   * shard is ever empty.
@@ -51,9 +52,6 @@ private[graft] object MergeStore {
 
   /** The manifest's name inside a snapshot directory. */
   val Manifest = "_bounds"
-
-  /** Rows sampled per batch partition and shard when the first bounds are chosen. */
-  private val SamplePerShard = 20
 
   /** A shard's manifest entry keeps between this many and twice as many of
     * its keys (all of them when it has fewer): it splits into at most that
@@ -92,56 +90,82 @@ private[graft] object MergeStore {
   private final case class Piece(first: Option[InternalRow], file: Option[File], cut: Boolean)
 
   /** Merges `batch` into the snapshot `prior` (None for an empty store)
-    * and writes the next snapshot into the new directory `out`: one Spark
-    * job. The batch alone is partitioned by the shard bounds and sorted by
-    * key; each stored shard file is read as one partition (one per piece
-    * when it splits) and zipped with its batch slice, and the two sorted
-    * streams merge into one file with the newest row of every key by
-    * `orderCols` (ties go to the batch). The prior is never shuffled, and
-    * only a splitting shard's file is read more than once.
+    * and writes the next snapshot into the new directory `out`. An empty
+    * store whose batch plans P > 1 shards ([[Compactor.planFileCount]] of
+    * the batch plan's size estimate and `maxPartitionBytes`) is [[create]]d.
+    * Otherwise the merge is one Spark job: the batch alone is partitioned
+    * by the shard bounds and sorted by key; each stored shard file is read
+    * as one partition (one per piece when it splits) and zipped with its
+    * batch slice, and the two sorted streams merge into one file with the
+    * newest row of every key by `orderCols` (ties go to the batch). The
+    * prior is never shuffled, and only a splitting shard's file is read
+    * more than once.
     */
   def merge(spark: SparkSession, storeDir: String, prior: Option[Path],
       keys: Seq[String], orderCols: Seq[String], batch: DataFrame, out: String): Unit = {
-    val ordered = batch.select((keys ++ batch.columns.filterNot(keys.contains)).map(col): _*)
-    val schema = ordered.schema
-    val keyRefs = keys.indices.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable))
-    val keyOrd = ordering(schema, keys.indices)
-    val versionOrd = ordering(schema, orderCols.map(schema.fieldIndex))
     val maxBytes = GraftRows.sqlConf(spark).filesMaxPartitionBytes
-    // Catalyst rows; an operator may reuse a row object, so a held row is copied
-    val rows = ordered.queryExecution.toRdd
-    val pieces = prior match {
-      case Some(snap) => split(shards(storeDir, snap, keys), maxBytes)
-      case None =>
-        val size = ordered.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong
-        val p = Compactor.planFileCount(size, maxBytes)
-        val bounds = if (p == 1) Nil else sampleBounds(rows, keyRefs, p, keyOrd)
-        (None +: bounds.map(Some(_))).map(Piece(_, None, cut = false))
+    val p = if (prior.isDefined) 1 else Compactor.planFileCount(
+      batch.queryExecution.optimizedPlan.stats.sizeInBytes.min(Long.MaxValue).toLong, maxBytes)
+    if (p > 1) create(spark, storeDir, keys, orderCols, batch, p, out)
+    else {
+      val ordered = batch.select((keys ++ batch.columns.filterNot(keys.contains)).map(col): _*)
+      val schema = ordered.schema
+      val keyOrd = ordering(schema, keys.indices)
+      val versionOrd = ordering(schema, orderCols.map(schema.fieldIndex))
+      val pieces = prior.fold(Seq(Piece(None, None, cut = false)))(snap => split(shards(storeDir, snap, keys), maxBytes))
+      val bounds = pieces.drop(1).flatMap(_.first).toArray
+      val cut = pieces.map(_.cut).toArray
+      implicit val byKey: Ordering[InternalRow] = keyOrd
+      // Catalyst rows; an operator may reuse a row object, so a held row is copied
+      val slices = ordered.queryExecution.toRdd.map(r => (r.copy(), null))
+        .repartitionAndSortWithinPartitions(new ShardPartitioner(bounds, keyOrd)).map(_._1)
+      val merged = scan(spark, pieces.map(_.file), schema).zipPartitions(slices) { (stored, sorted) =>
+        val i = TaskContext.getPartitionId()
+        val inPiece =
+          if (!cut(i)) stored
+          else stored.dropWhile(r => i > 0 && keyOrd.lt(r, bounds(i - 1)))
+            .takeWhile(r => i == bounds.length || keyOrd.lt(r, bounds(i)))
+        mergeSorted(inPiece, sorted, keyOrd, versionOrd)
+      }
+      write(spark, storeDir, keys, merged, schema, out)
     }
-    val bounds = pieces.drop(1).flatMap(_.first).toArray
-    val cut = pieces.map(_.cut).toArray
-    val shardOf = new ShardPartitioner(bounds, keyOrd)
-    implicit val byKey: Ordering[InternalRow] = keyOrd
-    val slices = rows.map(r => (r.copy(), null)).repartitionAndSortWithinPartitions(shardOf).map(_._1)
+  }
+
+  /** Writes the first snapshot of a store into the new directory `out`:
+    * the newest row of every key of `batch` by `orderCols`
+    * ([[Compaction.lastWriteWins]]), range-partitioned into at most `p`
+    * shards at bounds Spark samples from those deduplicated keys, each
+    * sorted by key. This is a major compaction ([[Compactor.compact]]).
+    */
+  def create(spark: SparkSession, storeDir: String, keys: Seq[String], orderCols: Seq[String],
+      batch: DataFrame, p: Int, out: String): Unit = {
+    val keyCols = keys.map(col)
+    val shaped = Compaction.lastWriteWins(batch, keys, orderCols)
+      .repartitionByRange(p, keyCols: _*)
+      .sortWithinPartitions(keyCols: _*)
+    write(spark, storeDir, keys, shaped.queryExecution.toRdd, shaped.schema, out)
+  }
+
+  /** Writes `rows`, whose partitions are key-sorted and range-disjoint in
+    * partition order with the keys leading `schema`, as the snapshot `out`:
+    * one parquet file per partition that holds a key (the first partition
+    * when none does) and the manifest of their sampled keys.
+    */
+  private def write(spark: SparkSession, storeDir: String, keys: Seq[String], rows: RDD[InternalRow],
+      schema: StructType, out: String): Unit = {
+    val keyRefs = keys.indices.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable))
     val sampled = spark.sparkContext.collectionAccumulator[(Int, Array[Array[Byte]])]
-    val merged = scan(spark, pieces.map(_.file), schema).zipPartitions(slices) { (stored, sorted) =>
-      val i = TaskContext.getPartitionId()
-      val inPiece =
-        if (!cut(i)) stored
-        else stored.dropWhile(r => i > 0 && keyOrd.lt(r, bounds(i - 1)))
-          .takeWhile(r => i == bounds.length || keyOrd.lt(r, bounds(i)))
-      sampleKeys(i, mergeSorted(inPiece, sorted, keyOrd, versionOrd), UnsafeProjection.create(keyRefs), sampled)
-    }
-    GraftRows.dataFrame(spark, merged, schema).write.option("maxRecordsPerFile", 0L).parquet(out)
-    // Spark writes no file for an empty partition but the first; every shard
-    // but the first of an empty store holds a key, so each shard has its file
-    val byShard = sampled.value.asScala.toMap
+    val shards = rows.mapPartitionsWithIndex((i, it) => sampleKeys(i, it, UnsafeProjection.create(keyRefs), sampled))
+    GraftRows.dataFrame(spark, shards, schema).write.option("maxRecordsPerFile", 0L).parquet(out)
+    // Spark writes no file for an empty partition but the first
+    val byPartition = sampled.value.asScala.toMap
+    val held = byPartition.keys.toSeq.sorted.map(byPartition(_).toSeq).filter(_.nonEmpty)
+    val kept = if (held.isEmpty) Seq(Nil) else held
     val files = dataFiles(SnapshotStore.local(out))
-    if (files.size != pieces.size)
-      throw new IllegalStateException(s"merge store $storeDir: the merge wrote ${files.size} data files " +
-        s"for ${pieces.size} shards")
-    Files.writeString(SnapshotStore.local(out).resolve(Manifest),
-      writeManifest(keys, pieces.indices.map(i => byShard(i).toSeq)))
+    if (files.size != kept.size)
+      throw new IllegalStateException(s"merge store $storeDir: the write left ${files.size} data files " +
+        s"for ${kept.size} shards")
+    Files.writeString(SnapshotStore.local(out).resolve(Manifest), writeManifest(keys, kept))
   }
 
   /** One shard's merge: its stored rows (key-sorted, one per key) and its
@@ -212,35 +236,6 @@ private[graft] object MergeStore {
     }
     new FileScanRDD(spark, read, partitions, schema, Nil, Map.empty,
       new FileSourceOptions(CaseInsensitiveMap(Map.empty[String, String])))
-  }
-
-  /** P − 1 bounds from a reservoir sample of the batch's keys: distinct
-    * sampled keys at even ranks, never the smallest, so every shard holds
-    * at least one key. Fewer distinct sampled keys than `p` give fewer
-    * shards.
-    */
-  private def sampleBounds(rows: RDD[InternalRow], keyRefs: Seq[BoundReference], p: Int,
-      keyOrd: Ordering[InternalRow]): Seq[InternalRow] = {
-    val n = SamplePerShard * p
-    val sample = rows.mapPartitionsWithIndex { (part, it) =>
-      val key = UnsafeProjection.create(keyRefs)
-      val rnd = new scala.util.Random(part)
-      val kept = ArrayBuffer.empty[InternalRow]
-      var seen = 0L
-      it.foreach { r =>
-        seen += 1
-        if (kept.size < n) kept += key(r).copy()
-        else {
-          val j = (rnd.nextDouble() * seen).toLong
-          if (j < n) kept(j.toInt) = key(r).copy()
-        }
-      }
-      kept.iterator
-    }.collect().sorted(keyOrd)
-    val distinct = sample.headOption.toSeq ++
-      sample.sliding(2).collect { case Array(a, b) if keyOrd.lt(a, b) => b }
-    val shards = math.min(p, distinct.size)
-    (1 until shards).map(i => distinct(i * distinct.size / shards))
   }
 
   /** The pieces of the next snapshot: a stored shard whose file is larger

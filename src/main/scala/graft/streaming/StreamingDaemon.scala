@@ -110,9 +110,10 @@ object StreamingDaemon {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
 
   /** One exactly-once MERGE application of micro-batch `batchId`: one Spark
-    * job that merges the batch into the snapshot LATEST names and writes
-    * the next, `snap-<batchId>`. Returns false when the batch was already
-    * applied (the replay fast-path).
+    * job (a few for a first batch of several shards) that merges the batch
+    * into the snapshot LATEST names and writes the next, `snap-<batchId>`.
+    * Returns false when the batch was already applied (the replay
+    * fast-path).
     *
     * The merge ([[MergeStore.merge]]): every snapshot is P key-sorted,
     * range-disjoint shard files plus a `_bounds` manifest of each shard's
@@ -123,12 +124,14 @@ object StreamingDaemon {
     * merge with last write wins by `orderCols` (a batch's older version
     * loses to the stored one, and duplicates inside the batch resolve the
     * same way) into one file per shard. The prior is never shuffled. The
-    * first batch chooses P (from its plan's size estimate) and, when
-    * P > 1, the bounds, sampled from its keys; after that, a shard whose
-    * file has outgrown `spark.sql.files.maxPartitionBytes` splits at its
-    * sampled keys in the same job, its file read once per piece. A LATEST
-    * snapshot without `_bounds` throws, naming the store, and is never
-    * merged as if sorted.
+    * first batch chooses P (from its plan's size estimate); when P > 1 it
+    * is a major compaction ([[MergeStore.create]]), whose bounds Spark's
+    * range partitioner samples from the batch's deduplicated keys. After
+    * that, a shard whose file has outgrown `spark.sql.files.maxPartitionBytes`
+    * splits at its sampled keys in the same job, its file read once per
+    * piece. LATEST may also name a directory [[Compactor.compact]]
+    * committed. A LATEST snapshot without `_bounds` throws, naming the
+    * store, and is never merged as if sorted.
     *
     * Exactly-once from an at-least-once engine, two layers:
     *  1. an applied-batch LEDGER — marker file per batchId, committed AFTER

@@ -92,6 +92,11 @@ class CompactionSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(dir.toString).orderBy("key").collect().toSeq == old.orderBy("key").collect().toSeq)
   }
 
+  test("compact() without an outDir throws: its output is always a committed snapshot") {
+    intercept[IllegalArgumentException](Compactor.compact(
+      versions(Seq((1L, "f", 10L, 1.0))), Seq("key"), Seq("ts"), numFiles = 1, outDir = None))
+  }
+
   test("planFileCount mirrors the documented size-threshold intent") {
     assert(Compactor.planFileCount(0L, 100L) == 1)
     assert(Compactor.planFileCount(1000L, 100L) == 10)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Compaction
+import graft.operators.{Compaction, Compactor}
+import graft.sources.SnapshotStore
 import graft.streaming.{MergeStore, StreamingDaemon}
 
 /** The merge store's one-job merge ([[MergeStore.merge]] behind
@@ -86,9 +87,11 @@ class MergeStoreSpec extends AnyFunSuite with SparkSpec {
   /** Random cases: a base batch, then batches with in-batch duplicates,
     * older versions of stored keys (LWW by order, not arrival), keys below
     * and above every stored key, and an empty one; half the cases add
-    * null key components.
+    * null key components. With `compacted` set, [[Compactor.compact]]
+    * commits the base batch into `numFiles` = `compacted` shards and LATEST
+    * is pointed at it, so the store merges into a compacted table.
     */
-  private def property(seed: Int, cases: Int): Seq[(Int, Int)] = {
+  private def property(seed: Int, cases: Int, compacted: Option[Int] = None): Seq[(Int, Int)] = {
     val rnd = new Random(seed)
     (0 until cases).map { c =>
       val nulls = c % 2 == 1
@@ -105,7 +108,12 @@ class MergeStoreSpec extends AnyFunSuite with SparkSpec {
       var reference = Seq.empty[Row]
       var (first, shards) = (0, 0)
       for ((rows, i) <- batches.zipWithIndex) {
-        assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, frame(rows), i.toLong))
+        compacted.filter(_ => i == 0) match {
+          case Some(n) =>
+            Compactor.compact(frame(rows), keys, ord, n, Some(s"$store/compacted"))
+            SnapshotStore.point(Paths.get(store, "LATEST"), "compacted")
+          case None => assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, frame(rows), i.toLong))
+        }
         applied ++= rows
         val latest = sorted(StreamingSpec.readMergeStore(spark, store, frame(Nil), keys))
         assert(latest == sorted(Compaction.lastWriteWinsWindow(frame(applied), keys, ord)), s"case $c batch $i")
@@ -138,6 +146,32 @@ class MergeStoreSpec extends AnyFunSuite with SparkSpec {
     val shards = withMaxPartitionBytes(2048)(property(seed = 12, cases = 4))
     info(s"P at the first and the last batch of each case: ${shards.mkString(", ")}")
     assert(shards.forall(_._1 > 1), shards)
+  }
+
+  test("property: a first snapshot Compactor.compact committed and LATEST names: its layout and _bounds, and the same answers after every upsert into it") {
+    val shards = property(seed = 15, cases = 4, compacted = Some(4))
+    info(s"P at the first and the last batch of each case: ${shards.mkString(", ")}")
+    assert(shards.forall(_._1 > 1), shards)
+  }
+
+  test("skewed versions: a first batch whose low keys carry most versions still gets shards of even key counts") {
+    // Bounds sampled from raw versions pick ten times as many low keys as
+    // high ones, so the high keys crowd into the last shard. A few very hot
+    // keys would not show it: each is one sampled key once deduplicated.
+    val store = tempDir("mergeskew").toString
+    val (hotKeys, hotVersions, coldKeys) = (1000, 10, 1000)
+    val ids = Iterator.from(1).map(_.toLong)
+    def at(user: Int) = Row(java.lang.Long.valueOf(user.toLong), "a", new java.sql.Timestamp(ids.next() * 1000L), ids.next(), 0.0)
+    val hot = for (user <- 0 until hotKeys; _ <- 0 until hotVersions) yield at(user)
+    val cold = (hotKeys until hotKeys + coldKeys).map(at)
+    val first = frame(hot ++ cold)
+    withMaxPartitionBytes(first.queryExecution.optimizedPlan.stats.sizeInBytes.toLong / 10)(
+      assert(StreamingDaemon.applyMergeBatch(spark, store, keys, ord, first, 0L)))
+    val p = checkLayout(store)
+    val perShard = shardKeys(store, keys, key)._2.map(_.size)
+    val mean = (hotKeys + coldKeys).toDouble / p
+    info(s"keys per shard: ${perShard.mkString(", ")}")
+    assert(p > 1 && perShard.max <= 2 * mean, s"keys per shard ${perShard.mkString(", ")}, mean $mean")
   }
 
   test("a shard that outgrows maxPartitionBytes splits at its sampled keys, in the upsert's one job") {
